@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: assert the physical-plan properties the engine's scale story
   * depends on (SURVEY §4). Prints PLAN OK/FAIL per check plus the formatted
-  * plans for eyeballing. `runMain graft.PlanCheck [sfDir]`. */
+  * plans for eyeballing, and exits 1 when any check FAILs so a script or CI
+  * step can gate on it. `runMain graft.PlanCheck [sfDir]`. */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -24,11 +25,18 @@ object PlanCheck {
       }
       spark.stop(); return
     }
+    // every pin reports through here; any FAIL makes the run exit non-zero
+    var failures = 0
+    def report(label: String, ok: Boolean, plan: => String): Unit = {
+      println(s"PLAN ${if (ok) "OK  " else "FAIL"} $label")
+      if (!ok) {
+        failures += 1
+        println(plan.linesIterator.take(40).mkString("\n"))
+      }
+    }
     def check(name: String, what: String)(p: String => Boolean): Unit = {
       val s = plan(name)
-      val ok = p(s)
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} $name: $what")
-      if (!ok) println(s.linesIterator.take(40).mkString("\n"))
+      report(s"$name: $what", p(s), s)
     }
 
     check("q01_scan_filter", "filter pushed to parquet scan")(
@@ -104,8 +112,7 @@ object PlanCheck {
         }
       }.flatten
       val ok = bad.isEmpty
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} q39_revenue_topk: lineitem is NEVER the broadcast build side")
-      if (!ok) println(plan39.toString.linesIterator.take(40).mkString("\n"))
+      report("q39_revenue_topk: lineitem is NEVER the broadcast build side", ok, plan39.toString)
     }
     check("q50_lateral", "lateral decorrelated: no per-row subquery, no cartesian")(p =>
       !p.contains("CartesianProduct"))
@@ -139,8 +146,7 @@ object PlanCheck {
         ext.Dedup.sketch(docs, "doc_id", "text"))
         .queryExecution.executedPlan.toString
       val ok = !s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin")
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} x2_minhash_neardup: LSH banding = equi-joins only, no crossJoin")
-      if (!ok) println(s.linesIterator.take(40).mkString("\n"))
+      report("x2_minhash_neardup: LSH banding = equi-joins only, no crossJoin", ok, s)
     }
 
     check("x36_line_dedup", "heavy-line probe broadcast; row-local rebuild (no text collect_list, no cartesian)")(p =>
@@ -176,9 +182,8 @@ object PlanCheck {
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       val ok = p.contains("ReusedExchange")
-      println(s"PLAN ${if (ok) "OK  " else "FAIL"} x43_ngram_lm: " +
-        "RUNTIME vocab scalar reuses the bigram-count exchange (ReusedExchange)")
-      if (!ok) println(p.linesIterator.take(40).mkString("\n"))
+      report("x43_ngram_lm: " +
+        "RUNTIME vocab scalar reuses the bigram-count exchange (ReusedExchange)", ok, p)
     }
     check("x44_jaro_winkler", "JW scoring through the native codegen expression (no UDF), no cartesian")(p =>
       p.contains("jaro_winkler_sim") && !p.contains("CartesianProduct") &&
@@ -265,9 +270,8 @@ object PlanCheck {
           .agg(count(lit(1)).as("c"), sum(col("l_quantity")).as("s"))
           .queryExecution.executedPlan.toString
         val ok1 = plain.contains(s"$root/mv") && !plain.contains("lineitem")
-        println(s"PLAN ${if (ok1) "OK  " else "FAIL"} x91_rollup_plain: " +
-          "aggregate scans the rollup, not the fact table")
-        if (!ok1) println(plain.linesIterator.take(40).mkString("\n"))
+        report("x91_rollup_plain: " +
+          "aggregate scans the rollup, not the fact table", ok1, plain)
         graft.etl.MaterializedRollup.createAndRegister(
           spark, "plancheck_mv2", s"$sfDir/orders.parquet", s"$root/mv2",
           keys = Seq("o_custkey"), measures = Seq("o_totalprice"),
@@ -281,9 +285,8 @@ object PlanCheck {
           .queryExecution.executedPlan.toString
         val ok2 = star.contains(s"$root/mv2") && !star.contains("orders") &&
           star.contains("customer")
-        println(s"PLAN ${if (ok2) "OK  " else "FAIL"} x91_rollup_star: " +
-          "join aggregate collapses the fact side, keeps the dim scan")
-        if (!ok2) println(star.linesIterator.take(40).mkString("\n"))
+        report("x91_rollup_star: " +
+          "join aggregate collapses the fact side, keeps the dim scan", ok2, star)
         // grouping-sets collapse: PreAggExpandRewrite turns the CUBE into
         // merge ∘ Expand ∘ partial-agg, whose inner aggregate this rule
         // reroutes — the fact scan must disappear under the Expand too
@@ -293,9 +296,8 @@ object PlanCheck {
           .queryExecution.executedPlan.toString
         val ok3 = cube.contains(s"$root/mv") && !cube.contains("lineitem") &&
           cube.contains("Expand")
-        println(s"PLAN ${if (ok3) "OK  " else "FAIL"} x91_rollup_cube: " +
-          "grouping-sets aggregate collapses to the rollup under Expand")
-        if (!ok3) println(cube.linesIterator.take(40).mkString("\n"))
+        report("x91_rollup_cube: " +
+          "grouping-sets aggregate collapses to the rollup under Expand", ok3, cube)
       } finally {
         graft.plans.RollupViewRewrite.unregister("plancheck_mv")
         graft.plans.RollupViewRewrite.unregister("plancheck_mv2")
@@ -324,9 +326,8 @@ object PlanCheck {
           .find(l => l.contains("lists") && l.contains("FileScan"))
           .getOrElse("")
         val ok = scanLine.contains("dynamicpruningexpression(list_id")
-        println(s"PLAN ${if (ok) "OK  " else "FAIL"} x94_ann_lists_dpp: " +
-          "lists scan partition-prunes on the probed list ids")
-        if (!ok) println(plan.linesIterator.take(40).mkString("\n"))
+        report("x94_ann_lists_dpp: " +
+          "lists scan partition-prunes on the probed list ids", ok, plan)
       } finally {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       }
@@ -356,9 +357,8 @@ object PlanCheck {
           .getOrElse("")
         val ok = scanLine.contains("PushedFilters: [") &&
           scanLine.contains("EqualTo(grp,7)")
-        println(s"PLAN ${if (ok) "OK  " else "FAIL"} x97_filtered_pushdown: " +
-          "attribute predicate pushed into the lists parquet scan")
-        if (!ok) println(plan.linesIterator.take(40).mkString("\n"))
+        report("x97_filtered_pushdown: " +
+          "attribute predicate pushed into the lists parquet scan", ok, plan)
       } finally {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       }
@@ -370,5 +370,9 @@ object PlanCheck {
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
+    if (failures > 0) {
+      System.err.println(s"PlanCheck: $failures plan pin(s) FAILED")
+      sys.exit(1)
+    }
   }
 }

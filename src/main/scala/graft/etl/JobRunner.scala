@@ -176,14 +176,10 @@ object JobRunner {
 
     // -- 6. Ledger (M3): listed vs processed set-diff + counters. Processed
     //    paths come from the main pass's observation (no second scan).
-    //    _metadata.file_path is the full URI (file:/…, s3a://bucket/…)
-    //    while the listing uses toUri.getPath (scheme+authority stripped) —
-    //    normalize: strip scheme://authority first, then bare scheme:
-    //    (local file: paths have no authority).
-    val processed: Set[String] = obs.get("paths") match {
-      case s: Seq[_] => s.map(p => stripScheme(p.toString)).toSet
-      case other => sys.error(s"unexpected observation payload: $other")
-    }
+    //    _metadata.file_path is the full, encoded URI (file:/…,
+    //    s3a://bucket/…) while the listing uses toUri.getPath (decoded,
+    //    scheme+authority stripped) — processedPath maps one onto the other.
+    val processed: Set[String] = observedPaths(obs)
     val missing = listedFiles.filterNot(processed.contains).sorted
 
     // -- 7. Schema enforcement report (S2): footer-only diff vs the
@@ -197,8 +193,8 @@ object JobRunner {
       listed = listedFiles.size,
       processed = listedFiles.size - missing.size,
       bypassed = bypassed,
-      inputRows = obs.get("rows").asInstanceOf[Long],
-      outputRows = outObs.get("rows").asInstanceOf[Long],
+      inputRows = observedRows(obs),
+      outputRows = observedRows(outObs),
       discrepancies = missing,
       schemaDrift = drift)
 
@@ -227,23 +223,32 @@ object JobRunner {
     finally out.close()
   }
 
-  /** Recursive .parquet listing of the given dirs (full URIs). */
+  /** Recursive .parquet listing of the given dirs (full URIs), without a
+    * per-file permission lookup (see [[graft.core.Listing]]). */
   private def listParquet(fs: FileSystem, dirs: Seq[String]): Seq[String] =
     dirs.flatMap { dir =>
-      val it = fs.listFiles(new Path(dir), true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) buf += f.getPath.toString
-      }
-      buf
+      graft.core.Listing.files(fs, new Path(dir), _.getName.endsWith(".parquet"))
+        .map(_.getPath.toString)
     }
 
-  /** _metadata.file_path renders full URIs while listings use
-    * toUri.getPath — normalize to the scheme-stripped form. */
-  private def stripScheme(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", "")
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:", "")
+  /** An observation whose plan ran no task (every input file unreadable)
+    * completes with no row at all: read that as zero rows, no paths. */
+  private def observedRows(obs: Observation): Long =
+    obs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+
+  private def observedPaths(obs: Observation): Set[String] =
+    obs.get.get("paths") match {
+      case Some(s: Seq[_]) => s.map(p => processedPath(p.toString)).toSet
+      case None => Set.empty
+      case Some(other) => sys.error(s"unexpected observation payload: $other")
+    }
+
+  /** `_metadata.file_path` is an ENCODED URI (`file:/a%20b/x.parquet`,
+    * `s3a://bucket/k`) while the listing's ledger form is the decoded,
+    * scheme-stripped path (`toUri.getPath`) — parse it as a URI so both
+    * sides agree, including on paths with spaces or other escaped chars. */
+  private def processedPath(p: String): String =
+    new Path(new java.net.URI(p)).toUri.getPath
 
   /** Union of every prior run's processed files for this job (any runId
     * under `outputRoot`). Scheme-stripped paths, matching the ledger's
@@ -333,10 +338,7 @@ object JobRunner {
       else writer0.option("partitionOverwriteMode", "dynamic")
     writer.partitionBy("upgrade", "state").parquet(dataOut)
 
-    val processed: Set[String] = obs.get("paths") match {
-      case s: Seq[_] => s.map(p => stripScheme(p.toString)).toSet
-      case other => sys.error(s"unexpected observation payload: $other")
-    }
+    val processed: Set[String] = observedPaths(obs)
     val missing = newFiles.filterNot(processed.contains).sorted
     val drift = spec.declaredSchema match {
       case Some(schema) => SchemaEnforce.detect(spark, newUris, schema)
@@ -348,8 +350,8 @@ object JobRunner {
       listed = newFiles.size,
       processed = newFiles.size - missing.size,
       bypassed = bypassed,
-      inputRows = obs.get("rows").asInstanceOf[Long],
-      outputRows = outObs.get("rows").asInstanceOf[Long],
+      inputRows = observedRows(obs),
+      outputRows = observedRows(outObs),
       discrepancies = missing,
       schemaDrift = drift))
   }

@@ -99,11 +99,16 @@ object SchemaEnforce {
     val drifts = spark.sparkContext.parallelize(files, slices).mapPartitions { paths =>
       import scala.jdk.CollectionConverters._
       val conf = confBc.value.value
+      // one options object per partition, from the job's conf: the
+      // options-less `open(in)` builds a fresh default Configuration per
+      // file, re-parsing Hadoop's XML resources — that parse, not the
+      // footer read, was nearly all of this pass's time
+      val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
       paths.flatMap { p =>
         try {
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
             .fromPath(new Path(p), conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
           val fields =
             try reader.getFileMetaData.getSchema.getFields.asScala.toList
             finally reader.close()

@@ -23,13 +23,8 @@ object Compact {
   def dirStats(spark: SparkSession, path: String): (Long, Long) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var files = 0L; var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_")) { files += 1; bytes += f.getLen }
-    }
-    (files, bytes)
+    val files = graft.core.Listing.files(fs, p, !_.getName.startsWith("_"))
+    (files.size.toLong, files.map(_.getLen).sum)
   }
 
   /** Rewrite `srcDir` (parquet) into `destDir` as ~`targetFileBytes` files.

@@ -250,40 +250,53 @@ class JobRunnerSpec extends SparkSpec {
   }
 
   test("drift sink: systemic many-file drift stays off the driver; detect is capped") {
-    // 40 files, EVERY one drifting (m missing, zz_extra added) — the
+    // 48 files, EVERY one drifting (m missing, zz_extra added) — the
     // systemic-drift shape where a driver collect would be file-count-sized
     val root = Files.createTempDirectory("graft_etl_driftsink").toString
     val src = s"$root/src"
-    (1 to 40).foreach { i =>
+    (1 to 48).foreach { i =>
       Seq((ts("2024-03-01 00:00:00"), i.toLong, s"x$i"))
         .toDF("timestamp", "bldg_id", "zz_extra")
         .write.mode("append").parquet(src)
     }
     val files = new java.io.File(src).listFiles()
       .map(_.getPath).filter(_.endsWith(".parquet")).toSeq
-    assert(files.size === 40)
+    assert(files.size === 48)
+    // plus one corrupt file: its footer read fails mid-slice, and the
+    // slice's other files must still be reported
+    val corrupt = s"$root/zz-corrupt.parquet"
+    Files.write(java.nio.file.Paths.get(corrupt), Array[Byte](1, 2, 3, 4, 5))
+    val all = files.take(24) ++ Seq(corrupt) ++ files.drop(24)
+    // detectDS cuts at most defaultParallelism * 4 slices; at 3+ files per
+    // slice, the corrupt file shares its slice (and one set of read
+    // options) with at least two drifted files
+    assert(all.size >= 3 * spark.sparkContext.defaultParallelism * 4)
     val declared = StructType(Seq(
       StructField("timestamp", TimestampType),
       StructField("bldg_id", LongType),
       StructField("m", DoubleType)))
 
     // sink face: a frame you aggregate/write, never collect
-    val report = SchemaEnforce.detectDF(spark, files, declared)
-    assert(report.count() === 40L)
+    val report = SchemaEnforce.detectDF(spark, all, declared)
+    assert(report.count() === 48L)
     val byMissing = report.selectExpr("explode(missing) AS miss")
       .groupBy($"miss").count().collect()
     assert(byMissing.map(r => (r.getString(0), r.getLong(1))).toSet
-      === Set(("m", 40L)))
+      === Set(("m", 48L)))
     report.write.parquet(s"$root/report")
-    assert(spark.read.parquet(s"$root/report").count() === 40L)
+    assert(spark.read.parquet(s"$root/report").count() === 48L)
+    // file for file: every drifted file reported as such, the corrupt one
+    // skipped
+    assert(SchemaEnforce.detectDS(spark, all, declared).collect().toSet ===
+      files.map(p => SchemaEnforce.Drift(p, Seq("m"), Seq("zz_extra"))).toSet)
 
     // ledger face: capped, lexicographically-first, top-k planned (no
     // full collect even under systemic drift)
-    val capped = SchemaEnforce.detect(spark, files, declared, maxReport = 7)
+    val capped = SchemaEnforce.detect(spark, all, declared, maxReport = 7)
     assert(capped.size === 7)
     assert(capped.map(_.path) === files.sorted.take(7))
     assert(capped.forall(d => d.missing === Seq("m") && d.extra === Seq("zz_extra")))
-    val plan = SchemaEnforce.detectDS(spark, files, declared)
+    val plan = SchemaEnforce.detectDS(spark, all, declared)
       .orderBy($"path").limit(7).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"))
   }
@@ -379,6 +392,99 @@ class JobRunnerSpec extends SparkSpec {
       objectStoreCommit = Some(true))
     assert(spark.read.parquet(resOs.dataOut)
       .select("upgrade").distinct().as[Int].collect().sorted === Array(1))
+  }
+
+  test("source root with a space: ledger and manifest compare decoded paths") {
+    // _metadata.file_path is URI-encoded (co%20x) while the listing is
+    // decoded (co x); the ledger must match them file for file
+    val root = Files.createTempDirectory("graft_etl_space").toString
+    val src = s"$root/co x/src"
+    val out = s"$root/out"
+    Seq((ts("2024-03-01 00:00:00"), 1L, 1.0, 0, "AK"),
+      (ts("2024-03-01 00:00:00"), 2L, 3.0, 0, "AK"))
+      .toDF("timestamp", "bldg_id", "m", "upgrade", "state")
+      .repartition(2, $"bldg_id")
+      .write.partitionBy("upgrade", "state").parquet(src)
+    Files.write(java.nio.file.Paths.get(s"$src/upgrade=0/state=AK/zz-corrupt.parquet"),
+      Array[Byte](1, 2, 3, 4, 5))
+
+    // declared schema: footer reads (SchemaEnforce) also open the
+    // space-containing paths, and no scan infers a schema from the
+    // corrupt file
+    val declared = StructType(Seq(
+      StructField("timestamp", TimestampType),
+      StructField("bldg_id", LongType),
+      StructField("m", DoubleType)))
+    val spec = JobSpec("rel", "2024", "AK", Seq(0), src, s"$root/nometa",
+      declaredSchema = Some(declared))
+    val res = JobRunner.run(spark, spec, out, "run1")
+    assert(res.ledger.schemaDrift.isEmpty)
+    assert(res.ledger.listed === 3)
+    assert(res.ledger.processed === res.ledger.listed - 1)
+    assert(res.ledger.discrepancies.size === 1 &&
+      res.ledger.discrepancies.head.endsWith("/co x/src/upgrade=0/state=AK/zz-corrupt.parquet"))
+    assert(spark.read.parquet(res.dataOut).count() === 2)
+
+    // the manifest holds the decoded paths of the two good files
+    val manifest = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      s"$out/run1/manifest/rel/2024/AK/processed.txt")), "UTF-8").linesIterator.toSeq
+    assert(manifest.size === 2)
+    assert(manifest.forall(p => p.startsWith(s"$src/") && !p.contains("%20")))
+    assert(JobRunner.processedSoFar(spark, out, spec) === manifest.toSet)
+
+    // an incremental re-run sees both good files as done: only the
+    // corrupt file (never processed, so never in a manifest) is new work,
+    // and once it is gone there is nothing new at all
+    val inc = JobRunner.runIncremental(spark, spec, out, "run2")
+    assert(inc.ledger.listed === 1 && inc.ledger.processed === 0)
+    assert(inc.ledger.discrepancies === res.ledger.discrepancies)
+    Files.delete(java.nio.file.Paths.get(s"$src/upgrade=0/state=AK/zz-corrupt.parquet"))
+    assert(JobRunner.runIncremental(spark, spec, out, "run3").ledger.listed === 0)
+  }
+
+  test("ledger listing: exactly the recursive .parquet set under each partition") {
+    val root = Files.createTempDirectory("graft_etl_listing").toString
+    val src = s"$root/src"
+    Seq((ts("2024-03-01 00:00:00"), 1L, 1.0, 0, "AK"),
+      (ts("2024-03-01 00:00:00"), 2L, 3.0, 0, "AK"))
+      .toDF("timestamp", "bldg_id", "m", "upgrade", "state")
+      .repartition(2, $"bldg_id")
+      .write.partitionBy("upgrade", "state").parquet(src)
+    val part = s"$src/upgrade=0/state=AK"
+    // a nested sub-directory of .parquet files (one level deeper still),
+    // a non-.parquet file and a _SUCCESS marker inside the partition
+    Seq((ts("2024-03-01 00:00:00"), 3L, 5.0)).toDF("timestamp", "bldg_id", "m")
+      .write.parquet(s"$part/_nested")
+    Seq((ts("2024-03-01 00:00:00"), 4L, 7.0)).toDF("timestamp", "bldg_id", "m")
+      .write.parquet(s"$part/_nested/deeper")
+    Files.write(java.nio.file.Paths.get(s"$part/notes.txt"), "not data".getBytes("UTF-8"))
+    Files.write(java.nio.file.Paths.get(s"$part/_SUCCESS"), Array.emptyByteArray)
+
+    val expected = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(part)).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+        .map(_.toString).toSet
+    }
+    assert(expected.size === 4 && expected.count(_.contains("/_nested/")) === 2)
+
+    // declared schema: the scan never infers one from a footer, so the
+    // unreadable notes.txt cannot be picked as the schema source
+    val declared = StructType(Seq(
+      StructField("timestamp", TimestampType),
+      StructField("bldg_id", LongType),
+      StructField("m", DoubleType)))
+    val spec = JobSpec("rel", "2024", "AK", Seq(0), src, s"$root/nometa",
+      declaredSchema = Some(declared))
+    val res = JobRunner.run(spark, spec, s"$root/out", "run1")
+    assert(res.ledger.listed === expected.size)
+    assert(res.ledger.schemaDrift.isEmpty)
+    // Spark's scan skips `_`-prefixed directories, so the nested files are
+    // listed but never processed — they surface as discrepancies
+    assert(res.ledger.discrepancies.toSet === expected.filter(_.contains("/_nested/")))
+    assert(res.ledger.processed === 2)
+    assert(JobRunner.processedSoFar(spark, s"$root/out", spec) ===
+      expected.filterNot(_.contains("/_nested/")))
   }
 
   test("corrupt file surfaces in the discrepancy ledger, job still succeeds") {
