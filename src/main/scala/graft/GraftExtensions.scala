@@ -19,7 +19,10 @@ import graft.functions.{CosineSimilarity, DotProduct, MinHashSignature, SimHash6
   * Also injects the engine's optimizer extensions, both conf-gated and
   * inert without their conf: [[graft.plans.RangeJoinRewrite]]
   * (`spark.graft.rangeJoin.binWidth`) and
-  * [[graft.plans.OverlapJoinRewrite]] (`spark.graft.overlapJoin.binWidth`).
+  * [[graft.plans.OverlapJoinRewrite]] (`spark.graft.overlapJoin.binWidth`),
+  * and the planner strategy for the ETL job's file-local hourly aggregate
+  * ([[graft.etl.FileLocalAggregate.Strategy]], which plans only its own
+  * node).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -96,5 +99,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.OverlapJoinRewrite)
     e.injectOptimizerRule(_ => graft.plans.PreAggExpandRewrite)
     e.injectOptimizerRule(_ => graft.plans.RollupViewRewrite)
+    e.injectPlannerStrategy(_ => graft.etl.FileLocalAggregate.Strategy)
   }
 }

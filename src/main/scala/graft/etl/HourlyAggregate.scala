@@ -13,9 +13,10 @@ import SchemaDefs.qcol
   *
   * Spark-first shape: one declarative groupBy over the whole dataset instead
   * of the reference's file-at-a-time Arrow kernel — partial (map-side)
-  * aggregation plus a single hash-shuffle on the group keys, which is the
-  * plan that survives 100 TB (the reference's per-file loop is the part that
-  * does not).
+  * aggregation plus a single hash-shuffle on the group keys, which is
+  * correct whatever the file layout. When parquet footers prove every group
+  * file-local, `JobRunner` plans [[FileLocalAggregate]] instead: the same
+  * result in one stage, without the shuffle.
   *
   * Grouping semantics (SURVEY §2.4 A2, §7.4(2)): the reference groups by
   * hour ONLY because each input file holds exactly one building

@@ -1,8 +1,9 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.ledger.Ledger
 
@@ -65,147 +66,214 @@ object JobRunner {
     *   `upload.py:16-25` keys every object under a fresh `<ts>/` root). */
   def run(spark: SparkSession, spec: JobSpec, outputRoot: String, runId: String,
       objectStoreCommit: Option[Boolean] = None): Result = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(spec.srcRoot).getFileSystem(conf)
-
     // -- 1. Partition-pruned input selection (S1/P1): only the requested
     //    upgrade=/state= dirs are ever listed, mirroring prefix construction
     //    in fetch.py:60-83.
-    val partDirs = spec.upgrades.map(u => s"${spec.srcRoot}/upgrade=$u/state=${spec.state}")
+    val partDirs = existingPartDirs(spark, spec)
+    // nothing listed for this job (reference: the ledger reports zeros and
+    // the run succeeds — README.md:345-361 counts start at listed=0)
+    if (partDirs.isEmpty) return emptyRun(spark, spec, outputRoot, runId)
+    // -- 2. Listing: every .parquet file under those dirs is what the
+    //    ledger accounts for (runIncremental drops what earlier runs
+    //    processed); steps 3-9 are `process`.
+    process(spark, spec, outputRoot, runId, objectStoreCommit,
+      scan = partDirs, files = listParquet(spark, spec, partDirs))
+  }
+
+  /** One source file as listed: the partition dir it was listed under, its
+    * FULL URI (scheme intact — anything that re-opens it, like the footer
+    * pass, must resolve it on the SOURCE filesystem) and its length. */
+  private final case class Listed(dir: String, uri: String, bytes: Long) {
+    /** The ledger's form: decoded, scheme-stripped (see [[processedPath]]). */
+    def path: String = new Path(uri).toUri.getPath
+  }
+
+  private def existingPartDirs(spark: SparkSession, spec: JobSpec): Seq[String] = {
+    val fs = new Path(spec.srcRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spec.upgrades.map(u => s"${spec.srcRoot}/upgrade=$u/state=${spec.state}")
       .filter(p => fs.exists(new Path(p)))
+  }
 
-    // Metadata bypass (S4) runs regardless of whether data partitions
-    // exist — the reference appends metadata keys to the partition list
-    // unconditionally (fetch.py:60-81), so a metadata-only job still
-    // copies. Output is per-job (same isolation argument as jobDir: the
-    // reference keys every copy by its full original source key, and two
-    // releases share state_label metadata FILENAMES).
-    val metadataOut = s"$outputRoot/$runId/metadata/${jobDir(spec)}"
-    def copyMetadata(): Long = {
-      val metaKeys = spec.upgrades.flatMap(u =>
-        PartitionPaths.metadataKeys(spec.metadataRoot, u, spec.state))
-      MetadataBypass.copyAll(conf, metaKeys, metadataOut)
-    }
+  private def dataOut(outputRoot: String, runId: String, spec: JobSpec): String =
+    s"$outputRoot/$runId/data/${jobDir(spec)}"
 
-    if (partDirs.isEmpty) {
-      // nothing listed for this job (reference: the ledger reports zeros and
-      // the run succeeds — README.md:345-361 counts start at listed=0)
-      val bypassed = copyMetadata()
-      return Result(
-        s"$outputRoot/$runId/data/${jobDir(spec)}", metadataOut,
-        graft.ledger.Ledger.Report(0, 0, bypassed, 0, 0, Nil))
-    }
+  private def metadataOut(outputRoot: String, runId: String, spec: JobSpec): String =
+    s"$outputRoot/$runId/metadata/${jobDir(spec)}"
 
-    // FULL URIs (scheme intact) — anything that re-opens these files (the
-    // footer-drift pass) must resolve them on the SOURCE filesystem, not
-    // the default one. The ledger compares in scheme-stripped form (see
-    // step 6) because _metadata.file_path and listings render schemes
-    // differently.
-    val listedUris: Seq[String] = listParquet(fs, partDirs)
-    val listedFiles: Seq[String] = listedUris.map(u => new Path(u).toUri.getPath)
+  /** Metadata bypass (S4): raw byte copy, never decoded
+    * (fetch.py:143-149,161-196). It runs whether or not data partitions
+    * exist — the reference appends metadata keys to the partition list
+    * unconditionally (fetch.py:60-81), so a metadata-only job still
+    * copies. Output is per-job (same isolation argument as jobDir: the
+    * reference keys every copy by its full original source key, and two
+    * releases share state_label metadata FILENAMES). */
+  private def copyMetadata(spark: SparkSession, spec: JobSpec, outputRoot: String,
+      runId: String): Long = {
+    val metaKeys = spec.upgrades.flatMap(u =>
+      PartitionPaths.metadataKeys(spec.metadataRoot, u, spec.state))
+    MetadataBypass.copyAll(spark.sparkContext.hadoopConfiguration, metaKeys,
+      metadataOut(outputRoot, runId, spec))
+  }
 
-    // -- 2. Scan (S2/S3). ignoreCorruptFiles reproduces the reference's
+  /** A run with no source file to read: the ledger reports zeros, the
+    * metadata bypass still copies, no manifest is written. */
+  private def emptyRun(spark: SparkSession, spec: JobSpec, outputRoot: String,
+      runId: String): Result =
+    Result(dataOut(outputRoot, runId, spec), metadataOut(outputRoot, runId, spec),
+      Ledger.Report(0, 0, copyMetadata(spark, spec, outputRoot, runId), 0, 0, Nil))
+
+  /** The pipeline [[run]] and [[runIncremental]] share: footer pass, scan,
+    * hourly aggregate, partitioned write, bypass, ledger and manifest.
+    * `scan` is what the reader opens (partition dirs, or single files);
+    * `files` is what the ledger accounts for. */
+  private def process(spark: SparkSession, spec: JobSpec, outputRoot: String, runId: String,
+      objectStoreCommit: Option[Boolean], scan: Seq[String], files: Seq[Listed]): Result = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ledgerFiles = files.map(_.path)
+    val out = dataOut(outputRoot, runId, spec)
+
+    // -- 3. Footer pass, before the scan: each listed footer opened once,
+    //    distributed. It yields the schema enforcement report (S2: a
+    //    footer-only diff vs the declared columns, empty when none is
+    //    declared), the read schema when none is declared, and the facts
+    //    that decide the plan in step 5.
+    val footers = SchemaEnforce.footers(spark, files.map(_.uri), spec.declaredSchema,
+      idCol = "bldg_id")
+
+    // -- 4. Scan (S2/S3). ignoreCorruptFiles reproduces the reference's
     //    per-file failure tolerance (a bad file is skipped, surfaces in the
     //    ledger, and never kills the job — README.md:337-361).
     //    With a declared schema (S2 enforcement) the scan reads THAT schema:
     //    files missing a declared column yield nulls, extra columns are
     //    ignored, and the output schema is pinned regardless of which
-    //    footer a crawler-style merge would have picked.
+    //    footer a crawler-style merge would have picked. Without one it
+    //    reads the first readable footer's schema; with no readable footer
+    //    there is nothing to read, and neither scan nor write runs.
     //    The observation carries BOTH the row count and the distinct set of
     //    contributing file paths (collect_set over _metadata.file_path), so
     //    the ledger needs no second scan of the input — one FileScan per
     //    job. Path count is file-count-bounded: the driver already holds
     //    the full listing, so the metric adds no new driver-memory class.
-    //    Observation name is unique per run: concurrent jobs in
+    //    Observation names are unique per run: concurrent jobs in
     //    runAllParallel each get their own listener match.
-    val obs = new Observation(s"etl_input_${java.util.UUID.randomUUID()}")
-    val reader0 = spark.read
-      .option("basePath", spec.srcRoot)
-      .option("ignoreCorruptFiles", "true")
-    val reader = spec.declaredSchema.fold(reader0)(reader0.schema)
-    val input: DataFrame = reader
-      .parquet(partDirs: _*)
-      .withColumn("__src_file", col("_metadata.file_path"))
-      .observe(obs,
-        count(lit(1)).as("rows"),
-        collect_set(col("__src_file")).as("paths"))
-      .drop("__src_file")
+    val (inputRows, outputRows, processed) =
+      spec.declaredSchema.orElse(footers.firstSchema) match {
+        case None => (0L, 0L, Set.empty[String])
+        case Some(schema) =>
+          val obs = new Observation(s"etl_input_${java.util.UUID.randomUUID()}")
+          val read = spark.read
+            .option("basePath", spec.srcRoot)
+            .option("ignoreCorruptFiles", "true")
+            .schema(schema)
+            .parquet(scan: _*)
+          val input = read
+            .withColumn("__src_file", col("_metadata.file_path"))
+            .observe(obs,
+              count(lit(1)).as("rows"),
+              collect_set(col("__src_file")).as("paths"))
 
-    // -- 3. Transform (A1/A2): group by (upgrade, state[, bldg_id], hour).
-    //    Measure columns are schema-on-read: every double column that isn't
-    //    a key (the reference hardcodes its 51-name list and fails per-file
-    //    when one is missing — transform.py:57-122; deriving from the schema
-    //    generalizes that contract without changing results on conforming
-    //    data, since the 51 are exactly the non-key doubles).
-    val keyCols = Set("timestamp", "bldg_id", "upgrade", "state")
-    val measures = input.schema.fields
-      .filter(f => f.dataType == org.apache.spark.sql.types.DoubleType &&
-        !keyCols.contains(f.name))
-      .map(_.name).toSeq
-    val aggregated = HourlyAggregate(
-      input,
-      measureCols = measures,
-      byId = spec.byId,
-      extraKeys = Seq("upgrade", "state"))
+          // -- 5. Transform (A1/A2): group by (upgrade, state[, bldg_id], hour).
+          //    Measure columns are schema-on-read: every double column that
+          //    isn't a key (the reference hardcodes its 51-name list and
+          //    fails per-file when one is missing — transform.py:57-122;
+          //    deriving from the schema generalizes that contract without
+          //    changing results on conforming data, since the 51 are exactly
+          //    the non-key doubles). When the footers prove every group
+          //    file-local, each scan task aggregates its own files
+          //    (FileLocalAggregate: one stage, no exchange); otherwise
+          //    HourlyAggregate's partial aggregate + hash shuffle.
+          val keyCols = Set("timestamp", "bldg_id", "upgrade", "state")
+          val measures = read.schema.fields
+            .filter(f => f.dataType == DoubleType && !keyCols.contains(f.name))
+            .map(_.name).toSeq
+          val aggregated =
+            if (spec.byId && fileLocal(spark, read, files, footers))
+              FileLocalAggregate(input, "__src_file", measureCols = measures,
+                extraKeys = Seq("upgrade", "state"))
+            else
+              HourlyAggregate(input.drop("__src_file"), measureCols = measures,
+                byId = spec.byId, extraKeys = Seq("upgrade", "state"))
 
-    // -- 4. Sink (S5): snappy parquet, hive layout preserved, run-stamped
-    //    root, one subdir per job (see jobDir: jobs in one runAll must not
-    //    clobber each other). On rename-capable filesystems,
-    //    partitionOverwriteMode=dynamic additionally confines an overwrite
-    //    to the upgrade=/state= partitions this job actually writes; on
-    //    object stores that option is withheld (committers there reject
-    //    it) and write-once-per-runId is the contract — see the scaladoc
-    //    on [[run]].
-    val objectStore = objectStoreCommit.getOrElse(isObjectStore(outputRoot, conf))
-    val dataOut = s"$outputRoot/$runId/data/${jobDir(spec)}"
-    val outObs = new Observation("etl_output")
-    val writer0 = aggregated
-      .observe(outObs, count(lit(1)).as("rows"))
-      .write.mode("overwrite")
-      .option("compression", "snappy")
-    val writer =
-      if (objectStore) writer0
-      else writer0.option("partitionOverwriteMode", "dynamic")
-    writer
-      .partitionBy("upgrade", "state")
-      .parquet(dataOut)
+          // -- 6. Sink (S5): snappy parquet, hive layout preserved,
+          //    run-stamped root, one subdir per job (see jobDir: jobs in one
+          //    runAll must not clobber each other). On rename-capable
+          //    filesystems, partitionOverwriteMode=dynamic additionally
+          //    confines an overwrite to the upgrade=/state= partitions this
+          //    job actually writes; on object stores that option is
+          //    withheld (committers there reject it) and
+          //    write-once-per-runId is the contract — see the scaladoc on
+          //    [[run]].
+          val objectStore = objectStoreCommit.getOrElse(isObjectStore(outputRoot, conf))
+          val outObs = new Observation(s"etl_output_${java.util.UUID.randomUUID()}")
+          val writer0 = aggregated
+            .observe(outObs, count(lit(1)).as("rows"))
+            .write.mode("overwrite")
+            .option("compression", "snappy")
+          val writer =
+            if (objectStore) writer0
+            else writer0.option("partitionOverwriteMode", "dynamic")
+          writer.partitionBy("upgrade", "state").parquet(out)
+          (observedRows(obs), observedRows(outObs), observedPaths(obs))
+      }
 
-    // -- 5. Metadata bypass (S4): raw byte copy, never decoded
-    //    (fetch.py:143-149,161-196).
-    val bypassed = copyMetadata()
+    // -- 7. Metadata bypass (S4), see copyMetadata.
+    val bypassed = copyMetadata(spark, spec, outputRoot, runId)
 
-    // -- 6. Ledger (M3): listed vs processed set-diff + counters. Processed
+    // -- 8. Ledger (M3): listed vs processed set-diff + counters. Processed
     //    paths come from the main pass's observation (no second scan).
     //    _metadata.file_path is the full, encoded URI (file:/…,
     //    s3a://bucket/…) while the listing uses toUri.getPath (decoded,
     //    scheme+authority stripped) — processedPath maps one onto the other.
-    val processed: Set[String] = observedPaths(obs)
-    val missing = listedFiles.filterNot(processed.contains).sorted
-
-    // -- 7. Schema enforcement report (S2): footer-only diff vs the
-    //    declared columns, distributed; empty when no schema is declared.
-    val drift = spec.declaredSchema match {
-      case Some(schema) => SchemaEnforce.detect(spark, listedUris, schema)
-      case None => Nil
-    }
-
+    val missing = ledgerFiles.filterNot(processed.contains).sorted
     val report = Ledger.Report(
-      listed = listedFiles.size,
-      processed = listedFiles.size - missing.size,
+      listed = ledgerFiles.size,
+      processed = ledgerFiles.size - missing.size,
       bypassed = bypassed,
-      inputRows = observedRows(obs),
-      outputRows = observedRows(outObs),
+      inputRows = inputRows,
+      outputRows = outputRows,
       discrepancies = missing,
-      schemaDrift = drift)
+      schemaDrift = footers.drift)
 
-    // -- 8. Manifest: the run's processed source files, persisted so later
+    // -- 9. Manifest: the run's processed source files, persisted so later
     //    runs can subtract them (the ledger driving SCHEDULING, not just
     //    reporting — see runIncremental). Driver-side write; file-count
     //    sized, same memory class as the listing itself.
     writeManifest(conf, manifestPath(outputRoot, runId, spec),
-      listedFiles.filterNot(missing.contains))
+      ledgerFiles.filterNot(missing.contains))
 
-    Result(dataOut, metadataOut, report)
+    Result(out, metadataOut(outputRoot, runId, spec), report)
+  }
+
+  /** True when the footers prove that no (upgrade, state, bldg_id, hour)
+    * group spans two scan splits, so each scan task may aggregate its own
+    * files to final groups:
+    *  - every file the scan opens went through the footer pass;
+    *  - every readable file with rows has `bldg_id` statistics with zero
+    *    nulls, and either one row group (each row group is read by exactly
+    *    one split) or a length no split size can cut — at most
+    *    `min(maxPartitionBytes, openCostInBytes)`, the floor of Spark's
+    *    split size;
+    *  - within each upgrade=/state= dir, different files' `[min, max]`
+    *    `bldg_id` ranges do not overlap (different dirs differ in
+    *    upgrade or state).
+    * Unreadable files contribute no rows: the scan skips them too. */
+  private def fileLocal(spark: SparkSession, read: DataFrame, files: Seq[Listed],
+      footers: SchemaEnforce.Footers): Boolean = {
+    val sqlConf = spark.sessionState.conf
+    val unsplittable = math.min(sqlConf.filesMaxPartitionBytes, sqlConf.filesOpenCostInBytes)
+    val checked = files.map(_.path).toSet
+    val withRows = files.zipWithIndex.flatMap { case (f, i) =>
+      footers.files.get(i).filter(_.rows > 0).map(f -> _)
+    }
+    FileLocalAggregate.supports(read, "timestamp", "bldg_id") &&
+      read.inputFiles.forall(u => checked.contains(processedPath(u))) &&
+      withRows.forall { case (f, ff) =>
+        ff.idRange.isDefined && (ff.rowGroups == 1 || f.bytes <= unsplittable)
+      } &&
+      withRows.groupBy(_._1.dir).values.forall { inDir =>
+        val ranges = inDir.map(_._2.idRange.get).sortBy(_._1)
+        ranges.zip(ranges.drop(1)).forall { case (a, b) => a._2 < b._1 }
+      }
   }
 
   private def manifestPath(outputRoot: String, runId: String, spec: JobSpec): Path =
@@ -225,11 +293,13 @@ object JobRunner {
 
   /** Recursive .parquet listing of the given dirs (full URIs), without a
     * per-file permission lookup (see [[graft.core.Listing]]). */
-  private def listParquet(fs: FileSystem, dirs: Seq[String]): Seq[String] =
+  private def listParquet(spark: SparkSession, spec: JobSpec, dirs: Seq[String]): Seq[Listed] = {
+    val fs = new Path(spec.srcRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
     dirs.flatMap { dir =>
       graft.core.Listing.files(fs, new Path(dir), _.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
+        .map(f => Listed(dir, f.getPath.toString, f.getLen))
     }
+  }
 
   /** An observation whose plan ran no task (every input file unreadable)
     * completes with no row at all: read that as zero rows, no paths. */
@@ -275,85 +345,30 @@ object JobRunner {
     * run dir. The incremental unit is the FILE — the reference's own unit
     * of work (its queues carry file keys; its ledger hashes file keys).
     *
-    * Correctness precondition, stated plainly: aggregation groups must not
-    * span files. The reference's layout guarantees it (one building's
-    * time series per file — `transform.py:59-61` — and hour groups are
-    * file-local), so new files are new groups and run outputs UNION
-    * cleanly. For inputs where a group straddles old and new files, a
-    * `_mean` of partial runs is NOT the global `_mean` — use a full
-    * [[run]] (or compact inputs per group first). This is the same
-    * contract every incremental-materialization system imposes; it is the
-    * reason `Report.inputRows` and the manifests exist.
+    * Correctness precondition: aggregation groups must not span an
+    * already-processed file and a new one. The reference's layout
+    * guarantees it (one building's time series per file —
+    * `transform.py:59-61` — and hour groups are file-local), so new files
+    * are new groups and run outputs UNION cleanly. Within the run it is
+    * checked, not assumed: the footer pass proves the new files' groups
+    * file-local before the one-stage plan is chosen, and otherwise the
+    * shuffle plan merges groups that span new files. A group that
+    * straddles old and new files is not visible to that check: its `_mean`
+    * over partial runs is NOT the global `_mean` — use a full [[run]] (or
+    * compact inputs per group first). This is the same contract every
+    * incremental-materialization system imposes; it is the reason
+    * `Report.inputRows` and the manifests exist.
     *
     * Metadata bypass re-copies unconditionally (byte copy, idempotent,
     * keyed by run — the reference re-copies per run too). */
   def runIncremental(spark: SparkSession, spec: JobSpec, outputRoot: String,
       runId: String, objectStoreCommit: Option[Boolean] = None): Result = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(spec.srcRoot).getFileSystem(conf)
-    val partDirs = spec.upgrades.map(u => s"${spec.srcRoot}/upgrade=$u/state=${spec.state}")
-      .filter(p => fs.exists(new Path(p)))
-    val listedUris: Seq[String] = listParquet(fs, partDirs)
     val prior = processedSoFar(spark, outputRoot, spec)
-    val newUris = listedUris.filterNot(u => prior.contains(new Path(u).toUri.getPath))
-    val metadataOut = s"$outputRoot/$runId/metadata/${jobDir(spec)}"
-    val bypassed = {
-      val metaKeys = spec.upgrades.flatMap(u =>
-        PartitionPaths.metadataKeys(spec.metadataRoot, u, spec.state))
-      MetadataBypass.copyAll(conf, metaKeys, metadataOut)
-    }
-    val dataOut = s"$outputRoot/$runId/data/${jobDir(spec)}"
-    if (newUris.isEmpty)
-      return Result(dataOut, metadataOut,
-        Ledger.Report(0, 0, bypassed, 0, 0, Nil))
-
-    val newFiles = newUris.map(u => new Path(u).toUri.getPath)
-    val obs = new Observation(s"etl_incr_${java.util.UUID.randomUUID()}")
-    val reader0 = spark.read
-      .option("basePath", spec.srcRoot)
-      .option("ignoreCorruptFiles", "true")
-    val reader = spec.declaredSchema.fold(reader0)(reader0.schema)
-    val input = reader.parquet(newUris: _*)
-      .withColumn("__src_file", col("_metadata.file_path"))
-      .observe(obs,
-        count(lit(1)).as("rows"),
-        collect_set(col("__src_file")).as("paths"))
-      .drop("__src_file")
-    val keyCols = Set("timestamp", "bldg_id", "upgrade", "state")
-    val measures = input.schema.fields
-      .filter(f => f.dataType == org.apache.spark.sql.types.DoubleType &&
-        !keyCols.contains(f.name))
-      .map(_.name).toSeq
-    val aggregated = HourlyAggregate(
-      input, measureCols = measures, byId = spec.byId,
-      extraKeys = Seq("upgrade", "state"))
-    val objectStore = objectStoreCommit.getOrElse(isObjectStore(outputRoot, conf))
-    val outObs = new Observation(s"etl_incr_out_${java.util.UUID.randomUUID()}")
-    val writer0 = aggregated
-      .observe(outObs, count(lit(1)).as("rows"))
-      .write.mode("overwrite")
-      .option("compression", "snappy")
-    val writer =
-      if (objectStore) writer0
-      else writer0.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("upgrade", "state").parquet(dataOut)
-
-    val processed: Set[String] = observedPaths(obs)
-    val missing = newFiles.filterNot(processed.contains).sorted
-    val drift = spec.declaredSchema match {
-      case Some(schema) => SchemaEnforce.detect(spark, newUris, schema)
-      case None => Nil
-    }
-    writeManifest(conf, manifestPath(outputRoot, runId, spec),
-      newFiles.filterNot(missing.contains))
-    Result(dataOut, metadataOut, Ledger.Report(
-      listed = newFiles.size,
-      processed = newFiles.size - missing.size,
-      bypassed = bypassed,
-      inputRows = observedRows(obs),
-      outputRows = observedRows(outObs),
-      discrepancies = missing,
-      schemaDrift = drift))
+    val fresh = listParquet(spark, spec, existingPartDirs(spark, spec))
+      .filterNot(f => prior.contains(f.path))
+    if (fresh.isEmpty) emptyRun(spark, spec, outputRoot, runId)
+    else process(spark, spec, outputRoot, runId, objectStoreCommit,
+      scan = fresh.map(_.uri), files = fresh)
   }
 
   /** Run every job in a config (reference `main.py:64-108` fan-out; jobs are

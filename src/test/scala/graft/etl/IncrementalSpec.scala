@@ -79,4 +79,27 @@ class IncrementalSpec extends SparkSpec {
     val processed = JobRunner.processedSoFar(spark, out, spec)
     assert(processed.size === 3)
   }
+
+  test("chained incremental outputs union to exactly one full run") {
+    val root = Files.createTempDirectory("graft_incr4").toString
+    val src = s"$root/src"
+    val out = s"$root/out"
+    val spec = JobSpec("rel", "2024", "AK", Seq(0, 1), src, s"$root/meta")
+    // two buildings per step, across both upgrades, one file each
+    val outputs = for ((bs, run) <- Seq((Seq(10L, 11L), "r1"), (Seq(20L, 21L), "r2"),
+        (Seq(30L, 31L), "r3"))) yield {
+      for (b <- bs) building(b, (b % 2).toInt)
+        .toDF("timestamp", "bldg_id", "m", "upgrade", "state")
+        .coalesce(1).write.partitionBy("upgrade", "state").mode("append").parquet(src)
+      val r = JobRunner.runIncremental(spark, spec, out, run)
+      assert(r.ledger.listed === 2 && r.ledger.processed === 2)
+      spark.read.parquet(r.dataOut)
+    }
+    val union = outputs.reduce(_ unionByName _)
+    val full = spark.read.parquet(JobRunner.run(spark, spec, out, "full").dataOut)
+    assert(full.count() === 6 * 2)
+    assert(union.count() === full.count())
+    assert(union.exceptAll(full).count() === 0)
+    assert(full.exceptAll(union).count() === 0)
+  }
 }
