@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: assert the physical-plan properties the engine's scale story
-  * depends on (SURVEY §4). Prints PLAN OK/FAIL per check plus the formatted
-  * plans for eyeballing, and exits 1 when any check FAILs so a script or CI
-  * step can gate on it. `runMain graft.PlanCheck [sfDir]`. */
+  * depends on (SURVEY §4). Prints PLAN OK/FAIL per check plus the head of
+  * the plan of each FAIL, and exits 1 when any check FAILs so a script or CI
+  * step can gate on it. `runMain graft.PlanCheck [sfDir]`; to read one
+  * query's plan, use `graft.tools.Profile --explain`. */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -16,15 +17,6 @@ object PlanCheck {
       df.queryExecution.executedPlan.toString
     }
 
-    // dump mode: `runMain graft.PlanCheck <sfDir> <query...>` prints the
-    // named queries' physical plans and exits (focused plan iteration)
-    if (args.length > 1) {
-      args.drop(1).foreach { n =>
-        println(s"\n===== $n =====")
-        println(plan(n))
-      }
-      spark.stop(); return
-    }
     // every pin reports through here; any FAIL makes the run exit non-zero
     var failures = 0
     def report(label: String, ok: Boolean, plan: => String): Unit = {

@@ -305,7 +305,7 @@ object AnnIndex {
     * depth via a per-row probe count. Replaces the round-13-verdict
     * doubling loop — log2(nLists) count-join rounds with a driver
     * collect each — measured 2× a full-depth pass at the 1000× set
-    * (`tools/FannProbe`); the counting side is now one partial-agg
+    * (SURVEY §6.14); the counting side is now one partial-agg
     * scan.
     *
     * Approximation contract (same as [[topK]]): with k eligible

@@ -105,7 +105,7 @@ object AudioDedup {
 
   /** Additive dead-zone on the normalized-energy gradient comparison
     * (a bit fires only when the rise exceeds the margin). The r10
-    * AudioProbe sweep measured dead-zones 0.002–0.04: none improved the
+    * sweep (SURVEY §6.9) measured dead-zones 0.002–0.04: none improved the
     * worst-case variant distance (13 bits at every setting) while all
     * ERODED the cross-clip separation floor (19 → 17 → 15 → 11 bits),
     * so the shipped setting is 0 — plain gradient signs, best

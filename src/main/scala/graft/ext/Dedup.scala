@@ -308,7 +308,7 @@ object Dedup {
     // the propagation loop re-reads the edge relation every round, so it
     // is cached here even when the regime probe was skipped
     val cachedPairs = if (probeCached) probed else edges.cache()
-    // Loop tuning (round 13, FlagshipProbe: CC was 30 of x0_linkage's
+    // Loop tuning (round 13, SURVEY §6.12: CC was 30 of x0_linkage's
     // 35 s at the 100× set, and nearly all of it was per-round Spark
     // constants, not data):
     //  - AQE off for the propagation loop: each round is a fixed
@@ -456,8 +456,8 @@ object Dedup {
     * localCheckpoint'ed every round so the plan stays constant-size (the
     * old growing lineage pinned the driver stringifying trees).
     *
-    * Round 13 (FlagshipProbe: CC was 30.4 s of x0_linkage's 35 s at the
-    * 100× set; Cc2Probe decomposition — the cost was per-round
+    * Round 13 (SURVEY §6.12–§6.13: CC was 30.4 s of x0_linkage's 35 s at
+    * the 100× set; decomposed per stage — the cost was per-round
     * sequential-stage latency, not data):
     *  - TWO pointer jumps per round: hop+jump reaches ~2d+2 where
     *    hop+jump² reaches ~4d+4 — 100-node chains converge in 4 rounds
@@ -469,7 +469,7 @@ object Dedup {
     *    |V|⋈|V| join.
     *  - SHUFFLE_HASH hints on every loop join: with AQE off (see
     *    caller) the planner defaults to SortMergeJoin, and ~6 sorts of
-    *    |V|-row tables per round dominated the round (Cc2Probe). The
+    *    |V|-row tables per round dominated the round (SURVEY §6.12). The
     *    loop's joins are long-key equi-joins whose per-partition builds
     *    are bounded by the caller's partition sizing, exactly SHJ's
     *    regime.
@@ -488,7 +488,7 @@ object Dedup {
     // The two |V|⋈|E| joins of each round (neighbor-min and hop) are then
     // exchange-FREE — EnsureRequirements sees both sides hash-clustered
     // on the join key — cutting the round's sequential stage chain from
-    // ~20 to ~8 (Cc2Probe; stage latency, not data volume, was the cost).
+    // ~20 to ~8 (SURVEY §6.12; stage latency, not data volume, was the cost).
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -530,7 +530,7 @@ object Dedup {
       // counts changed labels as the blocks are written, so the round is
       // ONE job — the old filter-limit-count over the checkpointed
       // blocks was a second job + scheduler barrier every round (round
-      // 15, Cc2Probe: 2 of the ~12 stages/round). re-pin hash(id, p)
+      // 15, SURVEY §6.15: 2 of the ~12 stages/round). re-pin hash(id, p)
       // before the checkpoint so next round's joins stay exchange-free
       // (the jumps leave the table keyed by `mid`); unpersist targets
       // the checkpointed frame itself — a projection on top would not

@@ -33,7 +33,8 @@ object Html {
     * Round 16: ONE codegen'd kernel ([[graft.functions.StripHtml]])
     * instead of the eleven-`regexp_replace` chain — the chain was the
     * dominant stage of the x0_web_pipeline flagship at the 1000× set
-    * (FlagshipProbe). Semantics are pass-for-pass identical;
+    * (OPTIMIZATION_r16.md, Inherited state item 2). Semantics are
+    * pass-for-pass identical;
     * [[stripTagsRegex]] keeps the reference chain for the equivalence
     * property spec and the DuckDB oracle face (which replays the regex
     * form). */

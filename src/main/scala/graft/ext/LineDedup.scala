@@ -52,6 +52,10 @@ object LineDedup {
     *                       across the corpus are removed
     * @return (idCol, textCol) with cleaned text, documents whose every
     *         line was boilerplate omitted
+    *
+    * Building the returned DataFrame launches a Spark job: the heavy-line
+    * set is counted and checkpointed here ([[DedupGate.sizeGated]]) to
+    * choose broadcast or shuffle, before any action on the result.
     */
   def dedupLines(docs: DataFrame, idCol: String, textCol: String,
       maxOccurrences: Long): DataFrame = {

@@ -61,12 +61,17 @@ object Quantiles {
     *   combined, so it stays metadata-sized while pass-2 savings scale
     *   with the corpus. The optimum moved UP from 14 once the prefilter
     *   became exact bucket MEMBERSHIP rather than a [min,max] span
-    *   (round 12, Q51Probe2 at the 100× set: a span straddling p25..p90
-    *   admitted most of the corpus into the broadcast probe — 6.2 s;
-    *   isin + 14 bits 4.4 s; isin + 18 bits 2.4 s).
+    *   (round 12 at the 100× set, SURVEY §6.10 q77 row: a span
+    *   straddling p25..p90 admitted most of the corpus into the
+    *   broadcast probe — 6.2 s; isin + 14 bits 4.4 s; isin + 18 bits
+    *   2.4 s).
     *   Near-unique continuous columns are what make pass 1 sensitive —
     *   integer-like columns occupy few buckets at any setting.
-    * @return one row per group: groupCol plus one double column per spec. */
+    * @return one row per group: groupCol plus one double column per spec.
+    *
+    * Building the returned DataFrame launches Spark jobs: pass 1 (the
+    * bucket histogram checkpoint and the collect of its needed spans)
+    * runs inside this call, before any action on the result. */
   def exactQuantiles(
       df: DataFrame, groupCol: String,
       specs: Seq[(String, Double, String)],
@@ -101,7 +106,8 @@ object Quantiles {
     // before its two pass-1 consumers — the rank-span branch and the
     // distinct-group branch of the union below. The r16 comment claimed
     // AQE stage reuse made the input "scanned exactly once here"; measured
-    // (R17Probe `q51` at the 10× set) pass 1 ran TWO full melt scans —
+    // (OPTIMIZATION_r17.md VERDICT item 5, 10× set;
+    // plans/r17/q51_percentiles_probe.txt) pass 1 ran TWO full melt scans —
     // column pruning drops `__bc` from the distinct-group branch's partial
     // aggregate and the rank branch's isnotnull(__b) pushes below the
     // exchange, either of which breaks plan canonicalization and with it
@@ -161,7 +167,7 @@ object Quantiles {
       org.apache.spark.sql.types.StructField("__n", org.apache.spark.sql.types.LongType)))
     import scala.jdk.CollectionConverters._
     val neededLocal = spark.createDataFrame(neededRows.toSeq.asJava, neededSchema)
-    // EXACT bucket membership, not a [min,max] span (round 12, Q51Probe2):
+    // EXACT bucket membership, not a [min,max] span (round 12, SURVEY §6.10):
     // the needed buckets are ≤ 2·|specs| discrete values per tag, but the
     // quantile points straddle the distribution (p25..p90), so a span
     // prefilter admits most of the corpus into the broadcast probe —

@@ -39,7 +39,7 @@ object Robust {
     * coarse-screen assumption). Both engines produce the same
     * interpolated-median semantics (pinned by q51's oracle).
     *
-    * Threshold calibration (tools/MadProbe at the 100× bench set, 10 M
+    * Threshold calibration (SURVEY §6.6, at the 100× bench set, 10 M
     * rows / 5 groups): buffered 2.2 s, selection 8.8 s (4.8 s with the
     * input persisted), percentile_approx 2.4 s — the selection path pays
     * its fixed multi-stage cost TWICE (median, then MAD over

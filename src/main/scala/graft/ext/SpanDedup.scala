@@ -55,6 +55,10 @@ object SpanDedup {
     * @param minCount occurrences (corpus-wide, within-doc repeats
     *                 included) above which a k-gram is "duplicated";
     *                 default 1 ⇒ any second occurrence triggers removal
+    *
+    * Building the returned DataFrame launches a Spark job: the duplicated
+    * k-gram set is counted and checkpointed here ([[DedupGate.sizeGated]])
+    * to choose broadcast or shuffle, before any action on the result.
     */
   def dedupSpans(docs: DataFrame, idCol: String, textCol: String,
       k: Int, minCount: Long = 1L): DataFrame = {
@@ -83,7 +87,7 @@ object SpanDedup {
     // Token-level semantics identical (token i removed iff a duplicated
     // k-gram starts in [i-k+1, i]): SpanDedupSpec pins the boundaries,
     // x37_span_dedup hash-pins the corpus face against DuckDB.
-    // Measured HONESTLY at the 10× set (R16Probe `span`): wall-time
+    // Measured HONESTLY at the 10× set (OPTIMIZATION_r16.md §4): wall-time
     // PARITY (~2.8–3.0 s both shapes) — at 25 MB of corpus text the gram
     // hashing dominates and the removed text shuffle is noise there. The
     // win is the at-scale contract: the old window exchange moved the
@@ -100,7 +104,8 @@ object SpanDedup {
     // so the induced equivalence classes are exactly the gram-string
     // classes the previous expression (and the DuckDB oracle) count —
     // the hash values themselves never leave the query. Measured
-    // (R17Probe `spanhash`, 10× set, order-controlled): count stage
+    // (OPTIMIZATION_r17.md, post-close addendum; 10× set,
+    // order-controlled): count stage
     // 1.07–1.15 s → 0.67 s at k=5 and k=8, same shuffle records.
     val gramArr = letCol(TextStats.tokens(col(textCol))) { toks =>
       when(size(toks) < k, array().cast("array<bigint>"))

@@ -33,7 +33,8 @@ object TextStats {
     * letCol-bound (r16): HOF lambdas re-evaluate every referenced
     * subtree per invocation, so an unbound `toks` re-ran the regex split
     * once per window position — O(tokens) tokenizations per row
-    * (measured 10× on the screens stage, R16Probe). */
+    * (measured 10× on the screens stage; OPTIMIZATION_r16.md, Screens
+    * probe). */
   def wordNgrams(text: Column, n: Int): Column = {
     require(n >= 1, "n-gram order must be >= 1")
     import graft.functions.ColumnOps.letCol

@@ -82,7 +82,8 @@ object Urls {
   /** The canonical URL per the contract above. Round 16: ONE
     * `java.net.URI` parse per row ([[graft.functions.CanonicalUrl]])
     * instead of the ~8 the `try_parse_url`-per-part composition paid —
-    * the all-rows URL-keying stage of x0_web_pipeline (FlagshipProbe).
+    * the all-rows URL-keying stage of x0_web_pipeline
+    * (OPTIMIZATION_r16.md, Inherited state item 2).
     * [[canonicalizeComposed]] keeps the builtin form as the executable
     * spec (property-tested equal, UrlsSpec). */
   def canonicalize(url: Column): Column =
@@ -120,7 +121,8 @@ object Urls {
     * ([[graft.functions.UrlRegisteredDomain]]). Use THIS when the input
     * is a URL: the Column composition expands the host expression ~25×,
     * which pushed whole-stage codegen past the JIT compile limit and ran
-    * the project interpreted (8× the stage cost, WebProbe r16).
+    * the project interpreted (8× the stage cost; OPTIMIZATION_r16.md,
+    * Inherited state item 2).
     * Property-pinned equal to `registeredDomain(host(url))` (UrlsSpec). */
   def registeredDomainOfUrl(url: Column): Column =
     org.apache.spark.sql.GraftBridge.column(

@@ -195,7 +195,7 @@ object VideoDedup {
 
   /** Near-dup pairs by signature Hamming distance: (media_a, media_b,
     * hamming), exact for the radius via pigeonhole banding. Default
-    * radius 8: the r10 probe (tools/VideoProbe, 30 seeds, 2-second
+    * radius 8: the r10 probe (SURVEY §6.9, 30 seeds, 2-second
     * clips) measured real variants — frame-rate-doubled ≤ 7, per-frame
     * JPEG re-encode ≤ 1, half-resolution re-render ≤ 5, gain 0.7 ≤ 1 —
     * while distinct seeds stay ≥ 10 apart (a single tail pair at 10;

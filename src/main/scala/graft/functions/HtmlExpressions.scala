@@ -12,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * collapse). Each regex pass re-materializes the full string and walks
   * it under the java.util.regex interpreter; at the 1000× set the strip
   * chain was the dominant stage of the x0_web_pipeline flagship
-  * (FlagshipProbe r16: extraction = ~86% of the row). This kernel keeps
+  * (round 16: extraction = ~86% of the row; OPTIMIZATION_r16.md,
+  * Inherited state item 2). This kernel keeps
   * the EXACT pass-by-pass semantics of the regex chain — same four block
   * passes in the same order, same sequential literal entity replaces,
   * same `\s+`-collapse-then-trim — but each pass is an indexOf-driven

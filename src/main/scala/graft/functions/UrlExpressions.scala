@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * protocol/authority/path/query + HOF filter/sort over the params)
   * costs ~8 independent `java.net.URI` parses per row — it was the
   * dominant ALL-ROWS stage of the restructured x0_web_pipeline
-  * (FlagshipProbe r16: url keys ≈ 40% of the row at the 1000× set).
+  * (round 16: url keys ≈ 40% of the row at the 1000× set;
+  * OPTIMIZATION_r16.md, Inherited state item 2).
   * Each kernel parses the URI ONCE and computes the same contract;
   * equivalence with the composition is property-pinned (UrlsSpec) and
   * the cross-engine x59 oracle stays on the same canonical form.
@@ -112,7 +113,8 @@ object UrlKernel {
     * inlining a url-derived host there blew the whole-stage-codegen
     * method past the JIT's compile limit and the project ran
     * INTERPRETED — measured 8 s vs 1 s for this stage at the 1000× set
-    * (WebProbe r16). Label arithmetic matches the Column contract:
+    * (OPTIMIZATION_r16.md, Inherited state item 2). Label arithmetic
+    * matches the Column contract:
     * last two labels, or last three when the trailing two are a listed
     * second-level suffix; hosts with ≤ 2 labels pass through. */
   def registeredDomainOfUrl(url: String): String = {

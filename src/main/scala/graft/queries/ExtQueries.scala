@@ -294,7 +294,7 @@ object ExtQueries {
     * SF-STABLE key slice (o_custkey < 300 — the same distinct-key SET at
     * every SF, and HLL depends only on the distinct hash set) at
     * rsd 0.005 sits in the estimator's exact regime on this fixed data
-    * (SketchProbe: 300 == 300; the hashes are deterministic, so it stays
+    * (SURVEY §6.11: 300 == 300; the hashes are deterministic, so it stays
     * there), letting DuckDB state the expected estimate as the exact
     * COUNT(DISTINCT). The default-rsd approximate contract stays covered
     * by the exact column carried alongside in history + the sketch
@@ -310,7 +310,7 @@ object ExtQueries {
     * over the SF-stable l_orderkey < 2000 slice (≤ 2700 rows/group at
     * any SF — ScaleUp shifts orderkeys, so scaled sets add no rows) the
     * GK rank error n/(2·accuracy) < 0.014 < 1/2, so the sketch returns
-    * the EXACT order statistic; SketchProbe confirms Spark's rank
+    * the EXACT order statistic; SURVEY §6.11 confirms Spark's rank
     * convention coincides with DuckDB's quantile_disc bit-for-bit on
     * all six (group, p) cells of this data. The loose-accuracy
     * approximate contract stays spec-covered; exact interpolated median
@@ -1208,7 +1208,8 @@ object ExtQueries {
     val spanClean = graft.ext.SpanDedup.dedupSpans(lineClean, "doc_id", "text", k = 8)
     // r16: filter directly instead of withColumn+filter — the pushed-down
     // filter predicate and the projected column each evaluated the full
-    // quality/rep2 trees (R16Probe: 2× the stage), and the columns were
+    // quality/rep2 trees (2× the stage; OPTIMIZATION_r16.md, Screens
+    // probe), and the columns were
     // dead weight downstream (nothing reads them; the checkpoint
     // materialized them anyway). Same survivors, same final hash.
     val screened = spanClean
@@ -1286,7 +1287,8 @@ object ExtQueries {
     * 4-component quality score, and the per-domain quality cap. */
   val x0_web_pipeline: Q = (s, d) => {
     val id = col("doc_id")
-    // Round 16 restructure (FlagshipProbe: extraction was ~86% of the
+    // Round 16 restructure (OPTIMIZATION_r16.md, Inherited state item 2:
+    // extraction was ~86% of the
     // row; the old shape stripped EVERY page then URL-dedup discarded
     // most of them). Production crawl order instead: canonical-URL
     // dedup FIRST \u2014 the canon depends only on the URL, never the body,
@@ -2813,7 +2815,8 @@ object ExtQueries {
     // r16: spread the synth+encode across the executor cores — the
     // filtered 450-id relation collapses to the scan's partitioning (ONE
     // task at sf0.1), so every PNG/WAV/GVID encode+decode ran serially
-    // on one core (R16Probe: video fingerprints 1.16 → 0.20 s after the
+    // on one core (OPTIMIZATION_r16.md, Flagships: video fingerprints
+    // 1.16 → 0.20 s after the
     // spread). Scale-adaptive: defaultParallelism, not a constant.
     // r17: materialize the 450-id spine ONCE — each modality's encode
     // dataset re-derived it, paying three documents scans + three
@@ -2869,7 +2872,8 @@ object ExtQueries {
     // execution per modality checkpointed
     // r16: materialize the three independent checkpoints CONCURRENTLY
     // (guide §2.6 — overlap independent jobs): the three eager builds ran
-    // strictly sequentially (~0.36+0.44+0.27 s at sf0.1, R16Probe) while
+    // strictly sequentially (~0.36+0.44+0.27 s at sf0.1; OPTIMIZATION_r16.md,
+    // Flagships) while
     // each leaves most cores idle in its tail. Same blocks, same rows —
     // only the job submission overlaps. FAIR scheduling is already on.
     val Seq(imgFp, audFp, vidFp) = {
@@ -2885,7 +2889,8 @@ object ExtQueries {
     }
     // r17 (guide §2.6 again, downstream this time): the post-checkpoint
     // report subtrees are ~10 tiny exchanges per modality over 450-row
-    // long relations — pure AQE job-floor cost (R17Probe `media`: 37
+    // long relations — pure AQE job-floor cost (OPTIMIZATION_r17.md
+    // VERDICT item 2: 37
     // jobs/688 tasks for the whole face, ~1.6 s of the 2.0 s residual
     // AFTER the concurrent fingerprint build). The three reports are
     // independent single-row relations; materializing them concurrently
@@ -3005,8 +3010,8 @@ object ExtQueries {
     * the shortlist ([[graft.ext.Pq.refineTopK]] — the production ADC+refine
     * pattern: at 100 TB the exact math touches shortlist/|corpus| of the
     * raw floats). Per-query recall@10 against the exact squared-L2 brute
-    * force is emitted and the mean is require-gated at the PqProbe-
-    * calibrated floor (measured 0.86–0.88 at both test SFs; raw-ADC recall
+    * force is emitted and the mean is require-gated at the calibrated
+    * floor (SURVEY §6.9: measured 0.86–0.88 at both test SFs; raw-ADC recall
     * 0.31–0.33 stays PqSpec-pinned). Exact-arithmetic correctness is the
     * x90_pq_exact oracle; IVF-PQ composition and model persistence are
     * PqSpec-pinned. */
@@ -3092,7 +3097,7 @@ object ExtQueries {
     * rollup key set; its partials are COUNT/SUM/MIN/MAX) — so a CUBE
     * over the base table reads |distinct keys| rollup rows instead of
     * the fact, with the Expand multiplying KB not TB
-    * (tools/ExpandProbe measured the discovery). The require() gate
+    * (the discovery is recorded in SURVEY §6.9). The require() gate
     * demands the rollup in the plan and the fact OUT; DuckDB answers
     * the same CUBE from the base. */
   val x91_mv_cube: Q = (s, d) => {

@@ -305,7 +305,7 @@ object Queries {
     * carry the same information (the X1 content-dedup rule). Collision
     * odds are n²/2⁶⁵ — ~10⁻¹⁰ at 100 M distinct docs — the standard trade
     * content-dedup already makes. Measured 0.90 → 0.53 s at the 100× set
-    * (KernelProbe, r15); DuckDB's oracle counts the raw text and values
+    * (r15, SURVEY §6.15); DuckDB's oracle counts the raw text and values
     * agree absent a collision. The `when(isNotNull, …)` guard preserves
     * SQL NULL semantics: Spark's xxhash64(NULL) returns the SEED (a
     * non-null constant), so without it a NULL text would count as one
@@ -782,7 +782,7 @@ object Queries {
   val q54_exists_subquery: Q = (s, d) => {
     t(s, d, "customer").createOrReplaceTempView("q54_customer")
     t(s, d, "orders").createOrReplaceTempView("q54_orders")
-    // SHUFFLE_HASH inside EACH subquery block (round 11, Q54Probe2: SMJ
+    // SHUFFLE_HASH inside EACH subquery block (round 11, SURVEY §6.11: SMJ
     // 2.3–3.5 s → SHJ 1.9–2.4 s at sf10): the planner's default
     // SortMergeJoin pays two full sorts of the 6M-row orders relation;
     // the semi/anti joins need no order and the per-partition hash
@@ -1312,7 +1312,7 @@ object Queries {
     // (scan + DISTINCT shuffle × depth) — the mistake a production
     // iterative job must not make; localCheckpoint pins it so each step
     // joins the frontier against an in-memory relation.
-    // Round-9 profile (Q80Probe at sf10): the cost was never the 254
+    // Round-9 profile (SURVEY §6.8, at sf10): the cost was never the 254
     // recursion rows — it was (a) the DISTINCT shuffle building the FULL
     // 2.1 M-edge relation and (b) 4 UnionLoop job floors. Two structural
     // cures, both semantics-preserving:

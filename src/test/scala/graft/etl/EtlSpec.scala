@@ -317,13 +317,13 @@ class JobRunnerSpec extends SparkSpec {
           e: Exception): Unit = ()
     }
     // drain any stray events from earlier actions in this shared session
-    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       JobRunner.run(spark, JobSpec("rel", "2024", "AK", Seq(0), src, s"$root/nometa"),
         s"$root/out", "run1")
       // listener bus is async — wait for the write's plan to land
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val counted = plans.asScala.map { case (f, p) =>
         // AQE's toString prints the Initial Plan below the Final Plan —

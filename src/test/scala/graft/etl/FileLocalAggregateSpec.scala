@@ -52,11 +52,11 @@ class FileLocalAggregateSpec extends SparkSpec {
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
-    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     plans.asScala.toSeq
   }

@@ -423,8 +423,8 @@ class AnnIndexSpec extends SparkSpec {
     val (rRef, rRaw) = (recall(hits(refined)), recall(raw))
     info(f"filtered recall@5: raw ADC $rRaw%.2f, refined $rRef%.2f")
     assert(rRef >= rRaw - 1e-9, "refine made filtered recall worse")
-    // floor pinned from the r15 FannProbe sweep at the largest DISTINCT
-    // corpus (sf0.1, 10% selectivity): recall@10 0.55/0.79/1.00 at
+    // floor pinned from the r15 recall sweep (SURVEY §6.15) at the
+    // largest DISTINCT corpus (sf0.1, 10% selectivity): recall@10 0.55/0.79/1.00 at
     // shortlist 50/100/200 of 200 eligible — shortlist/|eligible| is the
     // recall knob (widening targets shortlist, so nprobe0 was flat across
     // the sweep); here shortlist 30 of ~100 eligible measures 0.66

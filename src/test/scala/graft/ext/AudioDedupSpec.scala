@@ -9,8 +9,8 @@ import graft.ext.AudioDedup._
 /** X85 perceptual audio near-dup: signature invariance under REAL
   * resampling (the same continuous signal rendered at 8 kHz / 11.025 kHz
   * / 16 kHz) and gain change, seed separation, banding exactness, and
-  * the checksum-verified oracle face. Probe-calibrated margins (1-second
-  * tone-mixture corpus, 30 seeds, tools/AudioProbe): resampled variants
+  * the checksum-verified oracle face. Measured margins (1-second
+  * tone-mixture corpus, 30 seeds, SURVEY §6.9): resampled variants
   * ≤ 13 bits, gain-halved ≤ 1, inter-seed minimum 19 — the default
   * radius 14 sits inside the gap. */
 class AudioDedupSpec extends SparkSpec {

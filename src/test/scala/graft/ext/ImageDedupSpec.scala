@@ -8,8 +8,8 @@ import graft.ext.ImageDedup._
 
 /** X84 perceptual image near-dup: hash invariance under real re-encode /
   * resize (JRE codecs), seed separation, banding exactness, and the
-  * checksum-verified oracle face. Probe-calibrated margins (64×48 smooth
-  * corpus, 30 seeds): resize-to-24 Hamming ≤ 8, JPEG recompress ≤ 2,
+  * checksum-verified oracle face. Margins measured in round 9 (SURVEY
+  * §6.8; 64×48 smooth corpus, 30 seeds): resize-to-24 Hamming ≤ 8, JPEG recompress ≤ 2,
   * inter-seed minimum 19 — the default radius 8 sits in a 11-bit gap. */
 class ImageDedupSpec extends SparkSpec {
   import spark.implicits._

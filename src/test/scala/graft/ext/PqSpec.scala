@@ -46,7 +46,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("trained ADC recall@10 grows with codebook size; refine lifts it") {
-    // PqProbe-calibrated on the isotropic random embeddings (n=500):
+    // Calibrated on the isotropic random embeddings (n=500, SURVEY §6.9):
     // raw ADC k=4 0.23 / k=16 0.31; shortlist-100 refine 0.87 at k=16.
     val exact = Pq.exactTopK(emb, queries, k = 10)
       .select("query_id", "id").as[(Long, Long)].collect().toSet

@@ -9,8 +9,8 @@ import graft.ext.VideoDedup._
 /** X87 perceptual video near-dup: container round-trip, signature
   * invariance under REAL frame-rate doubling / per-frame JPEG re-encode /
   * half-resolution re-render / brightness gain, seed separation, banding
-  * exactness, and the checksum-verified oracle face. Probe-calibrated
-  * margins (2-second clips, 30 seeds, tools/VideoProbe): fps-doubled ≤ 7
+  * exactness, and the checksum-verified oracle face. Measured margins
+  * (2-second clips, 30 seeds, SURVEY §6.9): fps-doubled ≤ 7
   * bits, JPEG ≤ 1, half-res ≤ 5, gain ≤ 1; inter-seed minimum 10 — the
   * default radius 8 sits inside the gap. */
 class VideoDedupSpec extends SparkSpec {
