@@ -397,14 +397,14 @@ object JobRunner {
     * large first job would still starve the rest. Executors are shared;
     * output isolation comes from the per-job subdirs (see [[jobDir]]), so
     * concurrency needs no extra coordination. */
-  def runAllParallel(spark: SparkSession, cfg: EtlConfig, runId: String,
-      poolName: String = "graft-etl"): Seq[Result] = {
+  def runAllParallel(spark: SparkSession, cfg: EtlConfig,
+      runId: String): Seq[Result] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val futures = cfg.jobs.zipWithIndex.map { case (spec, i) =>
       Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"$poolName-$i")
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft-etl-$i")
         try run(spark, spec, cfg.outputRoot, runId, cfg.objectStoreCommit)
         finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
       }

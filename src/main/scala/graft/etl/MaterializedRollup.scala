@@ -68,6 +68,18 @@ object MaterializedRollup {
     p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
   }
 
+  /** Run `f` with the rewrite DISABLED for this session, restoring the
+    * previous setting after — so a refresh can never read a stale
+    * registered copy of the rollup it is rewriting. */
+  private def withoutRewrite(spark: SparkSession)(f: => Unit): Unit = {
+    val prev = spark.conf.getOption(RollupViewRewrite.EnabledKey)
+    spark.conf.set(RollupViewRewrite.EnabledKey, "false")
+    try f finally prev match {
+      case Some(p) => spark.conf.set(RollupViewRewrite.EnabledKey, p)
+      case None    => spark.conf.unset(RollupViewRewrite.EnabledKey)
+    }
+  }
+
   /** Build the rollup from the base at `basePath` (loaded through the
     * engine's table loader when `table` is given, else read directly),
     * write it to `mvPath`, and register it for rewriting. Building runs
@@ -84,15 +96,10 @@ object MaterializedRollup {
     require(canonical(spark, mvPath) != canonical(spark, basePath),
       s"rollup path $mvPath must differ from its base $basePath")
     RollupViewRewrite.unregister(name)
-    val prev = spark.conf.getOption(RollupViewRewrite.EnabledKey)
-    spark.conf.set(RollupViewRewrite.EnabledKey, "false")
-    try {
+    withoutRewrite(spark) {
       val src = base.getOrElse(spark.read.parquet(basePath))
       build(src, keys, measures)
         .write.mode("overwrite").parquet(mvPath)
-    } finally prev match {
-      case Some(p) => spark.conf.set(RollupViewRewrite.EnabledKey, p)
-      case None    => spark.conf.unset(RollupViewRewrite.EnabledKey)
     }
     register(spark, name, basePath, mvPath, keys, measures)
   }
@@ -119,9 +126,7 @@ object MaterializedRollup {
     }
     val keyCols = v.keys.map(col)
     val aggs = mergeAggs(v.measures)
-    val prev = spark.conf.getOption(RollupViewRewrite.EnabledKey)
-    spark.conf.set(RollupViewRewrite.EnabledKey, "false")
-    try {
+    withoutRewrite(spark) {
       val merged = spark.read.parquet(mvPath)
         .unionByName(build(delta, v.keys, v.measures))
         .groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
@@ -130,9 +135,6 @@ object MaterializedRollup {
       val tmp = mvPath + "__delta_tmp"
       merged.write.mode("overwrite").parquet(tmp)
       swapDir(fs, tmp, mvPath)
-    } finally prev match {
-      case Some(p) => spark.conf.set(RollupViewRewrite.EnabledKey, p)
-      case None    => spark.conf.unset(RollupViewRewrite.EnabledKey)
     }
     register(spark, name, v.basePath, mvPath, v.keys, v.measures)
   }

@@ -26,8 +26,8 @@ import graft.functions.VectorFunctions.{cosineSim, topCentroids}
   *    of the frozen models, so folding batches one at a time yields
   *    exactly the rows a one-shot assignment of the union would —
   *    [[IvfIndexSpec]] compares the multisets.
-  *  - REPLAY IDEMPOTENT: a batch writes its own `batch_id=<id>`
-  *    partitions with dynamic overwrite; re-folding (foreachBatch is
+  *  - REPLAY IDEMPOTENT: a batch's lists are stored through
+  *    [[graft.streaming.BatchStore.write]]; re-folding (foreachBatch is
   *    at-least-once) replaces them with identical content.
   *  - QUERY: [[topK]] probes the query's `nprobe` nearest lists via a
   *    partition-pruned scan of `lists/` — folded rows are immediately
@@ -179,25 +179,17 @@ object AnnIndex {
   }
 
   /** Fold one batch into the index: assign-only against the frozen
-    * models, one map-only pass over the BATCH. The batch's OWN partition
-    * subtree (`batch_id=<id>`) is dropped before the write — dynamic
-    * overwrite alone would only replace the leaf (batch, list) partitions
-    * the new content touches, leaving orphan lists behind on a
-    * superseding re-fold — so replays are idempotent and a corrected
-    * re-fold replaces the batch wholesale while every other batch's
-    * files stay untouched.
-    *
-    * Concurrency contract: folds of DIFFERENT batch ids may run
-    * concurrently — they own disjoint `batch_id=<id>` subtrees, so
-    * there is nothing to fence (unlike [[graft.streaming.StreamingUpsert]]'s
-    * whole-snapshot rewrite, which needs its CommitLog CAS). Two
-    * concurrent folds of the SAME batch id are caller error (the
-    * delete+write of one subtree is not atomic): the streaming face
-    * guarantees uniqueness via its checkpoint; batch callers must
-    * partition the id space per writer. */
+    * models, one map-only pass over the BATCH, stored under its own
+    * `(batch_id, list_id)` subtree by [[graft.streaming.BatchStore.write]]
+    * — so replays are idempotent, a corrected re-fold replaces the batch
+    * wholesale (no orphan lists), and folds of different batch ids may
+    * run concurrently (see BatchStore for the replay and concurrency
+    * contract; unlike [[graft.streaming.StreamingUpsert]]'s whole-snapshot
+    * rewrite, nothing needs a CommitLog CAS). The streaming face
+    * guarantees batch-id uniqueness via its checkpoint; batch callers
+    * must partition the id space per writer. */
   def fold(batch: DataFrame, index: Index, batchId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
     // the index's attribute manifest is the lists schema contract: a
     // batch missing a declared attribute column must fail HERE, not as
     // NULL-evaluated predicates at the first filtered search
@@ -205,9 +197,6 @@ object AnnIndex {
     require(missing.isEmpty,
       s"fold: batch is missing index attribute column(s) ${missing.mkString(", ")} " +
         s"declared at index creation (attrCols=${index.attrCols.mkString(", ")})")
-    val sub = new org.apache.hadoop.fs.Path(
-      s"${index.listsDir}/batch_id=$batchId")
-    sub.getFileSystem(spark.sessionState.newHadoopConf()).delete(sub, true)
     val assigned = Ivf.assign(batch, index.coarse, vecCol)
     val attrs = index.attrCols.map(c => col(s"`$c`"))
     val rows = index.pq match {
@@ -216,10 +205,7 @@ object AnnIndex {
       case None => assigned.select(col(idCol).as("id") +: col("list_id") +:
         col(vecCol).as("vector") +: attrs: _*)
     }
-    rows.withColumn("batch_id", lit(batchId))
-      .write.mode("append")
-      .partitionBy("batch_id", "list_id")
-      .parquet(index.listsDir)
+    graft.streaming.BatchStore.write(rows, index.listsDir, batchId, "list_id")
   }
 
   /** The persisted inverted lists (id, list_id, codes|vector, batch_id). */
@@ -471,9 +457,8 @@ object AnnIndex {
     // INT — normalize to the long the fold wrote
     val rows = lists(cur).withColumn("batch_id", col("batch_id").cast("long"))
     // newest STREAM batch (ids >= 0) stays replayable under its own id
-    val newest = rows.agg(max(when(col("batch_id") >= 0, col("batch_id"))))
-      .collect().head
-    val keepId = if (newest.isNullAt(0)) None else Some(newest.getLong(0))
+    val keepId = graft.streaming.BatchStore.ids(spark, cur.listsDir, "batch_id")
+      .filter(_ >= 0).maxOption
     val compacted = keepId match {
       case Some(b) => rows.withColumn("batch_id",
         when(col("batch_id") === b, col("batch_id")).otherwise(lit(-1L)))

@@ -11,13 +11,12 @@ import graft.ext.AnnIndex
   * searchable, micro-batch by micro-batch — assign-only against the
   * FROZEN models, history never re-read, never re-encoded.
   *
-  * Durability/replay contract: `foreachBatch` is AT-LEAST-ONCE and
-  * [[AnnIndex.fold]] is idempotent per batchId BY CONSTRUCTION (it drops
-  * its own `batch_id=<id>` subtree before writing), so a replayed batch
-  * reproduces identical index content and a corrected replay supersedes
-  * the old rows wholesale while every other batch's files stay
-  * untouched. The spec replays a batch through [[processBatch]] to pin
-  * it and runs a MemoryStream end to end.
+  * Durability/replay contract: [[BatchStore]]'s — [[AnnIndex.fold]]
+  * stores each batch's lists through [[BatchStore.write]], so a
+  * replayed batch reproduces identical index content and a corrected
+  * replay supersedes the old rows wholesale. The spec replays a batch
+  * through [[processBatch]] to pin it and runs a MemoryStream end to
+  * end.
   *
   * Model staleness under a drifting stream is the caller's loop: run
   * [[AnnIndex.retrainGate]] on a sampled window and rebuild with

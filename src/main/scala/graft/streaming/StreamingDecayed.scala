@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,14 +22,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * pins this by racing part-files through the file source in
   * uncontrolled order.
   *
-  * Durability/replay contract: `foreachBatch` is AT-LEAST-ONCE. The
-  * state is written as one immutable snapshot per batchId
+  * Durability/replay contract: [[BatchStore]]'s versioned snapshots.
+  * The state is written as one immutable snapshot per batchId
   * (`v=<batchId>/` directories); a fold always reads its PREDECESSOR —
-  * the newest snapshot with version < current batchId — so a replayed
-  * batch re-reads the same predecessor and overwrites its own snapshot
-  * with bit-identical content (the versioned-snapshot idempotence
-  * pattern, same family as [[StreamingUpsert]]'s pointer swap).
-  * [[readState]] serves the newest committed snapshot. */
+  * [[BatchStore.latestCommitted]] below the current batchId — so a
+  * replayed batch re-reads the same predecessor and overwrites its own
+  * snapshot with bit-identical content. [[readState]] serves the newest
+  * committed snapshot. */
 object StreamingDecayed {
 
   /** One micro-batch: predecessor state + batch → snapshot `v=batchId`. */
@@ -43,7 +40,7 @@ object StreamingDecayed {
     val refUs = unix_micros(lit(
       batch.agg(max(col(s"`$tsCol`"))).head().getTimestamp(0)))
       .cast("double")
-    val folded = stateVersionBefore(spark, stateDir, batchId) match {
+    val folded = BatchStore.latestCommitted(spark, stateDir, batchId) match {
       case Some(prev) =>
         graft.etl.DecayedCounter.updateAt(
           prev, batch, keys, tsCol, valueCol, refUs, halfLifeSec)
@@ -68,19 +65,5 @@ object StreamingDecayed {
 
   /** Newest committed state snapshot; None before the first fold. */
   def readState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    stateVersionBefore(spark, stateDir, Long.MaxValue)
-
-  /** Newest COMMITTED snapshot below `beforeId`. A crash mid-write leaves
-    * a partial `v=N` directory; only directories carrying the committer's
-    * `_SUCCESS` marker count as committed, so a replay after such a crash
-    * falls back to the predecessor instead of reading partial state. */
-  private def stateVersionBefore(spark: SparkSession, stateDir: String,
-      beforeId: Long): Option[DataFrame] =
-    Option(new File(stateDir).list()).toSeq.flatten
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-      .filter(v => v < beforeId &&
-        new File(stateDir, s"v=$v/_SUCCESS").exists())
-      .sorted.lastOption
-      .map(v => spark.read.parquet(s"$stateDir/v=$v"))
+    BatchStore.latestCommitted(spark, stateDir, Long.MaxValue)
 }

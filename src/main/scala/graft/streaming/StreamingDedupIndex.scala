@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming face of X38's incremental EXACT dedup
   * ([[graft.ext.IncrementalDedup]]): a continuously-ingesting corpus where
@@ -10,43 +11,37 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * arrived before it, then appended — history never rescanned, index 8
   * bytes per historical document.
   *
-  * Durability/replay contract: `foreachBatch` is AT-LEAST-ONCE — after a
-  * failure the same batchId can run again. Both sinks therefore write
-  * `batch_id`-partitioned output with dynamic partition overwrite, so a
-  * replay REPLACES its own partition instead of appending duplicates
-  * (idempotent per batchId, the standard exactly-once-by-overwrite
-  * pattern). The spec drives [[processBatch]] directly and replays a
-  * batch to pin this.
+  * Durability/replay contract: [[BatchStore]]'s. Both sinks (the clean
+  * output and the index) are stored per batch through
+  * [[BatchStore.write]], and the index is read with only the batchIds
+  * BELOW the current one — on replay it already holds the batch's own
+  * hashes (and, for an older batch, later ones), which would otherwise
+  * anti-join away rows the first attempt kept. The spec drives
+  * [[processBatch]] directly and replays a batch to pin this.
   *
   * Within-batch and cross-batch semantics are exactly
   * [[graft.ext.IncrementalDedup.addBatchExact]]'s: lowest id per text
-  * wins its batch, anything seen in an EARLIER batch is dropped. On
-  * replay the index already contains the batch's own hashes from the
-  * first attempt — read unfiltered they would anti-join away the whole
-  * batch and overwrite its output partition with nothing. The index is
-  * therefore always read with the current batchId's partition EXCLUDED,
-  * making a replay bit-identical to the first run. */
+  * wins its batch, anything seen in an EARLIER batch is dropped. */
 object StreamingDedupIndex {
 
-  /** One micro-batch: dedup against the accumulated index (excluding this
-    * batchId's own partition, for replay safety), then overwrite this
-    * batchId's partitions of both the clean output and the index. */
+  /** The index's schema: one row per distinct text hash per batch. */
+  private val IndexSchema: StructType = StructType(Seq(
+    StructField("key_hash", LongType), StructField("batch_id", LongType)))
+
+  /** One micro-batch: dedup against the index of the batches before it
+    * (for replay safety), then replace this batchId's rows of both the
+    * clean output and the index. */
   def processBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, indexDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
-    val index = readIndex(spark, indexDir)
-      .filter(col("batch_id") =!= batchId)
+    val index = BatchStore.read(batch.sparkSession, indexDir, IndexSchema)
+      .filter(col("batch_id") < batchId)
       .select("key_hash")
     val (clean, _) = graft.ext.IncrementalDedup.addBatchExact(
       index, batch, idCol, textCol)
-
-    withDynamicOverwrite(spark) {
-      clean.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(outDir)
-      batch.select(xxhash64(col(textCol)).as("key_hash")).distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(indexDir)
-    }
+    BatchStore.write(clean, outDir, batchId)
+    BatchStore.write(
+      batch.select(xxhash64(col(textCol)).as("key_hash")).distinct(),
+      indexDir, batchId)
   }
 
   /** Start the stream: every micro-batch through [[processBatch]]. */
@@ -59,25 +54,4 @@ object StreamingDedupIndex {
       }
       .start()
 
-  /** The accumulated (key_hash, batch_id) index; empty frame before the
-    * first batch commits. */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    // existence alone is not enough: a pre-created-but-never-written dir
-    // has no footers to infer a schema from
-    if (Option(new java.io.File(indexDir).list()).exists(_.nonEmpty))
-      spark.read.parquet(indexDir)
-    else {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("key_hash", LongType),
-          StructField("batch_id", LongType))))
-    }
-
-  private def withDynamicOverwrite[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
 }

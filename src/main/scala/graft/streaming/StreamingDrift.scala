@@ -18,11 +18,11 @@ import graft.ext.Drift
   * per (window_start, bin), binned with EXACTLY [[Drift.binOf]] so the
   * maintained histogram can never desynchronize from the batch
   * statistic. Maintenance delegates to [[StreamingRollup.processBatch]]
-  * with keys = (win, bin) and no measures — the same batch-id-partitioned
-  * partials, dynamic-overwrite replay idempotence, compaction, and
-  * atomic swap, applied to histograms (counts are the rollup algebra's
-  * cnt column). A replayed batch therefore reproduces identical
-  * histograms, and per-batch cost stays O(compactEvery) partitions.
+  * with keys = (win, bin) and no measures — the same per-batch partials
+  * (replay contract: [[BatchStore]]'s), compaction, and atomic swap,
+  * applied to histograms (counts are the rollup algebra's cnt column).
+  * A replayed batch therefore reproduces identical histograms, and
+  * per-batch cost stays O(compactEvery) partitions.
   *
   * [[report]] replicates [[Drift.psiDetail]]'s arithmetic term for term
   * (epsilon smoothing, window-partitioned normalization, (p−q)·ln(p/q),

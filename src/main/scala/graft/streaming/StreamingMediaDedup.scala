@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming face of X88's incremental PERCEPTUAL media dedup
   * ([[graft.ext.IncrementalDedup.addBatchHamming]]): a continuously-
@@ -12,15 +13,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * arrived before it, then appended. History is never re-decoded or
   * rescanned; the index is 16 bytes per historical item.
   *
-  * Durability/replay contract — shared verbatim with
-  * [[StreamingDedupIndex]]: `foreachBatch` is AT-LEAST-ONCE, so both
-  * sinks write `batch_id`-partitioned output with dynamic partition
-  * overwrite (a replay REPLACES its own partition), and the index is
-  * always read with the current batchId's partition EXCLUDED — on
-  * replay the index already holds this batch's own signatures from the
-  * first attempt, which would otherwise match the whole batch away and
-  * overwrite its output with nothing. The spec drives [[processBatch]]
-  * directly and replays a batch to pin bit-identity.
+  * Durability/replay contract: [[BatchStore]]'s. Both sinks are stored
+  * per batch through [[BatchStore.write]], and the index is read with
+  * only the batchIds BELOW the current one — on replay it already holds
+  * this batch's own signatures (and, for an older batch, later ones),
+  * which would otherwise match away rows the first attempt kept. The
+  * spec drives [[processBatch]] directly and replays a batch to pin
+  * bit-identity.
   *
   * Dedup semantics are exactly [[graft.ext.IncrementalDedup
   * .addBatchHamming]]'s prefix-causal contract: greedy min-id within
@@ -30,28 +29,28 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * but never indexed. */
 object StreamingMediaDedup {
 
+  /** The index's schema: one row per non-NULL signature per batch. */
+  private val IndexSchema: StructType = StructType(
+    Seq("media_id", "sig", "verify", "batch_id")
+      .map(StructField(_, LongType)))
+
   /** One micro-batch of fingerprints through incremental perceptual
-    * dedup: returns nothing, writes the surviving rows to `outDir` and
-    * this batch's signatures to `indexDir`, both under `batch_id=<id>`. */
+    * dedup: returns nothing, replaces this batch's surviving rows in
+    * `outDir` and its signatures in `indexDir`. */
   def processBatch(batch: DataFrame, batchId: Long, maxHamming: Int,
       indexDir: String, outDir: String,
       requireVerifyMatch: Boolean = false,
       maxChunkFreq: Option[Int] = None): Unit = {
-    val spark = batch.sparkSession
-    val index = readIndex(spark, indexDir)
-      .filter(col("batch_id") =!= batchId)
+    val index = BatchStore.read(batch.sparkSession, indexDir, IndexSchema)
+      .filter(col("batch_id") < batchId)
       .select("media_id", "sig", "verify")
     val (clean, _) = graft.ext.IncrementalDedup.addBatchHamming(
       index, batch, maxHamming, requireVerifyMatch, maxChunkFreq)
-
-    withDynamicOverwrite(spark) {
-      clean.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(outDir)
+    BatchStore.write(clean, outDir, batchId)
+    BatchStore.write(
       batch.select(col("media_id"), col("sig"), col("verify"))
-        .filter(col("sig").isNotNull)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(indexDir)
-    }
+        .filter(col("sig").isNotNull),
+      indexDir, batchId)
   }
 
   /** Start the stream: every micro-batch of fingerprint rows
@@ -68,24 +67,4 @@ object StreamingMediaDedup {
       }
       .start()
 
-  /** The accumulated (media_id, sig, verify, batch_id) index; empty
-    * frame before the first batch commits. */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    if (Option(new java.io.File(indexDir).list()).exists(_.nonEmpty))
-      spark.read.parquet(indexDir)
-    else {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("media_id", LongType),
-          StructField("sig", LongType), StructField("verify", LongType),
-          StructField("batch_id", LongType))))
-    }
-
-  private def withDynamicOverwrite[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
 }

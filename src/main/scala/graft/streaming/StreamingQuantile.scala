@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,8 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * micro-batch boundaries are IRRELEVANT to the final state (the
   * strongest replay story possible — any prefix of committed snapshots
   * is a correct state for the rows it has seen). Snapshots are versioned
-  * per batchId and a fold reads its predecessor, so at-least-once
-  * replays rewrite their own snapshot bit-identically (same pattern as
+  * per batchId and a fold reads its predecessor
+  * ([[BatchStore.latestCommitted]]), so at-least-once replays rewrite
+  * their own snapshot bit-identically (same pattern as
   * [[StreamingDecayed]]).
   */
 object StreamingQuantile {
@@ -29,7 +28,7 @@ object StreamingQuantile {
       stateDir: String): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val folded = stateVersionBefore(spark, stateDir, batchId) match {
+    val folded = BatchStore.latestCommitted(spark, stateDir, batchId) match {
       case Some(prev) => graft.etl.IncrementalQuantile.update(
         prev, batch, keys, valueCol, idCol, k, seed)
       case None => graft.etl.IncrementalQuantile.sample(
@@ -52,19 +51,5 @@ object StreamingQuantile {
   /** Newest committed sample state; None before the first fold. Feed to
     * [[graft.etl.IncrementalQuantile.estimate]] for the percentiles. */
   def readState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    stateVersionBefore(spark, stateDir, Long.MaxValue)
-
-  /** Newest COMMITTED snapshot below `beforeId`: only `v=N` directories
-    * carrying the committer's `_SUCCESS` marker count, so a crash that
-    * left a partial snapshot never gets served (see [[StreamingDecayed]]
-    * — same versioned-snapshot discipline). */
-  private def stateVersionBefore(spark: SparkSession, stateDir: String,
-      beforeId: Long): Option[DataFrame] =
-    Option(new File(stateDir).list()).toSeq.flatten
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-      .filter(v => v < beforeId &&
-        new File(stateDir, s"v=$v/_SUCCESS").exists())
-      .sorted.lastOption
-      .map(v => spark.read.parquet(s"$stateDir/v=$v"))
+    BatchStore.latestCommitted(spark, stateDir, Long.MaxValue)
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.LongType
 
 import graft.etl.MaterializedRollup
 
@@ -12,15 +13,14 @@ import graft.etl.MaterializedRollup
   * keeps answering dashboard aggregations from it — the history is never
   * rescanned.
   *
-  * Durability/replay contract — the [[StreamingMediaDedup]] recipe:
-  * `foreachBatch` is AT-LEAST-ONCE, and a rollup merge is NOT idempotent
-  * (re-applying a batch double-counts), so the batch's contribution is
-  * stored as its PARTIALS under `batch_id=<id>` with dynamic partition
-  * overwrite — a replay REPLACES its own partition bit-identically. The
-  * queryable rollup is then re-merged from the consolidated history plus
-  * recent partials (KB-sized: one row per key combination) and atomically
-  * swapped, so replaying any batch reproduces the same rollup file. The
-  * spec drives [[processBatch]] directly and replays a batch to pin it.
+  * Durability/replay contract: [[BatchStore]]'s. A rollup merge is NOT
+  * idempotent (re-applying a batch double-counts), so the batch's
+  * contribution is stored as its PARTIALS through [[BatchStore.write]] —
+  * a replay REPLACES them bit-identically. The queryable rollup is then
+  * re-merged from the consolidated history plus recent partials
+  * (KB-sized: one row per key combination) and atomically swapped, so
+  * replaying any batch reproduces the same rollup file. The spec drives
+  * [[processBatch]] directly and replays a batch to pin it.
   *
   * COMPACTION (round 11): per-batch partials accumulate one partition per
   * micro-batch forever, so an unbounded run re-reads O(#batches) small
@@ -35,38 +35,12 @@ import graft.etl.MaterializedRollup
   * nothing (they are inert garbage, swept by the next compaction). The
   * `current−2` margin keeps replay safe: structured streaming only ever
   * re-fires the LATEST uncommitted batch, which is never in the fold —
-  * its dynamic-overwrite partition stays the single source of truth.
+  * its partials stay the single source of truth.
   *
   * Registration: pass `registerAs`+`basePath` to (re-)register the
   * rollup for rewriting after every batch — re-registration is required
   * because the cached relation pins the pre-swap file listing. */
 object StreamingRollup {
-
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Highest consolidated watermark on disk, if any. */
-  private def maxUpto(spark: SparkSession, compactedDir: String): Option[Long] = {
-    val fs = hadoopFs(spark, compactedDir)
-    val p = new org.apache.hadoop.fs.Path(compactedDir)
-    if (!fs.exists(p)) None
-    else {
-      val ids = fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith("upto=")).map(_.stripPrefix("upto=").toLong)
-      if (ids.isEmpty) None else Some(ids.max)
-    }
-  }
-
-  /** Uncompacted partial batch ids on disk (directory listing, no scan). */
-  private def partialIds(spark: SparkSession, partialsDir: String): Seq[Long] = {
-    val fs = hadoopFs(spark, partialsDir)
-    val p = new org.apache.hadoop.fs.Path(partialsDir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id=")).map(_.stripPrefix("batch_id=").toLong)
-      .toSeq
-  }
 
   /** One micro-batch: write this batch's partials (idempotent), compact
     * the history when due, re-merge the rollup, swap, optionally
@@ -78,14 +52,10 @@ object StreamingRollup {
       registerAs: Option[String] = None, basePath: String = "",
       compactEvery: Int = 16): Unit = {
     val spark = batch.sparkSession
-    // dynamic overwrite scoped to THIS writer (never the session conf:
-    // a session-wide flip would change the semantics of concurrent
-    // overwrite writes on the same session)
-    MaterializedRollup.build(batch, keys, measures)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(partialsDir)
+    val partials = MaterializedRollup.build(batch, keys, measures)
+    BatchStore.write(partials, partialsDir, batchId)
+    def readPartials(): DataFrame = BatchStore.read(spark, partialsDir,
+      partials.schema.add("batch_id", LongType))
 
     val compactedDir = partialsDir.stripSuffix("/") + "__compacted"
     val keyCols = keys.map(col)
@@ -95,16 +65,19 @@ object StreamingRollup {
 
     // compaction: fold partials ≤ batchId−2 (replay-safe margin) beyond
     // the current watermark into a new consolidated snapshot, then GC
-    val upto0 = maxUpto(spark, compactedDir)
+    val upto0 = BatchStore.ids(spark, compactedDir, "upto").maxOption
     val newUpto = batchId - 2
-    val foldable = partialIds(spark, partialsDir)
+    val foldable = BatchStore.ids(spark, partialsDir, "batch_id")
       .filter(id => id <= newUpto && upto0.forall(id > _))
     if (foldable.size >= compactEvery) {
-      val toFold = spark.read.parquet(partialsDir)
+      val toFold = readPartials()
         .filter(col("batch_id").isin(foldable: _*)).drop("batch_id")
       val folded = upto0.map(u => snapshot(u).unionByName(toFold))
         .getOrElse(toFold)
         .groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+      // writer-scoped dynamic overwrite (never the session conf): the
+      // staged `upto=` partition lands by one rename, so a reader of the
+      // max upto never sees a partial snapshot
       folded.withColumn("upto", lit(newUpto))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -116,34 +89,26 @@ object StreamingRollup {
       // orphans already-folded partials at ids ≤ the old watermark) and
       // every snapshot below the new max (not just the single previous
       // one) — so crash leftovers cannot accumulate across crashes.
-      val fs = hadoopFs(spark, partialsDir)
-      partialIds(spark, partialsDir).filter(_ <= newUpto).foreach { id =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$partialsDir/batch_id=$id"), true)
-      }
-      val cfs = hadoopFs(spark, compactedDir)
-      cfs.listStatus(new org.apache.hadoop.fs.Path(compactedDir))
-        .map(_.getPath.getName).filter(_.startsWith("upto="))
-        .map(_.stripPrefix("upto=").toLong).filter(_ < newUpto)
-        .foreach { u =>
-          cfs.delete(new org.apache.hadoop.fs.Path(s"$compactedDir/upto=$u"), true)
-        }
+      BatchStore.drop(spark, partialsDir,
+        BatchStore.ids(spark, partialsDir, "batch_id").filter(_ <= newUpto),
+        "batch_id")
+      BatchStore.drop(spark, compactedDir,
+        BatchStore.ids(spark, compactedDir, "upto").filter(_ < newUpto),
+        "upto")
     }
 
     // queryable rollup: max-upto snapshot + partials beyond it — cost is
     // O(compactEvery) small partitions + one KB snapshot, not O(#batches)
-    val upto1 = maxUpto(spark, compactedDir)
-    val history = upto1 match {
+    val history = BatchStore.ids(spark, compactedDir, "upto").maxOption match {
       case Some(u) => snapshot(u).unionByName(
-        spark.read.parquet(partialsDir)
-          .filter(col("batch_id") > u).drop("batch_id"))
-      case None => spark.read.parquet(partialsDir).drop("batch_id")
+        readPartials().filter(col("batch_id") > u).drop("batch_id"))
+      case None => readPartials().drop("batch_id")
     }
     val merged = history.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
-    val fs = hadoopFs(spark, mvPath)
     val tmp = mvPath + "__stream_tmp"
     merged.write.mode("overwrite").parquet(tmp)
-    MaterializedRollup.swapDir(fs, tmp, mvPath)
+    MaterializedRollup.swapDir(new org.apache.hadoop.fs.Path(mvPath)
+      .getFileSystem(spark.sessionState.newHadoopConf()), tmp, mvPath)
     // sessionScoped=false: this registration runs in the stream's CLONED
     // micro-batch session; the rollup is a shared artifact that must be
     // visible to the sessions actually querying the base
@@ -166,5 +131,4 @@ object StreamingRollup {
           registerAs, basePath, compactEvery)
       }
       .start()
-
 }

@@ -31,27 +31,30 @@ class StreamingDecayedSpec extends SparkSpec {
       .as[(String, Double, Double)].collect().sortBy(_._1).toSeq
 
   test("two folded batches equal the one-shot aggregate; replay is bit-identical") {
-    val dir = Files.createTempDirectory("graft_decay_state").toString
-    StreamingDecayed.processBatch(batch1, 0L, Seq("k"), "ts", "v", H, dir)
-    StreamingDecayed.processBatch(batch2, 1L, Seq("k"), "ts", "v", H, dir)
-    val folded = collectState(dir)
-    // one-shot reference = batch2's max ts (12:00)
-    val oneShot = graft.etl.DecayedCounter
-      .aggregate(batch1.unionByName(batch2), Seq("k"), "ts", "v",
-        "2024-01-01 12:00:00", H)
-      .select(col("k"), round(col("dcount"), 10), round(col("dsum"), 10))
-      .as[(String, Double, Double)].collect().sortBy(_._1).toSeq
-    folded.zip(oneShot).foreach { case ((k1, c1, s1), (k2, c2, s2)) =>
-      assert(k1 === k2)
-      assert(math.abs(c1 - c2) < 1e-9 && math.abs(s1 - s2) < 1e-9)
+    // a `file:` URI dir must find its predecessor as a bare path does
+    val tmp = () => Files.createTempDirectory("graft_decay_state").toString
+    Seq(tmp(), "file:" + tmp()).foreach { dir =>
+      StreamingDecayed.processBatch(batch1, 0L, Seq("k"), "ts", "v", H, dir)
+      StreamingDecayed.processBatch(batch2, 1L, Seq("k"), "ts", "v", H, dir)
+      val folded = collectState(dir)
+      // one-shot reference = batch2's max ts (12:00)
+      val oneShot = graft.etl.DecayedCounter
+        .aggregate(batch1.unionByName(batch2), Seq("k"), "ts", "v",
+          "2024-01-01 12:00:00", H)
+        .select(col("k"), round(col("dcount"), 10), round(col("dsum"), 10))
+        .as[(String, Double, Double)].collect().sortBy(_._1).toSeq
+      folded.zip(oneShot).foreach { case ((k1, c1, s1), (k2, c2, s2)) =>
+        assert(k1 === k2)
+        assert(math.abs(c1 - c2) < 1e-9 && math.abs(s1 - s2) < 1e-9)
+      }
+      // replay batch 1: reads the same (empty) predecessor, rewrites v=0;
+      // the LATEST state (v=1) is untouched and overall state unchanged
+      StreamingDecayed.processBatch(batch1, 0L, Seq("k"), "ts", "v", H, dir)
+      assert(collectState(dir) === folded)
+      // replay batch 2: reads v=0 again, rewrites v=1 bit-identically
+      StreamingDecayed.processBatch(batch2, 1L, Seq("k"), "ts", "v", H, dir)
+      assert(collectState(dir) === folded)
     }
-    // replay batch 1: reads the same (empty) predecessor, rewrites v=0;
-    // the LATEST state (v=1) is untouched and overall state unchanged
-    StreamingDecayed.processBatch(batch1, 0L, Seq("k"), "ts", "v", H, dir)
-    assert(collectState(dir) === folded)
-    // replay batch 2: reads v=0 again, rewrites v=1 bit-identically
-    StreamingDecayed.processBatch(batch2, 1L, Seq("k"), "ts", "v", H, dir)
-    assert(collectState(dir) === folded)
   }
 
   test("streaming query folds file micro-batches into the same state") {

@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 
@@ -10,7 +12,8 @@ import graft.SparkSpec
   * hash index. Pins (1) equivalence with the batch fold
   * ([[graft.ext.IncrementalDedup.foldBatchesExact]]), (2) replay
   * idempotence (the at-least-once contract of foreachBatch), (3) the
-  * real streaming wrapper end-to-end over a MemoryStream. */
+  * real streaming wrapper end-to-end over a MemoryStream, also across a
+  * failure and a restart from its checkpoint. */
 class StreamingDedupIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,16 +28,19 @@ class StreamingDedupIndexSpec extends SparkSpec {
     spark.read.parquet(outDir).select("doc_id").as[Long].collect().toSet
 
   test("batch-by-batch processing equals the batch fold") {
-    val (idx, out) = (tmp(), tmp())
-    Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-      StreamingDedupIndex.processBatch(
-        b.toDF("doc_id", "text"), i.toLong, "doc_id", "text", idx, out)
+    // a `file:` URI dir must find its index exactly as a bare path does
+    Seq(() => tmp(), () => "file:" + tmp()).foreach { dir =>
+      val (idx, out) = (dir(), dir())
+      Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
+        StreamingDedupIndex.processBatch(
+          b.toDF("doc_id", "text"), i.toLong, "doc_id", "text", idx, out)
+      }
+      val folded = graft.ext.IncrementalDedup.foldBatchesExact(
+          spark, Seq(b0, b1, b2).map(_.toDF("doc_id", "text")), "doc_id", "text")
+        .select("doc_id").as[Long].collect().toSet
+      assert(outIds(out) === folded)
+      assert(outIds(out) === Set(1L, 2L, 5L, 7L))
     }
-    val folded = graft.ext.IncrementalDedup.foldBatchesExact(
-        spark, Seq(b0, b1, b2).map(_.toDF("doc_id", "text")), "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(outIds(out) === folded)
-    assert(outIds(out) === Set(1L, 2L, 5L, 7L))
   }
 
   test("replaying a batch is bit-identical (at-least-once safety)") {
@@ -66,5 +72,47 @@ class StreamingDedupIndexSpec extends SparkSpec {
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
     assert(outIds(out) === Set(1L, 2L, 5L, 7L))
+  }
+
+  test("restart from the checkpoint after a failure between sink write and " +
+      "batch commit equals a clean run") {
+    implicit val sq = spark.sqlContext
+    // failOn = Some(1): the first attempt of batch 1 runs processBatch,
+    // then throws before Spark commits the batch; the restarted query
+    // replays batch 1 from the same checkpoint
+    def run(failOn: Option[Long]): (Set[Long], Long) = {
+      val (idx, out, ckpt) = (tmp(), tmp(), tmp())
+      val mem = MemoryStream[(Long, String)]
+      val df = mem.toDF().toDF("doc_id", "text")
+      var failed = false
+      val q0 = df.writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: Dataset[Row], id: Long) =>
+          StreamingDedupIndex.processBatch(b.toDF(), id, "doc_id", "text",
+            idx, out)
+          if (failOn.contains(id) && !failed) {
+            failed = true
+            throw new IllegalStateException(s"injected failure in batch $id")
+          }
+        }
+        .start()
+      try {
+        mem.addData(b0: _*); q0.processAllAvailable()
+        mem.addData(b1: _*)
+        if (failOn.isDefined)
+          intercept[StreamingQueryException](q0.processAllAvailable())
+        else q0.processAllAvailable()
+      } finally q0.stop()
+      assert(failed === failOn.isDefined)
+      val q1 = StreamingDedupIndex.start(df, "doc_id", "text", idx, out, ckpt)
+      try {
+        q1.processAllAvailable()
+        mem.addData(b2: _*); q1.processAllAvailable()
+      } finally q1.stop()
+      (outIds(out), spark.read.parquet(idx).count())
+    }
+    val clean = run(None)
+    assert(clean === ((Set(1L, 2L, 5L, 7L), 6L)))
+    assert(run(Some(1L)) === clean)
   }
 }

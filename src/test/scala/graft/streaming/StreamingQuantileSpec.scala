@@ -23,26 +23,29 @@ class StreamingQuantileSpec extends SparkSpec {
       .collect().sortBy(_._1).toSeq
 
   test("folded micro-batches equal the one-shot sample; replay bit-identical") {
-    val dir = Files.createTempDirectory("graft_q_state").toString
-    StreamingQuantile.processBatch(rows(1 to 80), 0L, Seq("g"), "v", "id", K, 42L, dir)
-    StreamingQuantile.processBatch(rows(81 to 200), 1L, Seq("g"), "v", "id", K, 42L, dir)
-    StreamingQuantile.processBatch(rows(201 to 240), 2L, Seq("g"), "v", "id", K, 42L, dir)
-    val folded = collectState(dir)
-    val oneShot = graft.etl.IncrementalQuantile
-      .sample(rows(1 to 240), Seq("g"), "v", "id", K)
-      .select("id", "g", "v").as[(Long, String, Double)]
-      .collect().sortBy(_._1).toSeq
-    assert(folded === oneShot)
-    // replay the middle batch: reads v=0 again, rewrites v=1; latest
-    // state (v=2) and the overall answer are untouched
-    StreamingQuantile.processBatch(rows(81 to 200), 1L, Seq("g"), "v", "id", K, 42L, dir)
-    assert(collectState(dir) === folded)
-    // estimates come straight off the state
-    val est = graft.etl.IncrementalQuantile
-      .estimate(StreamingQuantile.readState(spark, dir).get,
-        Seq("g"), "v", Seq(0.5))
-      .as[(String, Double)].collect().toMap
-    assert(est.size === 2 && est.values.forall(m => m > 0 && m <= 240))
+    // a `file:` URI dir must find its predecessor as a bare path does
+    val tmp = () => Files.createTempDirectory("graft_q_state").toString
+    Seq(tmp(), "file:" + tmp()).foreach { dir =>
+      StreamingQuantile.processBatch(rows(1 to 80), 0L, Seq("g"), "v", "id", K, 42L, dir)
+      StreamingQuantile.processBatch(rows(81 to 200), 1L, Seq("g"), "v", "id", K, 42L, dir)
+      StreamingQuantile.processBatch(rows(201 to 240), 2L, Seq("g"), "v", "id", K, 42L, dir)
+      val folded = collectState(dir)
+      val oneShot = graft.etl.IncrementalQuantile
+        .sample(rows(1 to 240), Seq("g"), "v", "id", K)
+        .select("id", "g", "v").as[(Long, String, Double)]
+        .collect().sortBy(_._1).toSeq
+      assert(folded === oneShot)
+      // replay the middle batch: reads v=0 again, rewrites v=1; latest
+      // state (v=2) and the overall answer are untouched
+      StreamingQuantile.processBatch(rows(81 to 200), 1L, Seq("g"), "v", "id", K, 42L, dir)
+      assert(collectState(dir) === folded)
+      // estimates come straight off the state
+      val est = graft.etl.IncrementalQuantile
+        .estimate(StreamingQuantile.readState(spark, dir).get,
+          Seq("g"), "v", Seq(0.5))
+        .as[(String, Double)].collect().toMap
+      assert(est.size === 2 && est.values.forall(m => m > 0 && m <= 240))
+    }
   }
 
   test("streaming query folds file micro-batches; state bounded at k per key") {

@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 import graft.etl.MaterializedRollup
@@ -15,7 +17,8 @@ import graft.plans.RollupViewRewrite
   * re-fired batch replaces its own partials partition and re-merges to a
   * bit-identical rollup (foreachBatch is at-least-once and a naive merge
   * would double-count), (3) the real streaming wrapper end-to-end over a
-  * MemoryStream, with the rewrite answering from the maintained file. */
+  * MemoryStream, with the rewrite answering from the maintained file,
+  * (4) a restart from the checkpoint after a failed batch. */
 class StreamingRollupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -190,5 +193,51 @@ class StreamingRollupSpec extends SparkSpec {
       RollupViewRewrite.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     }
+  }
+
+  test("restart from the checkpoint after a failure between sink write and " +
+      "batch commit equals a clean run") {
+    // failOn = Some(1): the first attempt of batch 1 runs processBatch,
+    // then throws before Spark commits the batch; the restarted query
+    // replays batch 1 from the same checkpoint
+    def run(failOn: Option[Long]): Seq[String] = {
+      val root = tmp()
+      val (partials, mv, ckpt) = (s"$root/p", s"$root/mv", s"$root/ckpt")
+      val (keys, measures) = (Seq("k"), Seq("v", "w"))
+      val mem = MemoryStream[(String, Long, Long)](spark)
+      val df = mem.toDF().toDF("k", "v", "w")
+      var failed = false
+      val q0 = df.writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: Dataset[Row], id: Long) =>
+          StreamingRollup.processBatch(b.toDF(), id, keys, measures,
+            partials, mv)
+          if (failOn.contains(id) && !failed) {
+            failed = true
+            throw new IllegalStateException(s"injected failure in batch $id")
+          }
+        }
+        .start()
+      try {
+        mem.addData(b0: _*); q0.processAllAvailable()
+        mem.addData(b1: _*)
+        if (failOn.isDefined)
+          intercept[StreamingQueryException](q0.processAllAvailable())
+        else q0.processAllAvailable()
+      } finally q0.stop()
+      assert(failed === failOn.isDefined)
+      val q1 = StreamingRollup.start(df, keys, measures, partials, mv, ckpt)
+      try {
+        q1.processAllAvailable()
+        mem.addData(b2: _*); q1.processAllAvailable()
+      } finally q1.stop()
+      try rollupRows(mv)
+      finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+    val clean = run(None)
+    assert(clean === MaterializedRollup.build(
+      (b0 ++ b1 ++ b2).toDF("k", "v", "w"), Seq("k"), Seq("v", "w"))
+      .collect().map(_.toString).sorted.toSeq)
+    assert(run(Some(1L)) === clean)
   }
 }
