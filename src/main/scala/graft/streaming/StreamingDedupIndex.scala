@@ -53,5 +53,4 @@ object StreamingDedupIndex {
         processBatch(b.toDF(), id, idCol, textCol, indexDir, outDir)
       }
       .start()
-
 }

@@ -66,5 +66,4 @@ object StreamingMediaDedup {
           requireVerifyMatch, maxChunkFreq)
       }
       .start()
-
 }
