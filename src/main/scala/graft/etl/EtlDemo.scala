@@ -3,20 +3,14 @@ package graft.etl
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable end-to-end ETL demo: builds a hive-partitioned 15-min fixture
   * (reference source layout, FIXTURES §A.1), runs [[JobRunner]], prints the
   * ledger JSON (the reference's run summary, README.md:339-362) and the
   * output schema head. Usage: `sbt "runMain graft.etl.EtlDemo"`. */
 object EtlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-etl-demo")
+    val spark = graft.core.Sessions.builder("local[4]", "graft-etl-demo")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -56,7 +56,6 @@ object Forget {
 
   final case class Report(partitions: Seq[PartitionDelete]) {
     def deletedTotal: Long = partitions.map(_.deleted).sum
-    def rewrittenPartitions: Int = partitions.count(p => p.rowsAfter > 0)
     def removedPartitions: Int = partitions.count(_.rowsAfter == 0)
   }
 

@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * The reference "pushes down" partition predicates by constructing listing
   * prefixes so non-matching data is never touched. In the Spark engine the
   * same pruning happens declaratively (Catalyst's PruneFileSourcePartitions
-  * on `upgrade=`/`state=` hive dirs); these helpers exist for (a) byte-compat
-  * path construction when addressing the source layout directly and (b) the
-  * metadata-filename convention.
+  * on `upgrade=`/`state=` hive dirs); these helpers keep the upgrade label
+  * and the metadata-filename convention.
   */
 object PartitionPaths {
 
@@ -28,12 +27,6 @@ object PartitionPaths {
     when(upgrade === 0, lit("baseline"))
       .when(upgrade.between(1, 9), concat(lit("upgrade0"), upgrade.cast("string")))
       .otherwise(concat(lit("upgrade"), upgrade.cast("string")))
-
-  /** Data partition prefix for one (upgrade, state)
-    * (fetch.py:66: `{base}/{year}/{release}/{dataPartition}/upgrade=..`). */
-  def dataPrefix(base: String, releaseYear: String, releaseName: String,
-      dataPartition: String, upgrade: Int, state: String): String =
-    s"$base/$releaseYear/$releaseName/$dataPartition/upgrade=$upgrade/state=$state"
 
   /** Metadata file keys for one (upgrade, state) — the basic + full
     * `metadata_and_annual_results` parquet pair (fetch.py:70-81). */

@@ -21,10 +21,6 @@ object ColumnOps {
   def letCol(c: Column)(body: Column => Column): Column =
     element_at(transform(array(c), x => body(x)), 1)
 
-  /** Two-value let-binding. */
-  def letCol2(a: Column, b: Column)(body: (Column, Column) => Column): Column =
-    letCol(a)(av => letCol(b)(bv => body(av, bv)))
-
   /** [[DoubleSortBits]] as a Column: bigint whose signed order equals the
     * double's value order. */
   def doubleSortBits(c: Column): Column =

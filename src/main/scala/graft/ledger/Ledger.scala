@@ -1,7 +1,5 @@
 package graft.ledger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** The reference's operational-correctness net (M3/A5,
   * `/root/reference/etl/oedi_etl/monitor.py:44-137`): per-stage monotonic
   * counters plus a set-diff of listed-vs-uploaded files reported as
@@ -14,9 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plan has exactly one FileScan, no ledger re-scan. The set-diff then
   * runs driver-side against the listing the driver already holds
   * (file-count-bounded, the same memory class as the listing itself).
-  * [[discrepancy]]/[[pathsDf]] remain for callers whose listings live in
-  * DataFrames (e.g. a manifest table too large to enumerate on the
-  * driver) — there the anti-join runs distributed.
   */
 object Ledger {
 
@@ -49,17 +44,5 @@ object Ledger {
         s""""discrepancy":{"stage":"Listed but not Uploaded","files":${arr(discrepancies)}},""" +
         s""""schema_drift":$drift}"""
     }
-  }
-
-  /** `listed EXCEPT processed` as a distributed anti-join.
-    * @param listed    one column `path` — every file the driver enumerated
-    * @param processed one column `path` — every file that produced rows */
-  def discrepancy(listed: DataFrame, processed: DataFrame): DataFrame =
-    listed.join(processed, Seq("path"), "left_anti")
-
-  /** Lift a driver-side path list into a single-column DataFrame. */
-  def pathsDf(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(paths).toDF("path")
   }
 }

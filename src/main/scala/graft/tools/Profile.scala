@@ -23,7 +23,9 @@ import graft.{SparkEntry, core}
   *    materializes it.
   *
   * Every phase runs under Profile's job group; jobs without it (other
-  * threads of an embedding JVM) are not counted. After each phase the
+  * threads of an embedding JVM) are not counted. Compilations are the one
+  * exception: Spark counts them per JVM, so a phase's `compiles` also
+  * holds what other threads compiled meanwhile. After each phase the
   * listener bus is drained, so every event the phase caused is counted
   * toward it and none leaks into the next. Phases share one group id
   * rather than one each because pool threads inherit the group of the
@@ -38,33 +40,36 @@ import graft.{SparkEntry, core}
 object Profile {
 
   /** What one phase did. `tasks` is the sum of `numTasks` over the
-    * phase's completed stages; `spillBytes` is spill to disk. */
+    * phase's completed stages; `spillBytes` is spill to disk; `compiles`
+    * is how many generated classes Janino compiled (codegen cache misses,
+    * on the driver and in local executor threads alike). */
   final case class Phase(wallS: Double, jobs: Int, stages: Int, tasks: Long,
       shuffleReadBytes: Long, shuffleReadRecords: Long,
       shuffleWriteBytes: Long, shuffleWriteRecords: Long,
-      spillBytes: Long, gcMs: Long) {
+      spillBytes: Long, gcMs: Long, compiles: Long) {
     def +(o: Phase): Phase = Phase(wallS + o.wallS, jobs + o.jobs,
       stages + o.stages, tasks + o.tasks,
       shuffleReadBytes + o.shuffleReadBytes, shuffleReadRecords + o.shuffleReadRecords,
       shuffleWriteBytes + o.shuffleWriteBytes, shuffleWriteRecords + o.shuffleWriteRecords,
-      spillBytes + o.spillBytes, gcMs + o.gcMs)
+      spillBytes + o.spillBytes, gcMs + o.gcMs, compiles + o.compiles)
 
     override def toString: String =
       f"$wallS%8.3f s  jobs $jobs%3d  stages $stages%3d  tasks $tasks%5d  " +
         f"shufR $shuffleReadBytes%11d B $shuffleReadRecords%9d rec  " +
         f"shufW $shuffleWriteBytes%11d B $shuffleWriteRecords%9d rec  " +
-        f"spill $spillBytes%d B  gc $gcMs%d ms"
+        f"spill $spillBytes%d B  gc $gcMs%d ms  compiles $compiles%d"
   }
 
   object Phase {
-    val zero: Phase = Phase(0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+    val zero: Phase = Phase(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
 
     /** Field-wise (upper) median. */
     def median(ps: Seq[Phase]): Phase = {
       def m[T: Ordering](f: Phase => T): T = ps.map(f).sorted.apply(ps.size / 2)
       Phase(m(_.wallS), m(_.jobs), m(_.stages), m(_.tasks),
         m(_.shuffleReadBytes), m(_.shuffleReadRecords),
-        m(_.shuffleWriteBytes), m(_.shuffleWriteRecords), m(_.spillBytes), m(_.gcMs))
+        m(_.shuffleWriteBytes), m(_.shuffleWriteRecords), m(_.spillBytes), m(_.gcMs),
+        m(_.compiles))
     }
   }
 
@@ -97,7 +102,7 @@ object Profile {
         val r = m.shuffleReadMetrics
         val w = m.shuffleWriteMetrics
         acc += Phase(0, 0, 1, i.numTasks, r.totalBytesRead, r.recordsRead,
-          w.bytesWritten, w.recordsWritten, m.diskBytesSpilled, m.jvmGCTime)
+          w.bytesWritten, w.recordsWritten, m.diskBytesSpilled, m.jvmGCTime, 0)
       }
     }
 
@@ -123,11 +128,13 @@ object Profile {
     }
     def phase[T](label: String)(body: => T): (T, Phase) = {
       sc.setJobGroup(Group, label, interruptOnCancel = false)
+      val c0 = GraftBridge.compilations
       val t0 = System.nanoTime()
       val value = try body finally sc.clearJobGroup()
       val wallS = (System.nanoTime() - t0) / 1e9
       GraftBridge.drainListeners(sc)
-      (value, collector.take().copy(wallS = wallS))
+      (value, collector.take().copy(wallS = wallS,
+        compiles = GraftBridge.compilations - c0))
     }
     def once(name: String, round: Int): Run = {
       val (df, build) = phase(s"$name r$round build") {

@@ -19,4 +19,8 @@ object GraftBridge {
     * has returned once its job ends, but listeners may not have seen its
     * last events yet. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  /** Classes Janino has compiled in this JVM so far: one per codegen cache
+    * miss, counted by Spark's `private[spark]` codegen metrics source. */
+  def compilations: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -11,16 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // same extension surface as Sessions.local (functions + optimizer rule)
-      .withExtensions(new GraftExtensions()(_))
-      .master("local[4]")
-      .appName("graft-test")
+    val s = graft.core.Sessions.builder("local[4]", "graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // untagged parquet timestamps are instants, not NTZ (Sessions.local doc)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -61,6 +61,11 @@ class ProfileSpec extends SparkSpec {
     runs.filter(r => r.name == A && r.round > 0).foreach(r => assert(r.build.jobs == 0, r))
   }
 
+  test("q01_scan_filter compiles its classes in the warm-up and none after") {
+    val runs = profile(Seq(A), runs = 2)
+    runs.filter(_.round > 0).foreach(r => assert(r.build.compiles + r.exec.compiles == 0, r))
+  }
+
   test("two names over three rounds run A B / B A / A B after one warm-up each") {
     val runs = profile(Seq(A, B), runs = 3)
     assert(runs.map(r => (r.round, r.name)) == Seq(
