@@ -90,14 +90,13 @@ object Sessions {
 
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
       appName: String = "graft"): SparkSession = {
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "on") != "off"
     val s = builder(s"local[$cores]", appName)
       .config("spark.sql.shuffle.partitions", "32")
       // FAIR so concurrent driver threads (JobRunner.runAllParallel) share
       // executors instead of queueing whole jobs FIFO; no effect on
       // single-job runs
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // autoBroadcastJoinThreshold stays at the 10 MB DEFAULT deliberately.

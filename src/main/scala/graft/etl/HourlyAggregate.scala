@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructType}
 
 import SchemaDefs.qcol
 
@@ -26,6 +27,18 @@ import SchemaDefs.qcol
   * per-file parity runs.
   */
 object HourlyAggregate {
+
+  /** The measure columns of `schema`: every double column that is not a
+    * key (`timestamp`, `bldg_id`, `upgrade`, `state`). The reference
+    * hardcodes its 51-name list and fails per file when one is missing
+    * (transform.py:57-122); deriving the list from the schema generalizes
+    * that contract without changing results on conforming data, since the
+    * 51 are exactly the non-key doubles. */
+  def measures(schema: StructType): Seq[String] = {
+    val keys = Set("timestamp", "bldg_id", "upgrade", "state")
+    schema.fields.filter(f => f.dataType == DoubleType && !keys.contains(f.name))
+      .map(_.name).toSeq
+  }
 
   /** @param timeCol      15-min resolution timestamp column
     * @param idCol        entity id column (`bldg_id` in the reference)

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.ledger.Ledger
 
@@ -173,19 +172,12 @@ object JobRunner {
               collect_set(col("__src_file")).as("paths"))
 
           // -- 5. Transform (A1/A2): group by (upgrade, state[, bldg_id], hour).
-          //    Measure columns are schema-on-read: every double column that
-          //    isn't a key (the reference hardcodes its 51-name list and
-          //    fails per-file when one is missing — transform.py:57-122;
-          //    deriving from the schema generalizes that contract without
-          //    changing results on conforming data, since the 51 are exactly
-          //    the non-key doubles). When the footers prove every group
-          //    file-local, each scan task aggregates its own files
-          //    (FileLocalAggregate: one stage, no exchange); otherwise
-          //    HourlyAggregate's partial aggregate + hash shuffle.
-          val keyCols = Set("timestamp", "bldg_id", "upgrade", "state")
-          val measures = read.schema.fields
-            .filter(f => f.dataType == DoubleType && !keyCols.contains(f.name))
-            .map(_.name).toSeq
+          //    Measure columns are schema-on-read (HourlyAggregate.measures).
+          //    When the footers prove every group file-local, each scan task
+          //    aggregates its own files (FileLocalAggregate: one stage, no
+          //    exchange); otherwise HourlyAggregate's partial aggregate +
+          //    hash shuffle.
+          val measures = HourlyAggregate.measures(read.schema)
           val aggregated =
             if (spec.byId && fileLocal(spark, read, files, footers))
               FileLocalAggregate(input, "__src_file", measureCols = measures,

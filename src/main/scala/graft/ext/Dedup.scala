@@ -504,7 +504,6 @@ object Dedup {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val roundT0 = System.nanoTime()
       // 1-hop: each node adopts min(own, neighbors') label
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("cluster").as("nc"))
@@ -541,9 +540,6 @@ object Dedup {
           .otherwise(0L)).as("changed"))
         .localCheckpoint(true)
       val changed = obs.get("changed").asInstanceOf[Long]
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        println(f"[cc] round=$i changed=${changed > 0} " +
-          f"t=${(System.nanoTime() - roundT0) / 1e6}%.0f ms")
       labels.unpersist(false)
       labels = next
       converged = changed == 0

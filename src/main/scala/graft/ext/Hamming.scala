@@ -43,21 +43,9 @@ object Hamming {
     val capped = banded(df, idCol, hashCol, maxHamming, maxChunkFreq)
     val a = capped.as("a")
     val b = capped.as("b")
-    val cand = a.join(b,
+    verified(a.join(b,
         col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key")
-          && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.h").as("h_a"), col("b.h").as("h_b"))
-    // the distinct collapses candidates found via SEVERAL agreeing chunks;
-    // at maxHamming = 0 there is exactly one chunk, so every pair appears
-    // once and the distinct is a pure extra exchange (guide §2.4: a
-    // distinct on data that is already unique) — r17, measured as one AQE
-    // job per call on the radius-0 media faces
-    val uniq = if (maxHamming == 0) cand else cand.distinct()
-    uniq
-      .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+          && col("a.id") < col("b.id")), "a", "b", maxHamming)
   }
 
   /** All CROSS pairs (id_l from `left`, id_r from `right`) with
@@ -74,13 +62,24 @@ object Hamming {
     require(maxHamming >= 0 && maxHamming <= 63, "maxHamming in [0, 63]")
     val l = banded(left, idCol, hashCol, maxHamming, maxChunkFreq).as("l")
     val r = banded(right, idCol, hashCol, maxHamming, maxChunkFreq).as("r")
-    l.join(r, col("l.chunk") === col("r.chunk") && col("l.key") === col("r.key"))
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"),
-        col("l.h").as("h_l"), col("r.h").as("h_r"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("h_l").bitwiseXOR(col("h_r"))))
+    verified(l.join(r, col("l.chunk") === col("r.chunk") && col("l.key") === col("r.key")),
+      "l", "r", maxHamming)
+  }
+
+  /** The shared tail of both pairings: (id_x, id_y, hamming) for the
+    * candidate pairs of the joined banded sides aliased `x` and `y` that
+    * lie within `maxHamming`. The distinct collapses candidates found via
+    * SEVERAL agreeing chunks; at maxHamming = 0 there is exactly one
+    * chunk, so every pair appears once and the distinct would be a pure
+    * extra exchange (a distinct on data that is already unique). */
+  private def verified(cand: DataFrame, x: String, y: String,
+      maxHamming: Int): DataFrame = {
+    val pairs = cand.select(col(s"$x.id").as(s"id_$x"), col(s"$y.id").as(s"id_$y"),
+      col(s"$x.h").as(s"h_$x"), col(s"$y.h").as(s"h_$y"))
+    (if (maxHamming == 0) pairs else pairs.distinct())
+      .withColumn("hamming", bit_count(col(s"h_$x").bitwiseXOR(col(s"h_$y"))))
       .filter(col("hamming") <= maxHamming)
-      .select(col("id_l"), col("id_r"), col("hamming"))
+      .select(col(s"id_$x"), col(s"id_$y"), col("hamming"))
   }
 
   /** Shared banding stage: (id, h, chunk, key) rows, optionally

@@ -1660,7 +1660,7 @@ object ExtQueries {
     * exactly k rows under the 10%-selectivity filter — the k-sufficiency
     * property post-filtering lacks; recall behavior and the
     * 1%-selectivity regime are AnnIndexSpec-pinned. The predicate lands
-    * in the lists parquet scan (PushedFilters — PlanCheck pin
+    * in the lists parquet scan (PushedFilters — PlanSpec pin
     * x97_filtered_pushdown), not a side join: at 100 TB the filter prunes
     * IN the probe read. */
   val x97_filtered_ann: Q = (s, d) => {

@@ -39,12 +39,6 @@ object Formats {
       .option("columnNameOfCorruptRecord", CorruptCol)
       .json(path)
 
-  /** Rows whose source line failed to parse (for a discrepancy ledger).
-    * Spark disallows querying ONLY the corrupt-record column straight off a
-    * text scan (column pruning would leave nothing to parse), so the rows
-    * are materialized once via local checkpoint — which is what a ledger
-    * pass wants anyway: one read serving both the parsed and corrupt
-    * streams. */
   /** ONE full materialized parse serving every ledger-style consumer:
     * pass the result to [[corruptRows]] AND [[parseLedger]] to avoid
     * re-parsing (each materializes on its own when handed a raw read).
@@ -58,6 +52,11 @@ object Formats {
   private def isMaterialized(df: DataFrame): Boolean =
     df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
 
+  /** Rows whose source line failed to parse (for a discrepancy ledger).
+    * Spark disallows querying ONLY the corrupt-record column straight off a
+    * text scan (column pruning would leave nothing to parse), so the rows
+    * are [[materialize]]d once — which is what a ledger pass wants anyway:
+    * one read serving both the parsed and corrupt streams. */
   def corruptRows(df: DataFrame): DataFrame = {
     val fixed = materialize(df)
     fixed.filter(fixed(CorruptCol).isNotNull)

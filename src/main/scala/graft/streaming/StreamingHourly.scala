@@ -1,84 +1,64 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.etl.HourlyAggregate
 
 /** Structured Streaming face of the ETL (SURVEY §2.7 / M1/M4).
   *
   * The reference's incremental file pacing (asyncio queues, poison pills,
   * idle watchdog) maps to a file-source stream: `maxFilesPerTrigger`
-  * reproduces page-paced ingestion, watermark+window reproduces the hourly
-  * aggregation on an unbounded feed, and an idle-timeout listener reproduces
-  * the watchdog shutdown (`/root/reference/etl/oedi_etl/monitor.py:221-281`).
-  * On bounded input the result equals the batch [[graft.etl.HourlyAggregate]]
-  * (verified by StreamingSpec).
+  * reproduces page-paced ingestion, each micro-batch runs the batch job's
+  * own transform ([[HourlyAggregate]], with the keys and measure columns
+  * `JobRunner` uses), and an idle-timeout listener reproduces the watchdog
+  * shutdown (reference `monitor.py:221-281`). There is
+  * no watermark and no streaming state: the unit of work is the FILE, as
+  * in [[graft.etl.JobRunner.runIncremental]].
+  *
+  * Correctness precondition: aggregation groups must not span two
+  * micro-batches. The reference's layout guarantees it (one building's
+  * time series per file — `transform.py:59-61` — and hour groups are
+  * file-local). A group is complete inside the batch that carries its
+  * files, because the shuffle merges groups that span files within a
+  * batch. A group that spans two batches is outside the contract: its
+  * `_mean` over partial batches is NOT the global `_mean` — use a full
+  * [[graft.etl.JobRunner.run]] (or compact inputs per group first). This
+  * is the same precondition `runIncremental` documents.
   */
 object StreamingHourly {
 
-  /** Streaming hourly aggregation over a file-source directory.
-    * Complete/update semantics: uses watermark + append on the window close.
-    * @param maxFilesPerTrigger reference listing page-size analog */
-  def query(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      timeCol: String = "timestamp",
-      idCol: String = "bldg_id",
-      measureCols: Seq[String],
-      watermark: String = "2 hours",
-      maxFilesPerTrigger: Int = 500): DataFrame = {
-    val stream = spark.readStream
+  /** Aggregate every source file not yet processed under `checkpointDir`
+    * and store each micro-batch's hourly rows under `outDir` (snappy
+    * parquet, `batch_id`-partitioned through [[BatchStore]]). Offsets and
+    * the batch commit log live in the checkpoint; a batch that failed is
+    * re-run on restart and replaces its first attempt's rows. Drains what
+    * is available, then terminates; re-invoke on a schedule.
+    * @param schema the source files' schema; `upgrade`/`state` columns, when
+    *   present, are filled from the hive dirs and kept as group keys
+    * @param maxFilesPerTrigger files per micro-batch (reference listing
+    *   page-size analog) */
+  def run(spark: SparkSession, srcDir: String, schema: StructType, outDir: String,
+      checkpointDir: String, maxFilesPerTrigger: Int = 500): Unit =
+    spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
-    val aggs =
-      min(col(idCol)).as(s"${idCol}_min") +:
-        min(col(timeCol)).as(s"${timeCol}_min") +:
-        measureCols.map(m => avg(col(s"`$m`")).as(s"${m}_mean"))
-    stream
-      .withWatermark(timeCol, watermark)
-      .groupBy(col(idCol), window(col(timeCol), "1 hour"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(
-        (col("window.start").as(timeCol) +:
-          col(s"${idCol}_min") +:
-          col(s"${timeCol}_min") +:
-          measureCols.map(m => col(s"`${m}_mean`"))): _*)
-  }
-
-  /** Run the stream into an in-memory table until all currently-available
-    * files are processed (bounded-input parity runs / tests). */
-  def runBounded(df: DataFrame, name: String): StreamingQuery = {
-    val q = df.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q
-  }
-
-  /** Production sink: append closed hourly windows to snappy parquet with a
-    * checkpoint — exactly-once file output across restarts (offsets + sink
-    * commit log live in `checkpointDir`; a crashed batch is re-run, its
-    * half-written files ignored by the commit protocol). The streaming
-    * mirror of the batch JobRunner sink (S5). Drains what is available,
-    * then terminates; re-invoke on a schedule (or swap the trigger for a
-    * continuous service) — state carries over through the checkpoint. */
-  def runToParquet(df: DataFrame, outDir: String, checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("compression", "snappy")
+      .writeStream
       .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (b: Dataset[Row], id: Long) => processBatch(b, id, outDir) }
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
+
+  /** One micro-batch: [[HourlyAggregate]] by (upgrade, state, bldg_id, hour)
+    * over the batch's files, written as batch `batchId` of `outDir`. */
+  def processBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
+    BatchStore.write(
+      HourlyAggregate(batch, measureCols = HourlyAggregate.measures(batch.schema),
+        extraKeys = Seq("upgrade", "state").filter(batch.columns.contains)),
+      outDir, batchId)
 
   /** M4 idle watchdog: stop the query after `idleTimeoutMs` with no progress
     * (no new input rows). The reference default is 5 minutes. */

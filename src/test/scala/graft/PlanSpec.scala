@@ -1,0 +1,340 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+
+import graft.core.Tables
+import graft.etl.MaterializedRollup
+import graft.ext.AnnIndex
+import graft.plans.RollupViewRewrite
+
+/** The physical-plan properties the engine's scale story depends on
+  * (SURVEY §4), one test per pin over the sf0.01 set; a failing pin shows
+  * the head of the plan it checked. To read one query's whole plan, use
+  * `graft.tools.Profile --explain`. */
+class PlanSpec extends SparkSpec {
+  private val sfDir = "/root/testdata/sf0.01"
+
+  private def head(plan: String): String = plan.linesIterator.take(40).mkString("\n")
+
+  /** The test `<name>: <what>`: `p` holds on query `name`'s physical plan. */
+  private def pin(name: String, what: String)(p: String => Boolean): Unit =
+    test(s"$name: $what") {
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+      assert(p(plan), head(plan))
+    }
+
+  pin("q01_scan_filter", "filter pushed to parquet scan")(
+    _.contains("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,45.0)"))
+  pin("q01_scan_filter", "column-pruned ReadSchema (3 cols)")(p =>
+    p.contains("l_orderkey") && !p.contains("l_extendedprice"))
+  pin("q03_join_countdistinct", "broadcast hash join")(
+    _.contains("BroadcastHashJoin"))
+  pin("q07_dim_joins", "two broadcast joins, no sort-merge")(p =>
+    "BroadcastHashJoin".r.findAllIn(p).size == 2 && !p.contains("SortMergeJoin"))
+  pin("q05_window_topk", "WindowGroupLimit top-k pushdown")(
+    _.contains("WindowGroupLimit"))
+  pin("q12_topk_global", "TakeOrderedAndProject (no global sort)")(
+    _.contains("TakeOrderedAndProject"))
+  pin("q06_multi_agg", "partial aggregation before shuffle")(p =>
+    p.contains("HashAggregate") && p.contains("partial_"))
+  pin("q08_anti_join", "anti join strategy")(p =>
+    p.contains("LeftAnti"))
+  // (a function-less distinct prints as two keyed HashAggregates, not
+  // "partial_" — match the map-side aggregate by its key instead)
+  pin("q09_semi_join", "semi join = broadcast of pre-aggregated distinct keys (part never shuffles)")(p =>
+    p.contains("BroadcastHashJoin") && p.contains("LeftSemi") &&
+      p.contains("HashAggregate(keys=[l_partkey") &&
+      !p.contains("SortMergeJoin"))
+  pin("q02_hourly_agg", "single shuffle for group-by")(p =>
+    "Exchange hashpartitioning".r.findAllIn(p).size <= 1)
+  pin("q04_group_distinct", "distinct-first fact, then SHUFFLED hash join (no driver-side dim broadcast build, no SMJ)")(p =>
+    p.contains("ShuffledHashJoin") &&
+      p.contains("HashAggregate(keys=[o_custkey") &&
+      !p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"))
+  pin("x3_ann_bruteforce", "broadcast nested loop for query side")(p =>
+    p.contains("BroadcastNestedLoopJoin") && p.contains("WindowGroupLimit"))
+  pin("q21_etl_hourly_by_user", "partial agg + one shuffle")(p =>
+    p.contains("partial_") && "Exchange hashpartitioning".r.findAllIn(p).size <= 1)
+  pin("q27_asof_join", "as-of join = one hash shuffle, no crossJoin")(p =>
+    !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin") &&
+      "Exchange hashpartitioning".r.findAllIn(p).size <= 2)
+  pin("q28_range_join", "range join = equi-join on bins, no crossJoin")(p =>
+    !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+  pin("q29_pivot", "pivot = single-pass agg, no extra value-discovery scan")(p =>
+    "FileScan".r.findAllIn(p).size <= 1)
+  // PreAggExpandRewrite: grouping-sets families must collapse to one row
+  // per full key BEFORE Expand replicates per grouping set — in the
+  // top-down plan text, an aggregate below Expand prints AFTER it
+  Seq("q17_rollup", "q22_cube", "q32_grouping_sets", "q86_rollup_avg")
+    .foreach { n =>
+      pin(n, "partial aggregate BELOW Expand (row multiplication collapsed)")(p =>
+        p.contains("Expand") &&
+          p.substring(p.indexOf("Expand")).contains("HashAggregate"))
+    }
+  pin("q39_revenue_topk", "dim filter broadcast + top-k, no global sort")(p =>
+    p.contains("BroadcastHashJoin") && p.contains("TakeOrderedAndProject"))
+  pin("q40_correlated_scalar", "decorrelated to window: one shuffle, no per-row subquery join")(p =>
+    "Exchange hashpartitioning".r.findAllIn(p).size <= 1 && p.contains("Window"))
+  // size-gated: broadcast below the gate (sf<=1-ish), SHUFFLE_HASH on
+  // the unskewed PK side above it — either way NEVER sort-merge (SMJ
+  // sorted 60M+15M rows by orderkey only to re-sort the output)
+  pin("q14_theta_join", "orders side hash join (broadcast or shuffled per size gate), no SMJ")(p =>
+    (p.contains("BroadcastHashJoin") || p.contains("ShuffledHashJoin")) &&
+      !p.contains("SortMergeJoin"))
+  // q39: a lineitem scan under a BroadcastExchange means the planner is
+  // hashing a filtered FACT table from a bytes-guess — walk the actual
+  // tree (pre-AQE sparkPlan) instead of string-matching subtrees
+  test("q39_revenue_topk: lineitem is NEVER the broadcast build side") {
+    val plan = SparkEntry.queries("q39_revenue_topk")(spark, sfDir)
+      .queryExecution.sparkPlan
+    val bad = plan.collect { case b: BroadcastExchangeExec =>
+      b.child.collect {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.toString.contains("lineitem")) => f
+      }
+    }.flatten
+    assert(bad.isEmpty, head(plan.toString))
+  }
+  pin("q50_lateral", "lateral decorrelated: no per-row subquery, no cartesian")(p =>
+    !p.contains("CartesianProduct"))
+  pin("q51_percentiles", "quantiles via bit-bucket distributed selection: no percentile agg, no row-sized shuffle")(p =>
+    !p.toLowerCase.contains("percentile") && p.contains("double_sort_bits"))
+  pin("x9_bloom_semi", "bloom probe filters the fact scan below the residual semi join")(p =>
+    p.contains("bloom_might_contain") && p.contains("LeftSemi"))
+  pin("q83_pit_lookup", "PIT lookup: hash join on the equi key (interval as residual), no cartesian")(p =>
+    (p.contains("ShuffledHashJoin") || p.contains("BroadcastHashJoin")) &&
+      !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+  pin("q70_interpolate", "segment gap-fill: ONE scan, no self-join, explode row-local")(p =>
+    "FileScan".r.findAllIn(p).size == 1 && !p.contains("Join") &&
+      p.contains("Generate explode"))
+  pin("q52_range_frame", "event-time RANGE frame present, one shuffle")(p =>
+    p.contains("RangeFrame") &&
+      "Exchange hashpartitioning".r.findAllIn(p).size <= 1)
+  pin("q60_sessionize", "session_window agg: partial agg, no window-function global sort")(p =>
+    p.contains("partial_") && !p.contains("Window ["))
+  pin("q61_recursive_spine", "recursive CTE plans a UnionLoop, orders side joined once")(p =>
+    p.contains("UnionLoop") && "FileScan".r.findAllIn(p).size <= 1)
+  pin("q62_upsert", "upsert = anti join on change keys + union, no full-outer")(p =>
+    p.contains("LeftAnti") && !p.contains("FullOuter"))
+  pin("x4_contamination", "gram membership probe is a broadcast join; grams built row-local (no UDF, no token window)")(p =>
+    p.contains("BroadcastHashJoin") && !p.contains("BatchEvalPython") &&
+      !p.contains("Window ["))
+  // minhash: assert on the LAZY pair plan (the public entry point
+  // eagerly checkpoints, so its executed plan is just an RDD scan)
+  test("x2_minhash_neardup: LSH banding = equi-joins only, no crossJoin") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val plan = ext.Dedup.nearDupPairsFromSketch(ext.Dedup.sketch(docs, "doc_id", "text"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+      head(plan))
+  }
+
+  pin("x36_line_dedup", "heavy-line probe broadcast; row-local rebuild (no text collect_list, no cartesian)")(p =>
+    p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
+      !p.contains("collect_list(__line") && !p.contains("collect_list(struct"))
+  pin("x37_span_dedup", "dup-gram probe broadcast; no per-token window — row-local gap rebuild (≤2 hash exchanges, no Window)")(p =>
+    p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
+      "Exchange hashpartitioning".r.findAllIn(p).size <= 2 &&
+      !p.contains("Window ["))
+  pin("x2_components", "distributed label propagation: equi-joins only, no cartesian")(p =>
+    !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+  pin("x41_pca_project", "PCA projection is row-local: no join, no aggregation, no hash shuffle")(p =>
+    !p.contains("Join") && !p.contains("HashAggregate") &&
+      "Exchange hashpartitioning".r.findAllIn(p).isEmpty)
+  pin("x42_cooccur", "co-occurrence: row-local pair generation, ONE partial-aggregated hash shuffle, no token self-join")(p =>
+    !p.contains("Join") && p.contains("partial_") &&
+      "Exchange hashpartitioning".r.findAllIn(p).size == 1)
+  pin("x43_ngram_lm", "bigram LM: row-local pair gen + equi joins only; the sole single-partition exchange is the vocab scalar")(p =>
+    !p.contains("CartesianProduct") && p.contains("partial_") &&
+      "Exchange SinglePartition".r.findAllIn(p).size <= 1)
+  // RUNTIME pin: the selfScore vocab scalar reusing the bigram-count
+  // exchange rests on two semantically-no-op expressions keeping plan
+  // canonicalization aligned (NgramLm.scala's isnotnull filter +
+  // `count >= 1` keep-alive) — an optimizer-rule or Spark-version change
+  // can silently drop the reuse and regress x43 to a third full tokenize
+  // pass with no functional signal. Only the POST-EXECUTION adaptive plan
+  // shows ReusedExchange, hence the executed-plan variant here.
+  test("x43_ngram_lm: RUNTIME vocab scalar reuses the bigram-count exchange (ReusedExchange)") {
+    val df = SparkEntry.queries("x43_ngram_lm")(spark, sfDir)
+    // execute THROUGH the df's own QueryExecution (a noop write builds its
+    // own and would leave this plan un-finalized); 500 rows
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ReusedExchange"), head(plan))
+  }
+  pin("x44_jaro_winkler", "JW scoring through the native codegen expression (no UDF), no cartesian")(p =>
+    p.contains("jaro_winkler_sim") && !p.contains("CartesianProduct") &&
+      !p.contains("BatchEvalPython"))
+  pin("x48_token_budget", "running sum decomposed: row-sized window is BUCKET-partitioned; single-partition exchanges only on scalar/offsets relations")(p =>
+    p.contains("windowspecdefinition(__b") &&
+      "Exchange SinglePartition".r.findAllIn(p).size <= 3)
+  pin("x50_ppl_buckets", "exact NTILE without global sort: rank window partitioned by tiling bucket")(p =>
+    p.contains("row_number() windowspecdefinition(__b") &&
+      "Exchange SinglePartition".r.findAllIn(p).size <= 3 &&
+      !p.contains("CartesianProduct"))
+
+  pin("x55_nearest_join", "nearest = two as-of window passes, no candidate explosion (no cartesian/BNLJ)")(p =>
+    !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin") &&
+      "Window ".r.findAllIn(p).size >= 2)
+  pin("x56_anomaly", "anomaly screen: lag reuses the smoothing key partitioning; histogram summary; no cartesian")(p =>
+    !p.contains("CartesianProduct") && p.contains("lag("))
+  pin("x58_winsorize", "winsorize: broadcast quantile bounds, clip at scan speed, no cartesian")(p =>
+    p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct"))
+
+  pin("x59_url_canon", "URL canonicalization is map-only: no join, no hash shuffle (output sort only)")(p =>
+    !p.contains("Join") && !p.contains("Exchange hashpartitioning") &&
+      !p.contains("HashAggregate"))
+  pin("x60_weighted_sample", "A-ES draw row-local; per-stratum rank windows (no global sort before the window)")(p =>
+    !p.contains("Join") &&
+      "Exchange hashpartitioning".r.findAllIn(p).size <= 1)
+  pin("x61_html_strip", "HTML strip is map-only regexp at scan speed: no join, no hash shuffle, no UDF")(p =>
+    !p.contains("Join") && !p.contains("Exchange hashpartitioning") &&
+      !p.contains("BatchEvalPython") && !p.contains("ScalaUDF"))
+
+  pin("x62_neardup_join", "cross-corpus dedup is an inverted-index EQUI-join: no cartesian, no BNLJ")(p =>
+    !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+  pin("x4_contam_gate", "bloom gate screen is join-free at scan speed (the only join-shaped work was the driver-side fit)")(p =>
+    !p.contains("Join") && !p.contains("Exchange hashpartitioning"))
+
+  pin("x63_entropy", "entropy kernel is map-only: no join, no hash shuffle, single scan")(p =>
+    !p.contains("Join") && !p.contains("Exchange hashpartitioning") &&
+      "FileScan".r.findAllIn(p).size == 1)
+  pin("x64_inc_quantile", "bottom-k fold is WindowGroupLimit-pushed (partial top-k before the shuffle); no join anywhere")(p =>
+    !p.contains("Join") && p.contains("WindowGroupLimit") &&
+      p.contains("Partial"))
+
+  pin("x65_decayed", "decayed fold: aggregations only — the state decays by a scalar, never re-joins history")(p =>
+    !p.contains("Join") && p.contains("partial_"))
+  pin("x66_golden", "golden record is ONE partial-aggregated hash agg: no window, no join")(p =>
+    !p.contains("Join") && !p.contains("Window") && p.contains("partial_"))
+
+  // round 8: the new operators' plan disciplines
+  pin("x74_blocklist", "blocklist screen is map-only at scan speed: no join, no hash shuffle (output sort only)")(p =>
+    !p.contains("Join") && !p.contains("Exchange hashpartitioning") &&
+      "FileScan".r.findAllIn(p).size == 1)
+  pin("x79_group_split", "group split is map-only: hashing the group key needs no shuffle, no group materialization")(p =>
+    !p.contains("Join") && !p.contains("Exchange hashpartitioning") &&
+      "FileScan".r.findAllIn(p).size == 1)
+  pin("x81_fix_mojibake", "mojibake repair is map-only codegen: no join, no hash shuffle, no UDF")(p =>
+    !p.contains("Join") && !p.contains("Exchange hashpartitioning") &&
+      !p.contains("BatchEvalPython"))
+  pin("x78_salted_join", "salted join: equi-joins only (plain + (key,salt) arms), no cartesian, no BNLJ")(p =>
+    !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+  pin("x80_join_guard", "fan-out report: two partial-agged count relations, payload never scanned twice")(p =>
+    p.contains("partial_") && !p.contains("CartesianProduct"))
+  pin("x73_containment", "containment pairs: inverted-index equi-joins only, no cartesian")(p =>
+    !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+
+  // x34/x35 (optimizer-rule rewrites) assert the absence of the
+  // nested-loop join INSIDE the query itself — the conf must be set at
+  // plan time, which only the query closure controls.
+
+  /** Runs `body` on a scratch dir that is deleted afterwards. */
+  private def withDir(body: String => Unit): Unit = {
+    val root = Files.createTempDirectory("graft_planspec").toString
+    try body(root)
+    finally FileUtils.deleteDirectory(new File(root))
+  }
+
+  /** Registers a materialized rollup of `table` over this set for the
+    * length of `body`, which gets the rollup's dir; the rewrite is
+    * JVM-wide, so it is always unregistered afterwards. */
+  private def withRollup(table: String, keys: Seq[String], measure: String)(
+      body: String => Unit): Unit = withDir { root =>
+    try {
+      MaterializedRollup.createAndRegister(
+        spark, "planspec_mv", s"$sfDir/$table.parquet", s"$root/mv",
+        keys = keys, measures = Seq(measure), base = Some(Tables.load(spark, sfDir, table)))
+      body(s"$root/mv")
+    } finally RollupViewRewrite.unregister("planspec_mv")
+  }
+
+  // X91 rollup rewrite: register a real rollup against this set's tables
+  // and pin its shapes at the physical level (the x91 faces gate this at
+  // every verify)
+  test("x91_rollup_plain: aggregate scans the rollup, not the fact table") {
+    withRollup("lineitem", Seq("l_returnflag", "l_linestatus"), "l_quantity") { mv =>
+      val plan = Tables.load(spark, sfDir, "lineitem")
+        .groupBy(col("l_returnflag"))
+        .agg(count(lit(1)).as("c"), sum(col("l_quantity")).as("s"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains(mv) && !plan.contains("lineitem"), head(plan))
+    }
+  }
+
+  test("x91_rollup_star: join aggregate collapses the fact side, keeps the dim scan") {
+    withRollup("orders", Seq("o_custkey"), "o_totalprice") { mv =>
+      val orders = Tables.load(spark, sfDir, "orders")
+      val customer = Tables.load(spark, sfDir, "customer")
+      val plan = orders.join(customer, orders("o_custkey") === customer("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(sum(col("o_totalprice")).as("s"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains(mv) && !plan.contains("orders") && plan.contains("customer"),
+        head(plan))
+    }
+  }
+
+  // grouping-sets collapse: PreAggExpandRewrite turns the CUBE into
+  // merge ∘ Expand ∘ partial-agg, whose inner aggregate the rollup rule
+  // reroutes — the fact scan must disappear under the Expand too
+  test("x91_rollup_cube: grouping-sets aggregate collapses to the rollup under Expand") {
+    withRollup("lineitem", Seq("l_returnflag", "l_linestatus"), "l_quantity") { mv =>
+      val plan = Tables.load(spark, sfDir, "lineitem")
+        .cube(col("l_returnflag"), col("l_linestatus"))
+        .agg(count(lit(1)).as("c"), sum(col("l_quantity")).as("s"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains(mv) && !plan.contains("lineitem") && plan.contains("Expand"),
+        head(plan))
+    }
+  }
+
+  /** The `FileScan` line of the ANN index's lists in `plan`. */
+  private def listsScan(plan: String): String =
+    plan.linesIterator.find(l => l.contains("lists") && l.contains("FileScan")).getOrElse("")
+
+  // X94 incremental-ANN index: the persisted-lists scan must read only
+  // the probed lists — Spark's dynamic partition pruning on list_id (the
+  // query side broadcasts its nprobe probe ids into the scan's partition
+  // filters), which is the nprobe/k-of-the-index read story the operator
+  // exists for
+  test("x94_ann_lists_dpp: lists scan partition-prunes on the probed list ids") {
+    implicit val sp: SparkSession = spark
+    withDir { root =>
+      val emb = Tables.load(spark, sfDir, "embeddings").filter(col("vec_id") < 500)
+      val idx = AnnIndex.create(emb, s"$root/idx", k = 8, iters = 1)
+      val q = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      val plan = AnnIndex.topK(idx, q, k = 3, nprobe = 2)
+        .queryExecution.executedPlan.toString
+      assert(listsScan(plan).contains("dynamicpruningexpression(list_id"), head(plan))
+    }
+  }
+
+  // X97 filtered ANN: the attribute predicate must land IN the lists
+  // parquet scan (PushedFilters) — a side-table join would shuffle the
+  // whole index against the attribute table; the carried-attribute design
+  // prunes in the probe read itself
+  test("x97_filtered_pushdown: attribute predicate pushed into the lists parquet scan") {
+    implicit val sp: SparkSession = spark
+    withDir { root =>
+      val emb = Tables.load(spark, sfDir, "embeddings")
+        .filter(col("vec_id") < 500)
+        .withColumn("grp", col("vec_id") % 10)
+      val idx = AnnIndex.create(emb, s"$root/idx", k = 8, iters = 1, attrCols = Seq("grp"))
+      val q = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      val plan = AnnIndex.topKFiltered(idx, q, col("grp") === 7, k = 3, nprobe0 = 8)
+        .queryExecution.executedPlan.toString
+      val scan = listsScan(plan)
+      assert(scan.contains("PushedFilters: [") && scan.contains("EqualTo(grp,7)"), head(plan))
+    }
+  }
+}

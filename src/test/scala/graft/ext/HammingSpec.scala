@@ -35,6 +35,13 @@ class HammingSpec extends SparkSpec {
       } yield (il, ir, ham(hl, hr))).toSet
       assert(got === want, s"radius $r")
     }
+    // radius 0 has one chunk, so no pair is found twice and the plan skips
+    // the distinct's exchange
+    def exchanges(r: Int): Int = "Exchange".r.findAllIn(Hamming.pairsBetween64(
+        left.toDF("media_id", "sig"), right.toDF("media_id", "sig"),
+        "media_id", "sig", maxHamming = r)
+      .queryExecution.executedPlan.toString).size
+    assert(exchanges(0) === exchanges(1) - 1)
   }
 
   test("an id in both relations self-pairs at distance 0; NULL sigs skip") {

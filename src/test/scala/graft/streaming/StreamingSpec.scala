@@ -3,44 +3,59 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
-import graft.etl.HourlyAggregate
+import graft.etl.{JobRunner, JobSpec}
+
+/** An OEDI-shaped source: one file per building, each holding the
+  * building's whole multi-day 15-min series under `upgrade=0/state=AK`. */
+private object HourlyFixture {
+  val Buildings = 7
+  val Days = 2
+
+  def write(spark: SparkSession, src: String): StructType = {
+    import spark.implicits._
+    val t0 = Timestamp.valueOf("2024-05-01 00:00:00").getTime
+    (1L to Buildings.toLong).foreach { b =>
+      (0 until Days * 96).map(q =>
+        (new Timestamp(t0 + q * 900000L), b, (b * 7 + q) * 0.1, q % 5 + b * 0.3, 0, "AK"))
+        .toDF("timestamp", "bldg_id", "m", "out.m2", "upgrade", "state")
+        .coalesce(1).write.mode("append").partitionBy("upgrade", "state").parquet(src)
+    }
+    spark.read.parquet(src).schema
+  }
+
+  /** Stored hourly rows in the job's column order, sorted. */
+  def rows(df: DataFrame): Seq[Row] =
+    df.select("timestamp", "bldg_id_min", "timestamp_min", "m_mean", "`out.m2_mean`",
+        "upgrade", "state")
+      .orderBy("bldg_id_min", "timestamp").collect().toSeq
+}
 
 class StreamingSpec extends SparkSpec {
-  import spark.implicits._
 
-  test("streaming hourly aggregation equals batch on bounded input") {
-    val dir = Files.createTempDirectory("graft_stream").toString
-    def ts(s: String) = Timestamp.valueOf(s)
-    val rows = for (b <- Seq(1L, 2L); q <- 0 until 12)
-      yield (new Timestamp(ts("2024-05-01 00:00:00").getTime + q * 15 * 60 * 1000L),
-        b, (b * 10 + q % 4).toDouble)
-    // sentinel far in the future: advances the watermark past every real
-    // window so append mode emits them all on bounded input. ONE part
-    // file on purpose: co-loaded with real rows across several files,
-    // the sentinel could drain first and lateness-drop everything after
-    // it (watermark moves at batch end; a single file = a single batch).
-    val all = rows :+ ((ts("2024-05-02 12:00:00"), 99L, 0.0))
-    val df = all.toDF("timestamp", "bldg_id", "m")
-    df.coalesce(1).write.mode("overwrite").parquet(dir)
+  test("file stream in micro-batches equals JobRunner.run row for row") {
+    val root = Files.createTempDirectory("graft_stream").toString
+    val schema = HourlyFixture.write(spark, s"$root/src")
+    StreamingHourly.run(spark, s"$root/src", schema, s"$root/out", s"$root/ckpt",
+      maxFilesPerTrigger = 2)
+    // 7 files, 2 per trigger: four micro-batches
+    assert(BatchStore.ids(spark, s"$root/out", "batch_id").sorted === Seq(0L, 1L, 2L, 3L))
 
-    val stream = StreamingHourly.query(
-      spark, dir, df.schema, measureCols = Seq("m"), watermark = "2 hours")
-    val q = StreamingHourly.runBounded(stream, "stream_out")
-    q.stop()
-
-    val streamed = spark.table("stream_out")
-      .filter($"bldg_id_min" =!= 99L)
-      .select("timestamp", "bldg_id_min", "timestamp_min", "m_mean")
-      .orderBy("bldg_id_min", "timestamp")
-      .collect()
-    val batch = HourlyAggregate(df.filter($"bldg_id" =!= 99L), measureCols = Seq("m"))
-      .orderBy("bldg_id_min", "timestamp")
-      .collect()
-    assert(streamed.length === batch.length)
-    streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
+    val res = JobRunner.run(spark,
+      JobSpec("rel", "2024", "AK", Seq(0), s"$root/src", s"$root/nometa"),
+      s"$root/job", "run1")
+    val batch = HourlyFixture.rows(spark.read.parquet(res.dataOut))
+    val streamed = HourlyFixture.rows(spark.read.parquet(s"$root/out"))
+    assert(batch.length === HourlyFixture.Buildings * HourlyFixture.Days * 24)
+    assert(streamed === batch)
+    // each building's last hour is there: no group waits on a watermark
+    val last = Timestamp.valueOf("2024-05-02 23:00:00")
+    assert(streamed.count(_.getTimestamp(0) == last) === HourlyFixture.Buildings)
   }
 }
 
@@ -91,40 +106,42 @@ class HoppingWindowSpec extends SparkSpec {
 }
 
 class StreamingParquetSinkSpec extends SparkSpec {
-  import spark.implicits._
 
-  test("checkpointed parquet sink: restart resumes, no duplicate windows") {
+  test("restart after a failure in batch 2 equals a clean run") {
     val root = Files.createTempDirectory("graft_psink").toString
-    def ts(s: String) = Timestamp.valueOf(s)
-    def rows(b: Long, h: Int, v: Double) =
-      Seq((new Timestamp(ts("2024-05-01 00:00:00").getTime + h * 3600 * 1000L), b, v))
-    // run 1: hours 0-1 for building 1 + sentinel at hour 4 → watermark
-    // hour 2 (2 h delay) closes hours 0-1 but keeps later hours live
-    (rows(1L, 0, 1.0) ++ rows(1L, 1, 2.0) ++ rows(99L, 4, 0.0))
-      .toDF("timestamp", "bldg_id", "m")
-      .write.mode("append").parquet(s"$root/in")
-    val schema = spark.read.parquet(s"$root/in").schema
-    def stream() = StreamingHourly.query(
-      spark, s"$root/in", schema, measureCols = Seq("m"), watermark = "2 hours")
-    StreamingHourly.runToParquet(stream(), s"$root/out", s"$root/ckpt")
-    val afterFirst = spark.read.parquet(s"$root/out")
-      .filter($"bldg_id_min" =!= 99L).count()
-    assert(afterFirst === 2) // both closed hours emitted
+    val src = s"$root/src"
+    val schema = HourlyFixture.write(spark, src)
+    StreamingHourly.run(spark, src, schema, s"$root/clean", s"$root/clean_ckpt",
+      maxFilesPerTrigger = 2)
 
-    // run 2 (restart from checkpoint): hour 3 (inside the watermark) + a
-    // sentinel at hour 8 that closes it
-    (rows(1L, 3, 3.0) ++ rows(98L, 8, 0.0))
-      .toDF("timestamp", "bldg_id", "m")
-      .write.mode("append").parquet(s"$root/in")
-    StreamingHourly.runToParquet(stream(), s"$root/out", s"$root/ckpt")
-    val out = spark.read.parquet(s"$root/out")
-      .filter($"bldg_id_min" =!= 99L && $"bldg_id_min" =!= 98L)
-      .select($"timestamp", $"m_mean").orderBy($"timestamp")
-      .as[(Timestamp, Double)].collect()
-    // exactly one row per closed hour — the restart neither re-emitted old
-    // windows nor dropped the new one
-    assert(out.map(_._2).toSeq === Seq(1.0, 2.0, 3.0))
-    assert(out.map(_._1).distinct.length === 3)
+    // the first attempt of batch 2 stores its rows, then throws before
+    // Spark commits the batch; the restart replays batch 2 from the
+    // checkpoint and goes on to batch 3
+    var failed = false
+    val q = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 2)
+      .parquet(src)
+      .writeStream
+      .option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (b: Dataset[Row], id: Long) =>
+        StreamingHourly.processBatch(b, id, s"$root/out")
+        if (id == 2 && !failed) {
+          failed = true
+          throw new IllegalStateException("injected failure in batch 2")
+        }
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    intercept[StreamingQueryException](q.awaitTermination())
+    assert(failed)
+    assert(BatchStore.ids(spark, s"$root/out", "batch_id").sorted === Seq(0L, 1L, 2L))
+    StreamingHourly.run(spark, src, schema, s"$root/out", s"$root/ckpt",
+      maxFilesPerTrigger = 2)
+
+    val restarted = HourlyFixture.rows(spark.read.parquet(s"$root/out"))
+    assert(restarted === HourlyFixture.rows(spark.read.parquet(s"$root/clean")))
+    assert(restarted.map(r => (r.getLong(1), r.getTimestamp(0))).distinct.length ===
+      restarted.length)
   }
 }
 
