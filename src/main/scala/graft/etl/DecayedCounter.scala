@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * ALGEBRAIC under re-referencing — C(T') = C(T)·e^(−λ(T'−T)) + Σ_delta
   * e^(−λ(T'−ts)) — so the state is just (key, ref_us, dcount, dsum):
   * [[update]] decays the old state by one scalar factor and folds only
-  * the DELTA's rows; history is never rescanned ([[IncrementalAgg]]'s
-  * X33 contract, extended to recency weighting). Merging two states =
+  * the DELTA's rows; history is never rescanned (the X33 contract of
+  * [[MaterializedRollup.merge]], extended to recency weighting). Merging two states =
   * decay both to a common reference and add.
   *
   * Numerics: time is exact integer MICROSECONDS on both engine and

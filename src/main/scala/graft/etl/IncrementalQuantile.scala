@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** X64 — incremental QUANTILE maintenance: the percentile face of the
-  * incremental-rollup family ([[IncrementalAgg]] maintains
+  * incremental-rollup family ([[MaterializedRollup]] maintains
   * cnt/sum/min/max/mean algebraically; quantiles are not algebraic, so
   * they need a mergeable STATE — this one is a deterministic per-key
   * bottom-k row sample).

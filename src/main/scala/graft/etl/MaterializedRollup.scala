@@ -19,8 +19,19 @@ import graft.plans.RollupViewRewrite
   * shuffle); the result is KB–MB sized for dashboard-grade key sets, so
   * every rerouted query replaces a fact scan with a file read. Keep it
   * fresh by re-running [[createAndRegister]] after base loads, or
-  * incrementally with X33's IncrementalAgg (same schema: counts/sums
-  * merge by +, min/max by min/max).
+  * incrementally with [[applyDelta]].
+  *
+  * X33 — incremental rollup maintenance: this object also owns the one
+  * merge algebra over that schema ([[merge]]). Only ALGEBRAIC aggregates
+  * are maintainable this way (combine of partials ≡ aggregate of union —
+  * the property Spark's own partial/final hash aggregation relies on):
+  * counts and sums add, min/max take min/max, and a mean is derived as
+  * `sum_c / cnt_c` — over the NON-NULL values, which is what `avg(c)`
+  * means. Folding a delta is `merge(Seq(state, build(delta)))`: only the
+  * delta is aggregated, the history is never rescanned. Holistic
+  * aggregates (exact median, exact distinct) need the X13/X22 sketches;
+  * deletions need a rebuild of the affected partitions (min/max of a
+  * retracted row is not expressible from partials).
   */
 object MaterializedRollup {
 
@@ -34,15 +45,21 @@ object MaterializedRollup {
     base.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The merge algebra over the rollup schema — counts/sums add, min/max
-    * take min/max — shared by [[applyDelta]] and
-    * [[graft.streaming.StreamingRollup]] so the two maintenance paths can
-    * never diverge. */
-  def mergeAggs(measures: Seq[String]): Seq[org.apache.spark.sql.Column] =
-    sum(col("cnt")).as("cnt") +: measures.flatMap { c =>
+  /** The merge algebra over the rollup schema: the union of `states`
+    * (each a [[build]] output or an earlier merge, columns matched by
+    * name) re-aggregated per key — counts and sums add, min/max take
+    * min/max. The one merge behind [[applyDelta]] and
+    * [[graft.streaming.StreamingRollup]]'s compaction and queryable
+    * rollup, so the maintenance paths cannot diverge. */
+  def merge(states: Seq[DataFrame], keys: Seq[String],
+      measures: Seq[String]): DataFrame = {
+    val aggs = sum(col("cnt")).as("cnt") +: measures.flatMap { c =>
       Seq(sum(col(s"sum_$c")).as(s"sum_$c"), min(col(s"min_$c")).as(s"min_$c"),
         max(col(s"max_$c")).as(s"max_$c"), sum(col(s"cnt_$c")).as(s"cnt_$c"))
     }
+    states.reduce(_ unionByName _)
+      .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
 
   /** Crash-safe directory swap: the PREVIOUS copy is moved aside first,
     * so a failure at any step leaves either the old or the new rollup
@@ -105,11 +122,10 @@ object MaterializedRollup {
   }
 
   /** Append-only incremental refresh of the REGISTERED view `name`
-    * (X33's merge algebra lifted to the rollup schema): aggregate the
-    * delta's partials, merge with the existing rollup — counts and sums
-    * add, min/max take min/max — and atomically swap the file, then
-    * re-register so the rewrite sees the fresh file listing (the cached
-    * relation pins the old one). The delta must contain ONLY rows not yet
+    * through [[merge]]: aggregate the delta's partials, merge with the
+    * existing rollup — counts and sums add, min/max take min/max — and
+    * atomically swap the file, then re-register so the rewrite sees the
+    * fresh file listing (the cached relation pins the old one). The delta must contain ONLY rows not yet
     * reflected in the rollup (append-only; updates/deletes need a full
     * [[createAndRegister]] rebuild). Cost: one scan of the DELTA plus one
     * read of the KB-sized rollup — the base is never rescanned, which is
@@ -124,12 +140,9 @@ object MaterializedRollup {
         fs.location.rootPaths.head.toString
       case _ => throw new IllegalArgumentException(s"$name is not file-backed")
     }
-    val keyCols = v.keys.map(col)
-    val aggs = mergeAggs(v.measures)
     withoutRewrite(spark) {
-      val merged = spark.read.parquet(mvPath)
-        .unionByName(build(delta, v.keys, v.measures))
-        .groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+      val merged = merge(Seq(spark.read.parquet(mvPath),
+        build(delta, v.keys, v.measures)), v.keys, v.measures)
       val fs = new Path(mvPath)
         .getFileSystem(spark.sessionState.newHadoopConf())
       val tmp = mvPath + "__delta_tmp"

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{cosineSim, topCentroids}
@@ -216,13 +215,13 @@ object AnnIndex {
     * to its `nprobe` nearest lists and equi-joins the (partition-pruned)
     * lists scan. IVF-PQ indexes score by ADC over the stored codes
     * (squared L2 ascending, ties by id); raw IVF scores exact cosine
-    * (descending, ties by id) — each matching its batch-mode sibling
-    * ([[Pq.ivfPqTopK]] / [[Ivf.topK]]) so index and ad-hoc paths can
-    * never rank differently. */
+    * (descending, ties by id). Index and ad-hoc paths ([[Pq.ivfPqTopK]] /
+    * [[Ivf.topK]]) rank through the one [[Similarity.rankTopK]], so they
+    * cannot rank differently. */
   def topK(index: Index, queries: DataFrame, k: Int, nprobe: Int = 4,
       qidCol: String = "query_id", vecCol: String = "embedding")
       (implicit spark: SparkSession): DataFrame =
-    rankTopK(index,
+    Similarity.rankTopK(
       scoreProbed(lists(index), index, queries, lit(nprobe), qidCol, vecCol),
       k)
 
@@ -252,20 +251,6 @@ object AnnIndex {
     }
   }
 
-  /** Rank scored candidates to top-k per query — squared-L2 ascending
-    * for ADC, cosine descending for raw vectors, ties by id; matches the
-    * batch-mode siblings ([[Pq.ivfPqTopK]] / [[Ivf.topK]]) so index and
-    * ad-hoc paths can never rank differently. */
-  private def rankTopK(index: Index, scored: DataFrame, k: Int): DataFrame = {
-    val w = index.pq match {
-      case Some(_) => Window.partitionBy(col("query_id"))
-        .orderBy(col("dist"), col("id"))
-      case None => Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("id"))
-    }
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** FILTERED top-k per query: the FAISS-IDSelector / Milvus
     * filtered-search contract — return the k nearest index entries that
     * SATISFY an attribute predicate, not the survivors of a fixed-size
@@ -281,7 +266,8 @@ object AnnIndex {
     * eligible candidates (or nLists when no depth suffices; then the
     * result is EXACT over the eligible set, fewer than k rows only when
     * fewer eligible items exist), floored at `nprobe0` (the caller's
-    * quality knob, FAISS-nprobe style). Computed in ONE logical plan,
+    * quality knob, FAISS-nprobe style) — [[Ivf.probeDepth]], the rule
+    * the ad-hoc [[Ivf.topKFiltered]] shares. Computed in ONE logical plan,
     * nothing collected: the filtered lists aggregate to per-list
     * eligible COUNTS (row-level predicate ⇒ list-level counts are all
     * the widening needs — candidates ARE the eligible rows of probed
@@ -307,30 +293,12 @@ object AnnIndex {
       (implicit spark: SparkSession): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe0 >= 1, s"nprobe0 must be >= 1, got $nprobe0")
-    val nLists = index.coarse.k
     val fl = lists(index).filter(predicate)
     val qs = queries.select(col(qidCol).as("query_id"), col(s"`$vecCol`"))
-
-    // per-list eligible counts: one partial-aggregated pass over the
-    // predicate-pushed lists scan, ≤ nLists output rows
-    val perList = fl.groupBy(col("list_id")).agg(count(lit(1)).as("__c"))
-    // each query's full centroid ranking (nLists ints, row-local), its
-    // running eligible count, and the minimal sufficient depth
-    val ranked = qs.select(col("query_id"),
-      posexplode(topCentroids(col(s"`$vecCol`"), index.coarse.lit,
-        lit(nLists))).as(Seq("__rk", "list_id")))
-    val wcum = Window.partitionBy(col("query_id")).orderBy(col("__rk"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val depth = ranked
-      .join(broadcast(perList), Seq("list_id"), "left")
-      .withColumn("__cum", sum(coalesce(col("__c"), lit(0L))).over(wcum))
-      .groupBy(col("query_id"))
-      .agg(coalesce(min(when(col("__cum") >= k, col("__rk") + 1)),
-        lit(nLists)).cast("int").as("__d"))
-      .select(col("query_id"),
-        greatest(col("__d"), lit(math.min(nprobe0, nLists))).as("__np"))
+    val depth = Ivf.probeDepth(fl, qs, col(s"`$vecCol`"), index.coarse, k,
+      nprobe0)
     val qWithNp = qs.join(broadcast(depth), Seq("query_id"))
-    rankTopK(index,
+    Similarity.rankTopK(
       scoreProbed(fl, index, qWithNp, col("__np"), "query_id", vecCol), k)
   }
 
@@ -342,8 +310,9 @@ object AnnIndex {
     * primary store (the source table the corpus and every folded batch
     * came from; the index itself never stores floats) — for exact
     * squared-L2 re-ranking. At 100 TB the exact math touches
-    * shortlist/|corpus| of the raw floats; the rank/tie contract matches
-    * [[Pq.refineTopK]] so index and ad-hoc refined paths agree. Closes
+    * shortlist/|corpus| of the raw floats; the re-rank is [[Pq.refine]],
+    * the step [[Pq.refineTopK]] uses, so index and ad-hoc refined paths
+    * agree. Closes
     * the raw-ADC quality gap (measured on the sf0.01 corpus, AnnIndexSpec:
     * recall@10 0.31 raw ADC → 0.73 refined at shortlist 100, nprobe 8/16;
     * unprobed lists bound what refine can recover — raise nprobe, not
@@ -354,26 +323,8 @@ object AnnIndex {
       vecCol: String = "embedding")(implicit spark: SparkSession): DataFrame = {
     require(index.pq.nonEmpty, "topKRefined refines ADC ranks — IVF-PQ only")
     require(shortlist >= k, s"shortlist $shortlist < k=$k")
-    val cand = topK(index, queries, k = shortlist, nprobe, qidCol, vecCol)
-      .select(col("query_id"), col("id"))
-    // LEFT join + in-plan guard: a shortlist id missing from the caller's
-    // primary store (stale/partial `vectors`) must FAIL the query, not
-    // silently shrink the result — an inner join here would drop the row
-    // and hand back a plausible-looking top-k over whatever survived.
-    val withVec = cand.join(
-      vectors.select(col(idCol).as("id"), col(vecCol).as("cvec")), Seq("id"),
-      "left")
-    val q = queries.select(col(qidCol).as("query_id"), col(vecCol).as("qvec"))
-    val scored = withVec.join(broadcast(q), "query_id")
-      .select(col("query_id"), col("id"),
-        when(col("cvec").isNotNull, Pq.l2sq(col("cvec"), col("qvec")))
-          .otherwise(raise_error(concat(
-            lit("topKRefined: shortlist id missing from vectors "),
-            lit("(stale or partial primary store): id="),
-            col("id").cast("string"))))
-          .as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Pq.refine(topK(index, queries, k = shortlist, nprobe, qidCol, vecCol),
+      vectors, queries, k, idCol, qidCol, vecCol, "topKRefined")
   }
 
   /** FILTERED + REFINED search — the production IVF-PQ query path with
@@ -395,24 +346,9 @@ object AnnIndex {
     require(index.pq.nonEmpty,
       "topKRefinedFiltered refines ADC ranks — IVF-PQ only")
     require(shortlist >= k, s"shortlist $shortlist < k=$k")
-    val cand = topKFiltered(index, queries, predicate, k = shortlist,
-        nprobe0, qidCol, vecCol)
-      .select(col("query_id"), col("id"))
-    val withVec = cand.join(
-      vectors.select(col(s"`$idCol`").as("id"), col(s"`$vecCol`").as("cvec")),
-      Seq("id"), "left")
-    val q = queries.select(col(s"`$qidCol`").as("query_id"),
-      col(s"`$vecCol`").as("qvec"))
-    val scored = withVec.join(broadcast(q), "query_id")
-      .select(col("query_id"), col("id"),
-        when(col("cvec").isNotNull, Pq.l2sq(col("cvec"), col("qvec")))
-          .otherwise(raise_error(concat(
-            lit("topKRefinedFiltered: shortlist id missing from vectors "),
-            lit("(stale or partial primary store): id="),
-            col("id").cast("string"))))
-          .as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Pq.refine(topKFiltered(index, queries, predicate, k = shortlist,
+        nprobe0, qidCol, vecCol),
+      vectors, queries, k, idCol, qidCol, vecCol, "topKRefinedFiltered")
   }
 
   /** List-file compaction — X86 for the index. Every [[fold]] writes its

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
 
 import graft.ext.Multimodal.{MediaCodec, MediaRow}
 
@@ -187,22 +186,14 @@ object AudioDedup {
     * ≤ 13 bits while distinct clips stay ≥ 19 apart. */
   def nearDupPairs(fp: DataFrame, maxHamming: Int = 14,
       maxChunkFreq: Option[Int] = None): DataFrame =
-    Hamming.pairs64(fp, "media_id", "sig", maxHamming, maxChunkFreq)
-      .select(col("id_a").as("media_a"), col("id_b").as("media_b"),
-        col("hamming"))
+    Hamming.mediaNearDupPairs(fp, "sig", maxHamming, maxChunkFreq)
 
   /** Byte-identical duplicate pairs found PERCEPTUALLY: Hamming-0
     * banding candidates verified by PCM checksum equality. Recall 1 by
     * construction; precision 1 up to 64-bit checksum collision. The
     * oracle-checkable face (x85_audio_dedup). */
-  def exactDupPairs(fp: DataFrame, maxChunkFreq: Option[Int] = None): DataFrame = {
-    val h0 = Hamming.pairs64(fp, "media_id", "sig", maxHamming = 0, maxChunkFreq)
-    val cks = fp.select(col("media_id"), col("checksum"))
-    h0.join(cks.as("ca"), col("id_a") === col("ca.media_id"))
-      .join(cks.as("cb"), col("id_b") === col("cb.media_id"))
-      .filter(col("ca.checksum") === col("cb.checksum"))
-      .select(col("id_a").as("media_a"), col("id_b").as("media_b"))
-  }
+  def exactDupPairs(fp: DataFrame, maxChunkFreq: Option[Int] = None): DataFrame =
+    Hamming.mediaExactDupPairs(fp, "sig", maxChunkFreq)
 
   /** Per-block PCM checksum sequences for [[SegmentDedup]]: one row per
     * decodable clip, `(media_id, uri, keys: array<long>)` where keys(i)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Pigeonhole Hamming-distance pairing over ANY 64-bit fingerprint column
   * — the shared candidate-generation kernel behind SimHash text near-dup
-  * ([[SimHash]]) and perceptual image near-dup ([[ImageDedup]]).
+  * ([[SimHash]]) and perceptual media near-dup ([[ImageDedup]],
+  * [[AudioDedup]], [[VideoDedup]] — whose pair faces live here once).
   *
   * Split the 64-bit fingerprint into `maxHamming + 1` chunks: two
   * fingerprints within `maxHamming` bit flips MUST agree exactly on at
@@ -64,6 +65,35 @@ object Hamming {
     val r = banded(right, idCol, hashCol, maxHamming, maxChunkFreq).as("r")
     verified(l.join(r, col("l.chunk") === col("r.chunk") && col("l.key") === col("r.key")),
       "l", "r", maxHamming)
+  }
+
+  /** Perceptual near-dup pairs of a media fingerprint relation
+    * `(media_id, <hashCol>, …)` — the one body behind
+    * [[ImageDedup.nearDupPairs]], [[AudioDedup.nearDupPairs]] and
+    * [[VideoDedup.nearDupPairs]], which differ only in the hash column and
+    * the default radius: (media_a, media_b, hamming), exact for the radius. */
+  def mediaNearDupPairs(fp: DataFrame, hashCol: String, maxHamming: Int,
+      maxChunkFreq: Option[Int]): DataFrame =
+    pairs64(fp, "media_id", hashCol, maxHamming, maxChunkFreq)
+      .select(col("id_a").as("media_a"), col("id_b").as("media_b"),
+        col("hamming"))
+
+  /** Content-identical media pairs found PERCEPTUALLY — the one body
+    * behind the three modalities' `exactDupPairs`: radius-0 banding
+    * candidates over `hashCol`, verified by equality of the decoded
+    * content's `checksum`. Recall 1 by construction (identical content ⇒
+    * identical hash ⇒ every band chunk agrees); precision 1 up to 64-bit
+    * checksum collision. At radius 0 the single band IS the full hash, so
+    * with `maxChunkFreq` a duplicate group larger than the cap contributes
+    * zero pairs. (media_a, media_b). */
+  def mediaExactDupPairs(fp: DataFrame, hashCol: String,
+      maxChunkFreq: Option[Int]): DataFrame = {
+    val h0 = pairs64(fp, "media_id", hashCol, maxHamming = 0, maxChunkFreq)
+    val cks = fp.select(col("media_id"), col("checksum"))
+    h0.join(cks.as("ca"), col("id_a") === col("ca.media_id"))
+      .join(cks.as("cb"), col("id_b") === col("cb.media_id"))
+      .filter(col("ca.checksum") === col("cb.checksum"))
+      .select(col("id_a").as("media_a"), col("id_b").as("media_b"))
   }
 
   /** The shared tail of both pairings: (id_x, id_y, hamming) for the

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
 
 import graft.ext.Multimodal.{MediaCodec, MediaRow}
 
@@ -128,8 +127,7 @@ object ImageDedup {
     * boilerplate chunk buckets at corpus scale (see [[Hamming]]). */
   def nearDupPairs(fp: DataFrame, maxHamming: Int = 8,
       maxChunkFreq: Option[Int] = None): DataFrame =
-    Hamming.pairs64(fp, "media_id", "dhash", maxHamming, maxChunkFreq)
-      .select(col("id_a").as("media_a"), col("id_b").as("media_b"), col("hamming"))
+    Hamming.mediaNearDupPairs(fp, "dhash", maxHamming, maxChunkFreq)
 
   /** Byte/pixel-identical duplicate pairs, found PERCEPTUALLY: Hamming-0
     * banding candidates verified by decoded-pixel checksum equality.
@@ -139,14 +137,8 @@ object ImageDedup {
     * the production skew cap: at radius 0 the single band IS the full
     * hash, so a duplicate group larger than the cap contributes zero
     * pairs (the letterbox/boilerplate rule, closed-form replayable). */
-  def exactDupPairs(fp: DataFrame, maxChunkFreq: Option[Int] = None): DataFrame = {
-    val h0 = Hamming.pairs64(fp, "media_id", "dhash", maxHamming = 0, maxChunkFreq)
-    val cks = fp.select(col("media_id"), col("checksum"))
-    h0.join(cks.as("ca"), col("id_a") === col("ca.media_id"))
-      .join(cks.as("cb"), col("id_b") === col("cb.media_id"))
-      .filter(col("ca.checksum") === col("cb.checksum"))
-      .select(col("id_a").as("media_a"), col("id_b").as("media_b"))
-  }
+  def exactDupPairs(fp: DataFrame, maxChunkFreq: Option[Int] = None): DataFrame =
+    Hamming.mediaExactDupPairs(fp, "dhash", maxChunkFreq)
 
   /** Deterministic LOW-FREQUENCY grayscale PNG for specs and the x84
     * face: pixel luminance is a sum of two smooth sinusoids whose

@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * machinery), one anti-join / band-bucket-join against the index — the
   * index side is pre-hashed and pre-bucketed, the join is equi-keyed,
   * nothing is quadratic. Fold lineage is cut per batch with
-  * `localCheckpoint` in [[foldBatchesExact]]; callers doing their own
+  * `localCheckpoint` in the `foldBatches*` folds; callers doing their own
   * folds own that (a 10 000-batch uncut lineage will not plan).
   */
 object IncrementalDedup {
@@ -72,16 +72,23 @@ object IncrementalDedup {
     * rows. Equivalent to keeping each text's first (batch, id) — the
     * oracle-checked contract. */
   def foldBatchesExact(spark: SparkSession, batches: Seq[DataFrame],
-      idCol: String, textCol: String): DataFrame = {
+      idCol: String, textCol: String): DataFrame =
+    foldBatches(emptyExactIndex(spark), batches)(
+      addBatchExact(_, _, idCol, textCol))
+
+  /** The fold loop both `foldBatches*` share: from `empty`, run `step`
+    * (index, batch) → (survivors, updated index) over the batches in
+    * order, cutting the index lineage with `localCheckpoint` each step;
+    * returns the union of every batch's survivors. */
+  private def foldBatches(empty: DataFrame, batches: Seq[DataFrame])
+      (step: (DataFrame, DataFrame) => (DataFrame, DataFrame)): DataFrame = {
     require(batches.nonEmpty, "need at least one batch")
-    var index = emptyExactIndex(spark)
-    var out: Option[DataFrame] = None
-    batches.foreach { b =>
-      val (clean, updated) = addBatchExact(index, b, idCol, textCol)
+    var index = empty
+    batches.map { b =>
+      val (clean, updated) = step(index, b)
       index = updated.localCheckpoint()
-      out = Some(out.fold(clean)(_.unionByName(clean)))
-    }
-    out.get
+      clean
+    }.reduce(_ unionByName _)
   }
 
   // ----------------------------------------------------------- near-dup
@@ -199,16 +206,7 @@ object IncrementalDedup {
     * cutting index lineage each step; returns all surviving rows. */
   def foldBatchesHamming(spark: SparkSession, batches: Seq[DataFrame],
       maxHamming: Int, requireVerifyMatch: Boolean = false,
-      maxChunkFreq: Option[Int] = None): DataFrame = {
-    require(batches.nonEmpty, "need at least one batch")
-    var index = emptyHammingIndex(spark)
-    var out: Option[DataFrame] = None
-    batches.foreach { b =>
-      val (clean, updated) = addBatchHamming(index, b, maxHamming,
-        requireVerifyMatch, maxChunkFreq)
-      index = updated.localCheckpoint()
-      out = Some(out.fold(clean)(_.unionByName(clean)))
-    }
-    out.get
-  }
+      maxChunkFreq: Option[Int] = None): DataFrame =
+    foldBatches(emptyHammingIndex(spark), batches)(
+      addBatchHamming(_, _, maxHamming, requireVerifyMatch, maxChunkFreq))
 }

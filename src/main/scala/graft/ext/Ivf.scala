@@ -117,13 +117,9 @@ object Ivf {
       .select(col(idCol).as("id"), col(vecCol).as("cvec"), col("list_id"))
     val q = queries.select(col(qidCol).as("query_id"), col(vecCol).as("qvec"),
         explode(topCentroids(col(vecCol), model.lit, lit(nprobe))).as("list_id"))
-    val scored = c.join(q, "list_id")
+    Similarity.rankTopK(c.join(q, "list_id")
       .select(col("query_id"), col("id"),
-        cosineSim(col("cvec"), col("qvec")).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosineSim(col("cvec"), col("qvec")).as("score")), k)
   }
 
   /** FILTERED top-k, ad-hoc (non-persisted) sibling of
@@ -143,31 +139,40 @@ object Ivf {
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe0 >= 1, s"nprobe0 must be >= 1, got $nprobe0")
-    val nLists = model.k
     val c = assign(corpus, model, vecCol).filter(predicate)
       .select(col(s"`$idCol`").as("id"), col(s"`$vecCol`").as("cvec"),
         col("list_id"))
     val qs = queries.select(col(s"`$qidCol`").as("query_id"),
       col(s"`$vecCol`").as("qvec"))
+    val probed = qs.join(broadcast(probeDepth(c, qs, col("qvec"), model, k,
+        nprobe0)), Seq("query_id"))
+      .select(col("query_id"), col("qvec"),
+        explode(topCentroids(col("qvec"), model.lit, col("__np"))).as("list_id"))
+    Similarity.rankTopK(c.join(probed, "list_id")
+      .select(col("query_id"), col("id"),
+        cosineSim(col("cvec"), col("qvec")).as("score")), k)
+  }
 
-    def scored(q: DataFrame, npCol: Column): DataFrame = {
-      val probed = q.select(col("query_id"), col("qvec"),
-        explode(topCentroids(col("qvec"), model.lit, npCol)).as("list_id"))
-      c.join(probed, "list_id")
-        .select(col("query_id"), col("id"),
-          cosineSim(col("cvec"), col("qvec")).as("score"))
-    }
-
-    // exact minimal sufficient depth, one logical plan (see the
-    // AnnIndex.topKFiltered scaladoc): per-list eligible counts +
-    // running sum over each query's full centroid ranking
-    val perList = c.groupBy(col("list_id")).agg(count(lit(1)).as("__c"))
-    val ranked = qs.select(col("query_id"),
-      posexplode(topCentroids(col("qvec"), model.lit, lit(nLists)))
+  /** The one probe-depth rule of filtered search ([[topKFiltered]] here
+    * and [[AnnIndex.topKFiltered]]): `(query_id, __np)`, each query's
+    * EXACT MINIMAL depth — the smallest d whose d nearest lists hold
+    * ≥ k rows of `eligible` (nLists when no depth suffices), floored at
+    * `nprobe0`. One logical plan, nothing collected: `eligible` (rows
+    * carrying `list_id`) aggregates to per-list counts (≤ nLists rows,
+    * broadcast), each query explodes its full centroid ranking once
+    * (nLists tiny ints), and a running sum over that ranking finds the
+    * depth. See the AnnIndex scaladoc for the contract.
+    * @param queries one row per `query_id`; `qvec` is its vector */
+  private[ext] def probeDepth(eligible: DataFrame, queries: DataFrame,
+      qvec: Column, model: Model, k: Int, nprobe0: Int): DataFrame = {
+    val nLists = model.k
+    val perList = eligible.groupBy(col("list_id")).agg(count(lit(1)).as("__c"))
+    val ranked = queries.select(col("query_id"),
+      posexplode(topCentroids(qvec, model.lit, lit(nLists)))
         .as(Seq("__rk", "list_id")))
     val wcum = Window.partitionBy(col("query_id")).orderBy(col("__rk"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val depth = ranked
+    ranked
       .join(broadcast(perList), Seq("list_id"), "left")
       .withColumn("__cum", sum(coalesce(col("__c"), lit(0L))).over(wcum))
       .groupBy(col("query_id"))
@@ -175,10 +180,5 @@ object Ivf {
         lit(nLists)).cast("int").as("__d"))
       .select(col("query_id"),
         greatest(col("__d"), lit(math.min(nprobe0, nLists))).as("__np"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("id"))
-    scored(qs.join(broadcast(depth), Seq("query_id")), col("__np"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
   }
 }

@@ -109,7 +109,8 @@ object Pca {
     * per-batch sums), which is what makes PCA INCREMENTAL here: persist
     * the tiny state (d(d+3)/2 + 1 doubles), fold each arriving batch's
     * moments in, refit anytime — history is never rescanned, the same
-    * contract as [[graft.etl.IncrementalAgg]] / [[IncrementalDedup]]. */
+    * contract as [[graft.etl.MaterializedRollup.merge]] /
+    * [[IncrementalDedup]]. */
   final case class Moments(n: Long, sums: IndexedSeq[Double],
       prods: IndexedSeq[Double]) {
     def dim: Int = sums.length

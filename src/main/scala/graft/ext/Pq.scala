@@ -120,10 +120,8 @@ object Pq {
     val c = corpusCodes.select(col(idCol).as("id"), col("codes"))
     val q = queries.select(col(qidCol).as("query_id"),
       luts(col(vecCol), model).as("luts"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("query_id"), col("id"), adc(col("codes"), col("luts")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Similarity.rankTopK(c.crossJoin(broadcast(q))
+      .select(col("query_id"), col("id"), adc(col("codes"), col("luts")).as("dist")), k)
   }
 
   /** IVF-PQ: ADC scoring restricted to the query's `nprobe` nearest
@@ -142,10 +140,8 @@ object Pq {
       luts(col(vecCol), model).as("luts"),
       explode(graft.functions.VectorFunctions.topCentroids(
         col(vecCol), coarse.lit, lit(nprobe))).as("list_id"))
-    val scored = c.join(q, "list_id")
-      .select(col("query_id"), col("id"), adc(col("codes"), col("luts")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Similarity.rankTopK(c.join(q, "list_id")
+      .select(col("query_id"), col("id"), adc(col("codes"), col("luts")).as("dist")), k)
   }
 
   /** ADC shortlist + exact re-rank: the production PQ pattern. The code
@@ -160,16 +156,35 @@ object Pq {
       shortlist: Int = 100, idCol: String = "vec_id",
       qidCol: String = "query_id", vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist < k=$k")
-    val cand = adcTopK(encodeCorpus(corpus, model), queries, model,
-        k = shortlist, idCol, qidCol, vecCol)
-      .select(col("query_id"), col("id"))
-    val withVec = cand.join(
-      corpus.select(col(idCol).as("id"), col(vecCol).as("cvec")), "id")
-    val q = queries.select(col(qidCol).as("query_id"), col(vecCol).as("qvec"))
-    val scored = withVec.join(broadcast(q), "query_id")
-      .select(col("query_id"), col("id"), l2sq(col("cvec"), col("qvec")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    refine(adcTopK(encodeCorpus(corpus, model), queries, model,
+        k = shortlist, idCol, qidCol, vecCol),
+      corpus, queries, k, idCol, qidCol, vecCol, "refineTopK")
+  }
+
+  /** The one refine step of the PQ family ([[refineTopK]],
+    * [[AnnIndex.topKRefined]], [[AnnIndex.topKRefinedFiltered]]): the
+    * shortlist's `(query_id, id)` pairs fetch their raw vectors from
+    * `vectors` and re-rank by exact squared L2. LEFT join + in-plan
+    * guard: a shortlist id missing from `vectors` (a stale or partial
+    * primary store) FAILS the query, naming `caller` and the id, instead
+    * of silently shrinking the result — an inner join would drop the row
+    * and hand back a plausible-looking top-k over whatever survived. */
+  private[ext] def refine(shortlist: DataFrame, vectors: DataFrame,
+      queries: DataFrame, k: Int, idCol: String, qidCol: String,
+      vecCol: String, caller: String): DataFrame = {
+    val withVec = shortlist.select(col("query_id"), col("id")).join(
+      vectors.select(col(s"`$idCol`").as("id"), col(s"`$vecCol`").as("cvec")),
+      Seq("id"), "left")
+    val q = queries.select(col(s"`$qidCol`").as("query_id"),
+      col(s"`$vecCol`").as("qvec"))
+    Similarity.rankTopK(withVec.join(broadcast(q), "query_id")
+      .select(col("query_id"), col("id"),
+        when(col("cvec").isNotNull, l2sq(col("cvec"), col("qvec")))
+          .otherwise(raise_error(concat(
+            lit(s"$caller: shortlist id missing from vectors "),
+            lit("(stale or partial primary store): id="),
+            col("id").cast("string"))))
+          .as("dist")), k)
   }
 
   /** Exact brute-force squared-L2 top-k (same join/rank shape and
@@ -181,10 +196,8 @@ object Pq {
       vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
     val q = queries.select(col(qidCol).as("query_id"), col(vecCol).as("qvec"))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("query_id"), col("id"), l2sq(col("cvec"), col("qvec")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    Similarity.rankTopK(c.crossJoin(broadcast(q))
+      .select(col("query_id"), col("id"), l2sq(col("cvec"), col("qvec")).as("dist")), k)
   }
 
   /** Exact codebooks = the distinct subvectors themselves (hash-ordered,

@@ -35,13 +35,24 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"))
     val q = queries.select(col(qidCol).as("query_id"), col(vecCol).as("qvec"))
-    val scored = c.crossJoin(broadcast(q))
+    rankTopK(c.crossJoin(broadcast(q))
       .select(col("query_id"), col("id"),
-        cosineSim(col("cvec"), col("qvec")).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosineSim(col("cvec"), col("qvec")).as("score")), k)
+  }
+
+  /** The one per-query top-k rank step of the vector-search family
+    * ([[Ivf]], [[Pq]], [[AnnIndex]] and this object): `scored` carries
+    * `(query_id, id, score)` — ranked by score descending — or
+    * `(query_id, id, dist)` — ranked by distance ascending; ties go to
+    * the smaller id. Adds `rank` (1-based) and keeps `rank <= k`; Catalyst
+    * rewrites the rank filter to a WindowGroupLimit, so each shuffle
+    * partition keeps at most k rows per query. Every search path ranks
+    * here, so index and ad-hoc faces cannot rank differently. */
+  private[ext] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val metric =
+      if (scored.columns.contains("dist")) col("dist") else col("score").desc
+    val w = Window.partitionBy(col("query_id")).orderBy(metric, col("id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Exact top-k via the single-pass [[graft.functions.TopKByScore]]
@@ -127,15 +138,11 @@ object Similarity {
       .withColumn("bucket",
         explode(transform(typedlit(masks), m => col("b0").bitwiseXOR(m))))
       .drop("b0")
-    val cands = c.join(q, "bucket")
+    rankTopK(c.join(q, "bucket")
       .select(col("query_id"), col("id"), col("cvec"), col("qvec"))
       .dropDuplicates("query_id", "id")
       .select(col("query_id"), col("id"),
-        cosineSim(col("cvec"), col("qvec")).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("id"))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosineSim(col("cvec"), col("qvec")).as("score")), k)
   }
 
   /** X2 embedding-cosine near-dup pairs: corpus self-match through LSH

@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, NumericType}
   *
   * STALENESS: registering asserts the rollup reflects the base; refresh
   * after base changes ([[graft.etl.MaterializedRollup.createAndRegister]]
-  * re-runs, or maintain it incrementally with X33's IncrementalAgg). The
+  * re-runs, or maintain it incrementally with its `applyDelta`). The
   * registrar's word is additionally VERIFIED per query (round 11): the
   * view records a fingerprint of the base's file listing (names, sizes,
   * mtimes) at registration, and the rewrite compares it against the
@@ -54,8 +54,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, NumericType}
   * driver at plan time, so the check costs zero filesystem calls. An
   * out-of-band base mutation (ad-hoc overwrite, compaction, append)
   * changes the listing and the rewrite silently refuses — the query
-  * falls back to the fact scan, which is always correct. Gate:
-  * `spark.graft.rollupViewRewrite.verifyBase` (default ON); views
+  * falls back to the fact scan, which is always correct. Views
   * registered without a fingerprint skip the check (back-compat).
   *
   * Fixed point: the rewritten aggregate scans the rollup's path, which is
@@ -67,7 +66,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, NumericType}
 object RollupViewRewrite extends Rule[LogicalPlan] {
 
   val EnabledKey = "spark.graft.rollupViewRewrite"
-  val VerifyBaseKey = "spark.graft.rollupViewRewrite.verifyBase"
 
   /** A registered rollup: `mv` holds keys ++ cnt ++ per-measure partials
     * (sum_c, min_c, max_c, cnt_c) at `mvPath`, one row per distinct key
@@ -254,10 +252,8 @@ object RollupViewRewrite extends Rule[LogicalPlan] {
     // driver — zero filesystem calls). A mutated base (out-of-band
     // overwrite / append / compaction) silently disqualifies the view and
     // the query answers from the fact scan — always correct, never stale.
-    if (conf.getConfString(VerifyBaseKey, "true").toBoolean) {
-      v.baseFingerprint.foreach { registered =>
-        if (!baseRelFingerprint.contains(registered)) return None
-      }
+    v.baseFingerprint.foreach { registered =>
+      if (!baseRelFingerprint.contains(registered)) return None
     }
     // fresh MV attribute ids per use (several rewrites may share a view)
     val mvRel = v.mv.newInstance()

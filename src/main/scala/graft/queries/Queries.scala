@@ -1366,7 +1366,8 @@ object Queries {
         | FROM reach GROUP BY seed ORDER BY seed""".stripMargin)
   }
 
-  /** Q81 — incremental rollup maintenance via [[graft.etl.IncrementalAgg]]:
+  /** Q81 — incremental rollup maintenance via
+    * [[graft.etl.MaterializedRollup.merge]]:
     * the state is bootstrapped from pre-1996 orders and the later orders
     * are folded in as a delta (aggregate-the-delta + algebraic merge —
     * history is never rescanned). The oracle recomputes the rollup from
@@ -1377,16 +1378,15 @@ object Queries {
       (col("o_custkey") % 100).as("g"), col("o_totalprice").as("p"),
       col("o_orderdate"))
     val cutoff = lit("1996-01-01").cast("timestamp")
-    val state = graft.etl.IncrementalAgg.aggregate(
-      o.filter(col("o_orderdate") < cutoff), Seq("g"), Seq("p"))
-    val updated = graft.etl.IncrementalAgg.update(
-      state, o.filter(col("o_orderdate") >= cutoff), Seq("g"), Seq("p"))
-    graft.etl.IncrementalAgg.withDerived(updated, Seq("p"))
+    import graft.etl.MaterializedRollup.{build, merge}
+    val state = build(o.filter(col("o_orderdate") < cutoff), Seq("g"), Seq("p"))
+    val delta = build(o.filter(col("o_orderdate") >= cutoff), Seq("g"), Seq("p"))
+    merge(Seq(state, delta), Seq("g"), Seq("p"))
       .select(col("g"), col("cnt"),
         round(col("sum_p"), 2).as("sum_p"),
         round(col("min_p"), 2).as("min_p"),
         round(col("max_p"), 2).as("max_p"),
-        round(col("mean_p"), 4).as("mean_p"))
+        round(col("sum_p") / col("cnt_p"), 4).as("mean_p"))
       .orderBy(col("g"))
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.etl.HourlyAggregate
@@ -10,12 +10,12 @@ import graft.etl.HourlyAggregate
   *
   * The reference's incremental file pacing (asyncio queues, poison pills,
   * idle watchdog) maps to a file-source stream: `maxFilesPerTrigger`
-  * reproduces page-paced ingestion, each micro-batch runs the batch job's
-  * own transform ([[HourlyAggregate]], with the keys and measure columns
-  * `JobRunner` uses), and an idle-timeout listener reproduces the watchdog
-  * shutdown (reference `monitor.py:221-281`). There is
-  * no watermark and no streaming state: the unit of work is the FILE, as
-  * in [[graft.etl.JobRunner.runIncremental]].
+  * reproduces page-paced ingestion and each micro-batch runs the batch
+  * job's own transform ([[HourlyAggregate]], with the keys and measure
+  * columns `JobRunner` uses). The watchdog's shutdown is the
+  * `AvailableNow` trigger: [[run]] returns once the source drains. There
+  * is no watermark and no streaming state: the unit of work is the FILE,
+  * as in [[graft.etl.JobRunner.runIncremental]].
   *
   * Correctness precondition: aggregation groups must not span two
   * micro-batches. The reference's layout guarantees it (one building's
@@ -59,17 +59,4 @@ object StreamingHourly {
       HourlyAggregate(batch, measureCols = HourlyAggregate.measures(batch.schema),
         extraKeys = Seq("upgrade", "state").filter(batch.columns.contains)),
       outDir, batchId)
-
-  /** M4 idle watchdog: stop the query after `idleTimeoutMs` with no progress
-    * (no new input rows). The reference default is 5 minutes. */
-  class IdleTimeoutListener(query: => StreamingQuery, idleTimeoutMs: Long)
-      extends StreamingQueryListener {
-    @volatile private var lastData = System.currentTimeMillis()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      if (e.progress.numInputRows > 0) lastData = System.currentTimeMillis()
-      else if (System.currentTimeMillis() - lastData > idleTimeoutMs) query.stop()
-    }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-  }
 }

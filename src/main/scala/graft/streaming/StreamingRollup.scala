@@ -58,8 +58,6 @@ object StreamingRollup {
       partials.schema.add("batch_id", LongType))
 
     val compactedDir = partialsDir.stripSuffix("/") + "__compacted"
-    val keyCols = keys.map(col)
-    val aggs = MaterializedRollup.mergeAggs(measures)
     def snapshot(upto: Long): DataFrame =
       spark.read.parquet(s"$compactedDir/upto=$upto")
 
@@ -72,9 +70,8 @@ object StreamingRollup {
     if (foldable.size >= compactEvery) {
       val toFold = readPartials()
         .filter(col("batch_id").isin(foldable: _*)).drop("batch_id")
-      val folded = upto0.map(u => snapshot(u).unionByName(toFold))
-        .getOrElse(toFold)
-        .groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+      val folded = MaterializedRollup.merge(upto0.map(snapshot).toSeq :+ toFold,
+        keys, measures)
       // writer-scoped dynamic overwrite (never the session conf): the
       // staged `upto=` partition lands by one rename, so a reader of the
       // max upto never sees a partial snapshot
@@ -100,11 +97,11 @@ object StreamingRollup {
     // queryable rollup: max-upto snapshot + partials beyond it — cost is
     // O(compactEvery) small partitions + one KB snapshot, not O(#batches)
     val history = BatchStore.ids(spark, compactedDir, "upto").maxOption match {
-      case Some(u) => snapshot(u).unionByName(
+      case Some(u) => Seq(snapshot(u),
         readPartials().filter(col("batch_id") > u).drop("batch_id"))
-      case None => readPartials().drop("batch_id")
+      case None => Seq(readPartials().drop("batch_id"))
     }
-    val merged = history.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+    val merged = MaterializedRollup.merge(history, keys, measures)
     val tmp = mvPath + "__stream_tmp"
     merged.write.mode("overwrite").parquet(tmp)
     MaterializedRollup.swapDir(new org.apache.hadoop.fs.Path(mvPath)

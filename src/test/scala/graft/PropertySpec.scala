@@ -281,27 +281,46 @@ class RoundFivePropertySpec extends SparkSpec {
   }
 
   test("incremental agg: any 3-way slicing folds to the full recompute") {
-    val rowsG: Gen[List[(Long, Double)]] = Gen.nonEmptyListOf(
-      for { k <- Gen.choose(1L, 5L); v <- Gen.choose(-1e6, 1e6) } yield (k, v))
+    import graft.etl.MaterializedRollup.{build, merge}
+    // measure values include NULLs (a missing reading): `cnt` counts
+    // rows, `cnt_x` only the non-null values the mean divides by
+    val rowsG: Gen[List[(Long, Option[Double])]] = Gen.nonEmptyListOf(
+      for {
+        k <- Gen.choose(1L, 5L)
+        v <- Gen.option(Gen.choose(-1e6, 1e6))
+      } yield (k, v))
+    def state(rs: List[(Long, Option[Double])]) =
+      build(rs.toDF("k", "x"), Seq("k"), Seq("x"))
     forAllSeeded(rowsG) { rows =>
-      val full = graft.etl.IncrementalAgg.aggregate(
-        rows.toDF("k", "x"), Seq("k"), Seq("x")).orderBy("k").collect().toSeq
+      val full = state(rows).orderBy("k").collect().toSeq
       val (c1, c2) = (rows.length / 3, 2 * rows.length / 3)
-      val s0 = graft.etl.IncrementalAgg.aggregate(
-        rows.take(c1).toDF("k", "x"), Seq("k"), Seq("x"))
-      val folded = graft.etl.IncrementalAgg.update(
-        graft.etl.IncrementalAgg.update(s0,
-          rows.slice(c1, c2).toDF("k", "x"), Seq("k"), Seq("x")),
-        rows.drop(c2).toDF("k", "x"), Seq("k"), Seq("x"))
-        .orderBy("k").collect().toSeq
-      // counts/min/max exact; sums to float tolerance (association differs)
-      full.zip(folded).foreach { case (f, g) =>
+      val folded = merge(Seq(state(rows.take(c1)),
+          state(rows.slice(c1, c2)), state(rows.drop(c2))), Seq("k"), Seq("x"))
+        .orderBy("k")
+      def close(a: Any, b: Any): Boolean = (a, b) match {
+        case (x: Double, y: Double) =>
+          math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x))
+        case _ => a == b
+      }
+      // keys, counts, min, max exact; sums to float tolerance (association
+      // differs); an all-NULL key keeps NULL sum/min/max
+      assert(full.length === folded.count())
+      full.zip(folded.collect()).foreach { case (f, g) =>
         assert(f.getLong(0) === g.getLong(0))
         assert(f.getLong(1) === g.getLong(1))
-        assert(math.abs(f.getDouble(2) - g.getDouble(2)) <=
-          1e-9 * math.max(1.0, math.abs(f.getDouble(2))))
-        assert(f.getDouble(3) === g.getDouble(3))
-        assert(f.getDouble(4) === g.getDouble(4))
+        assert(close(f.get(2), g.get(2)), s"sum_x ${f.get(2)} vs ${g.get(2)}")
+        assert(f.get(3) === g.get(3))
+        assert(f.get(4) === g.get(4))
+        assert(f.getLong(5) === g.getLong(5))
+      }
+      // the mean derived from the folded state is avg() over all rows
+      val derived = folded.select($"k", ($"sum_x" / $"cnt_x").as("m"))
+        .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+      val avgs = rows.toDF("k", "x").groupBy("k").agg(avg("x"))
+        .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+      assert(derived.keySet === avgs.keySet)
+      avgs.foreach { case (k, a) =>
+        assert(close(a, derived(k)), s"key $k: avg $a vs derived ${derived(k)}")
       }
     }
   }

@@ -457,12 +457,15 @@ class AnnIndexSpec extends SparkSpec {
     def key(df: DataFrame) = df.select($"query_id", $"id", $"rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .sorted.toSeq
-    val viaIndex = key(
-      AnnIndex.topKFiltered(idx, fQueries, pred, k = 4, nprobe0 = 16))
-    val adHoc = key(
-      Ivf.topKFiltered(attrCorpus, fQueries, model, pred, k = 4,
-        nprobe0 = 16))
-    assert(viaIndex === adHoc)
+    // full depth, and a partial one where the minimal-depth rule decides
+    Seq(16, 1).foreach { np =>
+      val viaIndex = key(
+        AnnIndex.topKFiltered(idx, fQueries, pred, k = 4, nprobe0 = np))
+      val adHoc = key(
+        Ivf.topKFiltered(attrCorpus, fQueries, model, pred, k = 4,
+          nprobe0 = np))
+      assert(viaIndex === adHoc, s"nprobe0 = $np")
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
   }
 }
