@@ -12,7 +12,7 @@ import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -251,15 +251,6 @@ object SchemaEnforce {
       case _ => None
     }
   }
-
-  /** [[detectDS]] as an untyped frame (path, missing, extra, typeMismatch)
-    * — the shape a report sink or downstream SQL wants. */
-  def detectDF(
-      spark: SparkSession,
-      files: Seq[String],
-      declared: StructType,
-      partitionCols: Set[String] = PartitionCols): DataFrame =
-    detectDS(spark, files, declared, partitionCols).toDF()
 
   /** Driver-side convenience face (what the ledger embeds): the
     * lexicographically first `maxReport` drifted files. The cap is what

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** X73 — containment (asymmetric near-dup) detection: for document pair
@@ -35,32 +35,16 @@ object Containment {
     * Output: (id_a, id_b, na, nb, inter, containment_a, containment_b). */
   def pairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minContainment: Double = 0.9,
-      maxShingleFreq: Int = 1000): DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
-        transform(Dedup.shingles(col(textCol), n), s => xxhash64(s)).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-    val inv = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-    val filtered = inv.join(
-      inv.groupBy("s").agg(count(lit(1)).as("df_count"))
-        .filter(col("df_count") <= maxShingleFreq),
-      "s")
-    val a = filtered.as("a")
-    val b = filtered.as("b")
-    a.join(b, col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
-      .agg(count(lit(1)).as("inter"))
-      // + 1e-9 — the q44 boundary rule: inter/n is an exact rational
-      // that can land ON a .xxxx5 rounding boundary
+      maxShingleFreq: Int = 1000): DataFrame =
+    Dedup.shingleOverlap(df, idCol, textCol, n, Some(maxShingleFreq))
       .withColumn("containment_a",
-        round(col("inter").cast("double") / col("na") + lit(1e-9), 4))
+        Dedup.round4(col("inter").cast("double") / col("na")))
       .withColumn("containment_b",
-        round(col("inter").cast("double") / col("nb") + lit(1e-9), 4))
+        Dedup.round4(col("inter").cast("double") / col("nb")))
       .filter(greatest(col("containment_a"), col("containment_b"))
         >= minContainment)
       .select(col("id_a"), col("id_b"), col("na"), col("nb"), col("inter"),
         col("containment_a"), col("containment_b"))
-  }
 
   /** Subsumption dedup: drop every document whose shingle set is
     * (near-)contained in a LARGER document (more shingles; smaller id

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** X62 — cross-corpus near-duplicate JOIN: which documents of corpus A
   * have a near-duplicate in corpus B. The decontamination shape X4's
@@ -34,41 +33,15 @@ import org.apache.spark.sql.functions._
   */
 object CrossDedup {
 
-  private def hashedShingles(df: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-        array_sort(transform(
-          Dedup.shingles(col(textCol), n), s => xxhash64(s))).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-
-  private def inverted(sh: DataFrame, maxShingleFreq: Option[Int])
-      : DataFrame = {
-    val inv = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-    maxShingleFreq.fold(inv) { cap =>
-      inv.join(
-        inv.groupBy("s").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= cap).drop("__df"),
-        "s")
-    }
-  }
-
   /** Exact cross-corpus Jaccard join (recall 1 with the cap off). */
   def jaccardJoin(left: DataFrame, right: DataFrame,
       idL: String, textL: String, idR: String, textR: String,
       n: Int = 3, minJaccard: Double = 0.7,
-      maxShingleFreq: Option[Int] = Some(10000)): DataFrame = {
-    val a = inverted(hashedShingles(left, idL, textL, n), maxShingleFreq)
-      .select(col("s"), col("id").as("id_l"), col("n_sh").as("nl"))
-    val b = inverted(hashedShingles(right, idR, textR, n), maxShingleFreq)
-      .select(col("s"), col("id").as("id_r"), col("n_sh").as("nr"))
-    a.join(b, "s")
-      .groupBy(col("id_l"), col("id_r"), col("nl"), col("nr"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("nl") + col("nr") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_l"), col("id_r"), round(col("jaccard"), 4).as("jaccard"))
-  }
+      maxShingleFreq: Option[Int] = Some(10000)): DataFrame =
+    Dedup.overlapJaccard(
+      Dedup.shingleOverlapBetween(left, right, idL, textL, idR, textR, n,
+        maxShingleFreq),
+      "l", "r", minJaccard)
 
   /** MinHash-banded cross join for two corpus-sized sides: candidates
     * share an LSH band bucket, verification is the exact merge-based
@@ -76,23 +49,7 @@ object CrossDedup {
     * banding curve (tune `p.bands`/`p.numPerm` to the threshold). */
   def lshJoin(left: DataFrame, right: DataFrame,
       idL: String, textL: String, idR: String, textR: String,
-      p: Dedup.MinHashParams = Dedup.MinHashParams()): DataFrame = {
-    def side(df: DataFrame, idCol: String, textCol: String,
-        idOut: String, shOut: String): (DataFrame, DataFrame) = {
-      val sk = Dedup.sketch(df, idCol, textCol, p)
-      val bands = sk.select(col("id").as(idOut),
-        posexplode(col("bk")).as(Seq("band", "key")))
-      val sets = sk.select(col("id").as(idOut), col("shh").as(shOut))
-      (bands, sets)
-    }
-    val (bl, sl) = side(left, idL, textL, "id_l", "sh_l")
-    val (br, sr) = side(right, idR, textR, "id_r", "sh_r")
-    bl.join(br, Seq("band", "key"))
-      .select(col("id_l"), col("id_r")).distinct()
-      .join(sl, "id_l").join(sr, "id_r")
-      .withColumn("jaccard",
-        graft.functions.HashFunctions.jaccardSorted(col("sh_l"), col("sh_r")))
-      .filter(col("jaccard") >= p.threshold)
-      .select(col("id_l"), col("id_r"), round(col("jaccard"), 4).as("jaccard"))
-  }
+      p: Dedup.MinHashParams = Dedup.MinHashParams()): DataFrame =
+    Dedup.nearDupPairsBetween(Dedup.sketch(left, idL, textL, p),
+      Dedup.sketch(right, idR, textR, p), p)
 }

@@ -21,11 +21,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- exact
 
-  /** Exact dedup on explicit columns (X1): `dropDuplicates` — hash shuffle
-    * on the named columns, first-seen row wins per group. */
-  def exact(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.dropDuplicates(cols)
-
   /** Exact content dedup with a deterministic winner: keeps the row with the
     * minimum `idCol` per identical `textCol`. Shuffles (hash64, length)
     * instead of the full text — at 100 TB the text column never moves. */
@@ -98,17 +93,6 @@ object Dedup {
           i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
     }
 
-  /** MinHash signature of a string-shingle array: each shingle is
-    * string-hashed ONCE (builtin xxhash64), then the per-permutation
-    * min-loop runs inside the native codegen'd
-    * [[graft.functions.MinHashSignature]] kernel — the O(numPerm·|shingles|)
-    * inner loop never touches interpreted higher-order-function evaluation.
-    * (The pipeline in [[candidatePairs]]/[[nearDupPairs]] skips the string
-    * stage entirely and feeds the kernel pre-hashed sets.) */
-  def minhashSignature(shingleArr: Column, numPerm: Int): Column =
-    graft.functions.HashFunctions.minhashSignature(
-      transform(shingleArr, s => xxhash64(s)), numPerm)
-
   /** LSH band keys: hash of each signature slice. Output: array of `bands`
     * longs; equal element b ⇒ candidate pair in band b. letCol-bound: the
     * signature is computed once, not once per band. */
@@ -119,8 +103,13 @@ object Dedup {
         b => xxhash64(b, concat_ws(",", slice(sig, b * p.rowsPerBand + 1, lit(p.rowsPerBand)))))
     }
 
+  /** Sorted 64-bit hashes of [[shingles]]: the one hashed shingle set
+    * behind the MinHash sketch and the inverted index. */
+  private def shingleHashes(text: Column, n: Int): Column =
+    array_sort(transform(shingles(text, n), s => xxhash64(s)))
+
   /** (id, sorted shingle-hash array, band-key array) — the sketch table
-    * every downstream stage (banding self-join, Jaccard verify) reads.
+    * every downstream stage (banding join, Jaccard verify) reads.
     * Shingle strings are hashed to sorted 64-bit sets immediately:
     * signatures come from the same hashes, and the verify stage compares
     * hash-sets with the merge-based [[graft.functions.JaccardSorted]]
@@ -128,65 +117,68 @@ object Dedup {
     * the materialization you want anyway: sketches are ~1% of the text size
     * and are consumed multiple times.
     *
-    * Lazy and UNPERSISTED: callers composing [[candidatePairsFromSketch]] /
-    * [[nearDupPairsFromSketch]] own the cache lifecycle. The convenience
-    * entry points ([[candidatePairs]], [[nearDupPairs]]) cache it, force the
-    * (small) pair result, and unpersist — nothing outlives the call. */
+    * Lazy and UNPERSISTED: callers composing [[nearDupPairsFromSketch]]
+    * own the cache lifecycle. The convenience entry point
+    * ([[nearDupPairs]]) caches it, forces the (small) pair result, and
+    * unpersists — nothing outlives the call. */
   def sketch(df: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame =
-    df.select(
-        col(idCol).as("id"),
-        array_sort(transform(
-          shingles(col(textCol), p.shingleSize), s => xxhash64(s))).as("shh"))
+    df.select(col(idCol).as("id"),
+        shingleHashes(col(textCol), p.shingleSize).as("shh"))
       .withColumn("bk", bandKeys(
         graft.functions.HashFunctions.minhashSignature(col("shh"), p.numPerm), p))
-
-  /** Candidate pairs (idA < idB) that share at least one LSH band bucket.
-    * EAGER: executes the LSH pipeline at call time and returns the (small)
-    * pair set checkpoint-backed, so the sketch cache can be released before
-    * returning. Callers that need a lazy plan (staged execution, plan
-    * inspection) compose [[sketch]] + [[candidatePairsFromSketch]] and own
-    * the cache lifecycle. */
-  def candidatePairs(df: DataFrame, idCol: String, textCol: String,
-      p: MinHashParams = MinHashParams()): DataFrame =
-    withCachedSketch(df, idCol, textCol, p)(candidatePairsFromSketch)
-
-  def candidatePairsFromSketch(sketch: DataFrame): DataFrame = {
-    val exploded = sketch
-      .select(col("id"), posexplode(col("bk")).as(Seq("band", "key")))
-    val a = exploded.as("a")
-    val b = exploded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key")
-        && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
 
   /** Near-dup pairs with exact Jaccard verification over shingle-hash sets:
     * candidates from LSH banding, then joins back to the cached sketch
     * table and a single merge pass per pair
     * ([[graft.functions.JaccardSorted]]). Identical results to string-set
     * Jaccard up to 64-bit hash collisions (~2^-64 per shingle pair).
-    * EAGER — see [[candidatePairs]]; lazy variant:
-    * [[nearDupPairsFromSketch]]. */
+    * EAGER: the (small) pair set returns checkpoint-backed and the sketch
+    * cache is released; lazy variant: [[nearDupPairsFromSketch]]. */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame =
     withCachedSketch(df, idCol, textCol, p)(nearDupPairsFromSketch(_, p))
 
+  /** Self face of the band join: (id_a, id_b, jaccard), id_a < id_b. */
   def nearDupPairsFromSketch(sketch: DataFrame,
       p: MinHashParams = MinHashParams()): DataFrame = {
-    val sh = sketch.select(col("id"), col("shh"))
-    candidatePairsFromSketch(sketch)
-      .join(sh.toDF("id_a", "sh_a"), "id_a")
-      .join(sh.toDF("id_b", "sh_b"), "id_b")
-      .withColumn("jaccard",
-        graft.functions.HashFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= p.threshold)
-      // +1e-9 before ROUND (the q44 guard): Jaccard is an exact rational
-      // |∩|/|∪| that can land ON a .xxxx5 boundary, where engines'
-      // rounding modes disagree
-      .select(col("id_a"), col("id_b"),
-        round(col("jaccard") + lit(1e-9), 4).as("jaccard"))
+    val bands = banded(sketch)
+    val a = bands.as("a")
+    val b = bands.as("b")
+    bandVerified(a.join(b, col("a.band") === col("b.band")
+        && col("a.key") === col("b.key") && col("a.id") < col("b.id")),
+      "a", "b", sketch, sketch, p)
+  }
+
+  /** Cross face of the band join over two [[sketch]] tables: (id_l, id_r,
+    * jaccard), no id ordering — an id on both sides pairs with itself. */
+  private[ext] def nearDupPairsBetween(left: DataFrame, right: DataFrame,
+      p: MinHashParams): DataFrame = {
+    val l = banded(left).as("l")
+    val r = banded(right).as("r")
+    bandVerified(l.join(r, col("l.band") === col("r.band")
+        && col("l.key") === col("r.key")), "l", "r", left, right, p)
+  }
+
+  /** Shared banding stage: (id, band, key) — the hash sets stay out of the
+    * join. */
+  private def banded(sketch: DataFrame): DataFrame =
+    sketch.select(col("id"), posexplode(col("bk")).as(Seq("band", "key")))
+
+  /** Shared verify stage: the distinct id pairs of the banded sides aliased
+    * `x` and `y` (a pair sharing several bands is verified once), their
+    * hash sets joined back from `sx` and `sy`, one merge per pair. */
+  private def bandVerified(cand: DataFrame, x: String, y: String,
+      sx: DataFrame, sy: DataFrame, p: MinHashParams): DataFrame = {
+    def sets(sk: DataFrame, s: String): DataFrame =
+      sk.select(col("id").as(s"id_$s"), col("shh").as(s"sh_$s"))
+    keepJaccard(
+      cand.select(col(s"$x.id").as(s"id_$x"), col(s"$y.id").as(s"id_$y"))
+        .distinct()
+        .join(sets(sx, x), s"id_$x").join(sets(sy, y), s"id_$y"),
+      x, y,
+      graft.functions.HashFunctions.jaccardSorted(col(s"sh_$x"), col(s"sh_$y")),
+      p.threshold)
   }
 
   /** Cache the sketch for the duration of `f`'s plan, force the (small) pair
@@ -212,6 +204,72 @@ object Dedup {
       (ck, obs.get("n").asInstanceOf[Long])
     } finally sk.unpersist(false)
   }
+
+  // ------------------------------------------------ shingle overlap
+
+  /** Self face of the inverted-index overlap, behind [[NgramJaccard]] and
+    * [[Containment]]: (id_a, id_b, na, nb, inter) — distinct-shingle counts
+    * and the shared count of every pair id_a < id_b sharing a shingle.
+    * `maxShingleFreq` drops shingles of more than F documents (which can
+    * only LOWER an overlap); `None` keeps recall exactly 1. */
+  private[ext] def shingleOverlap(df: DataFrame, idCol: String,
+      textCol: String, n: Int, maxShingleFreq: Option[Int]): DataFrame = {
+    val index = shingleIndex(df, idCol, textCol, n, maxShingleFreq)
+    val a = index.as("a")
+    val b = index.as("b")
+    overlapCounts(a.join(b, col("a.s") === col("b.s") && col("a.id") < col("b.id")),
+      "a", "b")
+  }
+
+  /** Cross face of [[shingleOverlap]], behind [[CrossDedup.jaccardJoin]]:
+    * (id_l, id_r, nl, nr, inter), no id ordering, each side capped alone. */
+  private[ext] def shingleOverlapBetween(left: DataFrame, right: DataFrame,
+      idL: String, textL: String, idR: String, textR: String, n: Int,
+      maxShingleFreq: Option[Int]): DataFrame = {
+    val l = shingleIndex(left, idL, textL, n, maxShingleFreq).as("l")
+    val r = shingleIndex(right, idR, textR, n, maxShingleFreq).as("r")
+    overlapCounts(l.join(r, col("l.s") === col("r.s")), "l", "r")
+  }
+
+  /** (id_x, id_y, jaccard) of an overlap with Jaccard >= `minJaccard`. */
+  private[ext] def overlapJaccard(overlap: DataFrame, x: String, y: String,
+      minJaccard: Double): DataFrame =
+    keepJaccard(overlap, x, y,
+      col("inter").cast("double") / (col(s"n$x") + col(s"n$y") - col("inter")),
+      minJaccard)
+
+  /** Shared inverted-index stage: (s, id, n_sh) per document and distinct
+    * shingle hash, optionally capped at `maxShingleFreq` documents. */
+  private def shingleIndex(df: DataFrame, idCol: String, textCol: String,
+      n: Int, maxShingleFreq: Option[Int]): DataFrame = {
+    val index = df
+      .select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("sh"))
+      .select(col("id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("s"))
+    maxShingleFreq.fold(index) { cap =>
+      index.join(
+        index.groupBy("s").agg(count(lit(1)).as("__df"))
+          .filter(col("__df") <= cap).select(col("s")),
+        "s")
+    }
+  }
+
+  /** Shared counting stage over the joined indexes aliased `x` and `y`. */
+  private def overlapCounts(cand: DataFrame, x: String, y: String): DataFrame =
+    cand.groupBy(col(s"$x.id").as(s"id_$x"), col(s"$y.id").as(s"id_$y"),
+        col(s"$x.n_sh").as(s"n$x"), col(s"$y.n_sh").as(s"n$y"))
+      .agg(count(lit(1)).as("inter"))
+
+  /** (id_x, id_y, jaccard) with `jaccard` >= `minJaccard`, rounded by [[round4]]. */
+  private def keepJaccard(pairs: DataFrame, x: String, y: String,
+      jaccard: Column, minJaccard: Double): DataFrame =
+    pairs.withColumn("jaccard", jaccard)
+      .filter(col("jaccard") >= minJaccard)
+      .select(col(s"id_$x"), col(s"id_$y"), round4(col("jaccard")).as("jaccard"))
+
+  /** 4-place rounding of an exact rational score, which can land ON a
+    * .xxxx5 boundary where engines' rounding modes disagree: + 1e-9 first
+    * (the q44 guard; the oracle SQL adds it too). */
+  private[ext] def round4(x: Column): Column = round(x + lit(1e-9), 4)
 
   // ------------------------------------------------- cluster merge / dedup
 
@@ -556,7 +614,13 @@ object Dedup {
   }
 
   /** Full near-dup dedup: keep the min-id representative of every near-dup
-    * cluster, pass through everything unclustered. */
+    * cluster, pass through everything unclustered.
+    *
+    * Building the returned DataFrame launches Spark jobs: the cached
+    * sketch is read by the pair checkpoint, whose row count is observed on
+    * that same job, and [[connectedComponents]] then collects the pairs
+    * (or runs its distributed loop past `driverEdgeLimit`) — all inside
+    * this call, before any action on the result. */
   def dedupNear(df: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame = {
     // r16: the pair relation is localCheckpoint-backed (eager,

@@ -104,24 +104,22 @@ object IncrementalDedup {
     * updated index). A batch document survives iff it wins its
     * within-batch near-dup component (min id, [[Dedup.dedupNear]]
     * semantics) AND no band-bucket candidate from the index verifies at
-    * `p.threshold` Jaccard. ALL batch sketches join the index. */
+    * `p.threshold` Jaccard. ALL batch sketches join the index.
+    *
+    * Building the returned pair launches Spark jobs: the within-batch
+    * [[Dedup.dedupNear]] runs its sketch-cached pair checkpoint and its
+    * connected-components collect inside this call, before any action on
+    * the result. */
   def addBatchNear(index: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, p: Dedup.MinHashParams = Dedup.MinHashParams())
       : (DataFrame, DataFrame) = {
     val withinClean = Dedup.dedupNear(batch, idCol, textCol, p)
 
     val batchSketch = Dedup.sketch(batch, idCol, textCol, p)
-    // band-bucket candidates batch × history: explode both band-key
-    // arrays, equi-join per (band position, key) — same banding equi-join
-    // as the self-dedup path, never all-pairs
-    val b = batchSketch.select(col("id").as("bid"), col("shh").as("bshh"),
-      posexplode(col("bk")).as(Seq("band", "key")))
-    val h = index.select(col("id").as("hid"), col("shh").as("hshh"),
-      posexplode(col("bk")).as(Seq("band", "key")))
-    val dupAgainstHistory = b.join(h, Seq("band", "key"))
-      .filter(graft.functions.HashFunctions.jaccardSorted(
-        col("bshh"), col("hshh")) >= p.threshold)
-      .select(col("bid").as("__dup_id")).distinct()
+    // batch × history: the cross face of the band join, each candidate
+    // pair verified once — never all-pairs
+    val dupAgainstHistory = Dedup.nearDupPairsBetween(batchSketch, index, p)
+      .select(col("id_l").as("__dup_id")).distinct()
 
     val clean = withinClean.join(dupAgainstHistory,
       withinClean(idCol) === col("__dup_id"), "left_anti")

@@ -72,29 +72,12 @@ object SimHash {
   */
 object NgramJaccard {
 
+  /** (id_a, id_b, jaccard) at Jaccard >= `minJaccard`; shingles are
+    * 64-bit hashed, so counts match strings up to 2^-64 collisions. */
   def pairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minJaccard: Double = 0.7,
-      maxShingleFreq: Int = 1000): DataFrame = {
-    // shingles hashed to 64-bit immediately: the inverted index joins and
-    // groups on 8-byte keys, never strings (same counts up to 2^-64
-    // collisions)
-    val sh = df.select(col(idCol).as("id"),
-        transform(Dedup.shingles(col(textCol), n), s => xxhash64(s)).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-    val inv = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-    val filtered = inv.join(
-      inv.groupBy("s").agg(count(lit(1)).as("df_count"))
-        .filter(col("df_count") <= maxShingleFreq),
-      "s")
-    val a = filtered.as("a")
-    val b = filtered.as("b")
-    a.join(b, col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
+      maxShingleFreq: Int = 1000): DataFrame =
+    Dedup.overlapJaccard(
+      Dedup.shingleOverlap(df, idCol, textCol, n, Some(maxShingleFreq)),
+      "a", "b", minJaccard)
 }

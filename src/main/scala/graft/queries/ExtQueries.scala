@@ -4429,7 +4429,7 @@ object ExtQueries {
         |    len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS na, len(b.s) AS nb
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
         | SELECT id_a, id_b,
-        |   round(CAST(inter AS DOUBLE) / (na + nb - inter), 4) AS jaccard
+        |   round(CAST(inter AS DOUBLE) / (na + nb - inter) + 1e-9, 4) AS jaccard
         | FROM pairs
         | WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.7
         | ORDER BY id_a, id_b""",
@@ -5248,7 +5248,7 @@ object ExtQueries {
         |    len(c.s) AS nc
         |  FROM shb b CROSS JOIN shc c)
         | SELECT id_l, id_r,
-        |   round(CAST(inter AS DOUBLE) / (nb + nc - inter), 4) AS jaccard
+        |   round(CAST(inter AS DOUBLE) / (nb + nc - inter) + 1e-9, 4) AS jaccard
         | FROM pairs WHERE CAST(inter AS DOUBLE) / (nb + nc - inter) >= 0.5
         | ORDER BY id_l, id_r""",
     // same markup synthesis, same RE2-safe patterns; DuckDB regexp_replace

@@ -277,7 +277,7 @@ class JobRunnerSpec extends SparkSpec {
       StructField("m", DoubleType)))
 
     // sink face: a frame you aggregate/write, never collect
-    val report = SchemaEnforce.detectDF(spark, all, declared)
+    val report = SchemaEnforce.detectDS(spark, all, declared).toDF()
     assert(report.count() === 48L)
     val byMissing = report.selectExpr("explode(missing) AS miss")
       .groupBy($"miss").count().collect()

@@ -69,4 +69,23 @@ class CrossDedupSpec extends SparkSpec {
     // identical docs share every band: the sure catch
     assert(lsh.contains((1L, 10L)))
   }
+
+  test("self and cross faces agree: the cross join of a corpus with itself, above the diagonal") {
+    val docs = bench.toDF("doc_id", "text").unionByName(corpus.toDF("doc_id", "text"))
+    def pairs(df: DataFrame): Set[(Long, Long, Double)] =
+      df.as[(Long, Long, Double)].collect().toSet
+    def upper(cross: DataFrame): Set[(Long, Long, Double)] =
+      pairs(cross.filter($"id_l" < $"id_r"))
+
+    val exactSelf = pairs(NgramJaccard.pairs(docs, "doc_id", "text",
+      maxShingleFreq = Int.MaxValue))
+    assert(exactSelf.nonEmpty)
+    assert(upper(CrossDedup.jaccardJoin(docs, docs, "doc_id", "text",
+      "doc_id", "text", maxShingleFreq = None)) === exactSelf)
+
+    val lshSelf = pairs(Dedup.nearDupPairs(docs, "doc_id", "text"))
+    assert(lshSelf.nonEmpty)
+    assert(upper(CrossDedup.lshJoin(docs, docs, "doc_id", "text",
+      "doc_id", "text")) === lshSelf)
+  }
 }

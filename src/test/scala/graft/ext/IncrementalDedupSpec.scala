@@ -1,6 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.types.ArrayType
 
 import graft.SparkSpec
 
@@ -60,6 +62,24 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(ids(c1) === Set(1L))
     val (c2, _) = IncrementalDedup.addBatchNear(i1, b2, "doc_id", "text", p)
     assert(ids(c2) === Set(3L), "near copy of batch-1 doc must be removed")
+  }
+
+  test("near-dup: the batch × history band join ships no shingle-hash arrays") {
+    val (_, i1) = IncrementalDedup.addBatchNear(
+      IncrementalDedup.emptyNearIndex(spark, "doc_id", "text", p),
+      Seq((1L, base)).toDF("doc_id", "text"), "doc_id", "text", p)
+    val (c2, _) = IncrementalDedup.addBatchNear(i1,
+      Seq((2L, nearCopy), (3L, other)).toDF("doc_id", "text"), "doc_id", "text", p)
+    val bandJoins = c2.queryExecution.optimizedPlan.collect {
+      case j: Join if j.condition.exists { c =>
+        val names = c.references.map(_.name).toSet
+        names("band") && names("key")
+      } => j
+    }
+    assert(bandJoins.nonEmpty, c2.queryExecution.optimizedPlan.toString)
+    for (j <- bandJoins; side <- Seq(j.left, j.right))
+      assert(!side.output.exists(_.dataType.isInstanceOf[ArrayType]),
+        s"band join input carries an array: ${side.output.mkString(", ")}")
   }
 
   // sliding-window chain: consecutive docs share 20 of 30 tokens
