@@ -55,10 +55,8 @@ object Bench {
     // 11.2 s focused at sf100 — §6.13). Clearing the cache and forcing a
     // GC lets the ContextCleaner reap dead shuffle/broadcast state so
     // every suite row is individually quotable. Runs OUTSIDE the timed
-    // window; disable with SPARK_GRAFT_BENCH_NO_ISOLATE=1 to reproduce
-    // the old adjacency-coupled behavior.
-    val isolate = !sys.env.get("SPARK_GRAFT_BENCH_NO_ISOLATE").contains("1")
-    def isolateRow(): Unit = if (isolate) {
+    // window.
+    def isolateRow(): Unit = {
       spark.catalog.clearCache()
       System.gc()
       Thread.sleep(200) // let the async cleaner drain before the next row

@@ -41,9 +41,6 @@ object JobRunner {
     * A scheme-less path resolves against `fs.defaultFS` when a conf is
     * given — on a cluster whose default filesystem IS an object store,
     * "/warehouse/out" must still get the object-store contract. */
-  def isObjectStore(path: String): Boolean =
-    Option(new Path(path).toUri.getScheme).exists(objectStoreSchemes.contains)
-
   def isObjectStore(path: String, conf: org.apache.hadoop.conf.Configuration): Boolean = {
     val scheme = Option(new Path(path).toUri.getScheme)
       .orElse(Option(org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme))

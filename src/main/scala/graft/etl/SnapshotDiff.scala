@@ -85,12 +85,10 @@ object SnapshotDiff {
     * fall back to the generic [[diff]].
     *
     * The delta subtree is consumed twice (sketch build + content
-    * compare), so by default (`materializeDelta = true`) it is
-    * localCheckpointed internally before first use — an expensive lazy
-    * delta can never be silently recomputed. Callers that already hold
-    * a materialized/checkpointed delta (the usual production case: the
-    * applied change set is an input file) pass `materializeDelta =
-    * false` to skip the redundant persist.
+    * compare), so it is materialized once before first use
+    * ([[graft.sources.Formats.materialize]]) — an expensive lazy delta
+    * can never be silently recomputed, and a delta that is already
+    * checkpointed is used as is, with no second checkpoint job.
     *
     * Contract (same as [[Upsert.upsert]]): delta keys are unique; NULL
     * key components match null-safely on both paths. Delta must carry
@@ -101,10 +99,9 @@ object SnapshotDiff {
     * @param numBits Bloom size in bits; the 2^24 default (2 MB) holds
     *   ~2M delta keys at ~1% fpp — size up with the delta. */
   def auditDelta(base: DataFrame, rawDelta: DataFrame,
-      keys: Seq[String], numBits: Int = 1 << 24,
-      materializeDelta: Boolean = true): DataFrame = {
+      keys: Seq[String], numBits: Int = 1 << 24): DataFrame = {
     require(keys.nonEmpty, "at least one key column")
-    val delta = if (materializeDelta) rawDelta.localCheckpoint() else rawDelta
+    val delta = graft.sources.Formats.materialize(rawDelta)
     val attrCols = base.columns.filterNot(keys.contains)
     require(delta.columns.filterNot(keys.contains).sorted.sameElements(attrCols.sorted),
       "delta must share the base's non-key columns")

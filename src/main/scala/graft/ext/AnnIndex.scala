@@ -15,10 +15,14 @@ import graft.functions.VectorFunctions.{cosineSim, topCentroids}
   * ingest pattern (FAISS `add` after `train`).
   *
   * On-disk layout under `dir/`:
-  *   `centroids/`  k coarse centroids ([[Ivf.save]], KB-sized)
-  *   `codebooks/`  m×k PQ codebooks ([[Pq.save]]; absent = raw-vector IVF)
-  *   `lists/`      parquet partitioned by (batch_id, list_id):
-  *                 (id, codes|vector) — the searchable index
+  *   `_commits/`   the [[graft.streaming.CommitLog]]; its head names the
+  *                 published revision
+  *   `rev=<n>/`    one revision, immutable once committed:
+  *     `centroids/`  k coarse centroids ([[Ivf.save]], KB-sized)
+  *     `codebooks/`  m×k PQ codebooks ([[Pq.save]]; absent = raw-vector IVF)
+  *     `attrs`       attribute column names, one per line (absent = none)
+  *     `lists/`      parquet partitioned by (batch_id, list_id):
+  *                   (id, codes|vector, attrs…) — the searchable index
   *
   * Correctness contract (spec-pinned):
   *  - FOLD ≡ REBUILD: assignment and encoding are deterministic functions
@@ -54,30 +58,32 @@ object AnnIndex {
     * make [[topKFiltered]] evaluate its predicate to NULL over streamed
     * rows and silently exclude them).
     *
-    * Round 16: the index is PUBLISHED through an epoch-fenced pointer
+    * The index is PUBLISHED through an epoch-fenced pointer
     * ([[graft.streaming.CommitLog]] at `dir/_commits`): each publish —
     * [[create]] (initial build or retrain), [[compact]] — writes a
     * fresh immutable `rev=<epoch>` subtree (models + attrs + lists) and
     * commits it with a CAS, so readers NEVER observe a torn index: an
     * opened Index pins `root` (one revision's paths) for its lifetime,
     * and a crash mid-publish leaves an uncommitted subtree the pointer
-    * never meets. Pre-r16 indexes (no `_commits`) resolve root = dir
-    * and keep opening. */
+    * never meets.
+    *
+    * @param root the revision subtree (`dir/rev=<n>`) this Index reads
+    *   and folds into. */
   final case class Index(dir: String, coarse: Ivf.Model, pq: Option[Pq.Model],
-      attrCols: Seq[String] = Nil, root: String = "") {
-    /** The revision subtree this Index reads and folds into. */
-    def resolvedRoot: String = if (root.isEmpty) dir else root
-    def listsDir: String = s"$resolvedRoot/lists"
+      attrCols: Seq[String], root: String) {
+    def listsDir: String = s"$root/lists"
   }
 
-  /** The currently-published revision root under `dir` (dir itself for a
-    * pre-r16 unversioned index). */
-  private def currentRoot(dir: String)(implicit spark: SparkSession): String =
-    graft.streaming.CommitLog.current(spark, dir)
-      .map(c => s"$dir/${c.version}").getOrElse(dir)
+  /** The currently-published revision root under `dir`. */
+  private def currentRoot(dir: String)(implicit spark: SparkSession): String = {
+    val head = graft.streaming.CommitLog.current(spark, dir)
+    require(head.nonEmpty, s"no published AnnIndex revision at $dir " +
+      "(no commit under _commits) — build one with AnnIndex.create")
+    s"$dir/${head.get.version}"
+  }
 
   /** Persist/load the index's attribute-column manifest. One name per
-    * line; absent file = no attributes (pre-X97 indexes keep opening). */
+    * line; absent file = no attributes. */
   private def saveAttrs(dir: String, attrCols: Seq[String])
       (implicit spark: SparkSession): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/attrs")
@@ -96,14 +102,9 @@ object AnnIndex {
     if (!fs.exists(p)) Nil
     else {
       val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, "UTF-8").split("\n").toSeq
-          .filter(_.nonEmpty)
-      } finally in.close()
+      try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
+        .filter(_.nonEmpty)
+      finally in.close()
     }
   }
 
@@ -141,32 +142,43 @@ object AnnIndex {
   def createWithModels(corpus: DataFrame, dir: String, coarse: Ivf.Model,
       pq: Option[Pq.Model], idCol: String = "vec_id",
       vecCol: String = "embedding", attrCols: Seq[String] = Nil)
-      (implicit spark: SparkSession): Index = {
+      (implicit spark: SparkSession): Index =
+    // the corpus is batch −1: structured-streaming batch ids start at 0,
+    // so a stream folding into this index can never overwrite it
+    publish(dir, coarse, pq, attrCols) { idx =>
+      fold(corpus, idx, batchId = -1L, idCol, vecCol)
+    }._1
+
+  /** Publish one revision: read the head epoch E, write the models, the
+    * attribute manifest and (through `writeLists`) the lists into a fresh
+    * `rev=<E+1>` subtree, then CAS-commit it as epoch E+1. Anything
+    * `writeLists` throws aborts the publish before the commit. */
+  private def publish[T](dir: String, coarse: Ivf.Model, pq: Option[Pq.Model],
+      attrCols: Seq[String])(writeLists: Index => T)
+      (implicit spark: SparkSession): (Index, T) = {
     val epoch = graft.streaming.CommitLog.current(spark, dir)
       .map(_.epoch).getOrElse(0L)
     val revName = s"rev=${epoch + 1}"
-    val root = s"$dir/$revName"
+    val idx = Index(dir, coarse, pq, attrCols, root = s"$dir/$revName")
     // a leftover subtree from a crashed publish at this epoch is ours to
     // clear — it was never committed
-    val rp = new org.apache.hadoop.fs.Path(root)
+    val rp = new org.apache.hadoop.fs.Path(idx.root)
     rp.getFileSystem(spark.sessionState.newHadoopConf()).delete(rp, true)
-    Ivf.save(coarse, s"$root/centroids")
-    pq.foreach(m => Pq.save(m, s"$root/codebooks"))
-    saveAttrs(root, attrCols)
-    val idx = Index(dir, coarse, pq, attrCols, root = root)
-    // the corpus is batch −1: structured-streaming batch ids start at 0,
-    // so a stream folding into this index can never overwrite it
-    fold(corpus, idx, batchId = -1L, idCol, vecCol)
+    Ivf.save(coarse, s"${idx.root}/centroids")
+    pq.foreach(m => Pq.save(m, s"${idx.root}/codebooks"))
+    saveAttrs(idx.root, attrCols)
+    val written = writeLists(idx)
     val won = graft.streaming.CommitLog.tryCommit(spark, dir, epoch, revName)
-    require(won, s"create: concurrent index publish at $dir (epoch $epoch) " +
+    require(won, s"concurrent index publish at $dir (epoch $epoch) " +
       "— re-read and retry")
-    idx
+    (idx, written)
   }
 
   /** Open the CURRENT revision of a persisted index (models load
     * bit-identically — the Ivf/Pq ModelStore contract). The returned
     * Index pins this revision: queries and folds against it keep using
-    * its files even across a concurrent [[compact]]/retrain publish. */
+    * its files even across a concurrent [[compact]]/retrain publish.
+    * Fails, naming `dir`, when no revision was ever published there. */
   def open(dir: String)(implicit spark: SparkSession): Index = {
     val root = currentRoot(dir)
     val pqPath = new org.apache.hadoop.fs.Path(s"$root/codebooks")
@@ -379,39 +391,30 @@ object AnnIndex {
     *   gated to never publish MORE files than it found. */
   def compact(dir: String)(implicit spark: SparkSession): (Index, (Long, Long)) = {
     val cur = open(dir)
-    val epoch = graft.streaming.CommitLog.current(spark, dir)
-      .map(_.epoch).getOrElse(0L)
-    val revName = s"rev=${epoch + 1}"
-    val root = s"$dir/$revName"
-    val rp = new org.apache.hadoop.fs.Path(root)
-    rp.getFileSystem(spark.sessionState.newHadoopConf()).delete(rp, true)
     // models + attrs travel bit-identically (the ModelStore contract)
-    Ivf.save(cur.coarse, s"$root/centroids")
-    cur.pq.foreach(m => Pq.save(m, s"$root/codebooks"))
-    saveAttrs(root, cur.attrCols)
-    // partition-column inference reads small batch_id values back as
-    // INT — normalize to the long the fold wrote
-    val rows = lists(cur).withColumn("batch_id", col("batch_id").cast("long"))
-    // newest STREAM batch (ids >= 0) stays replayable under its own id
-    val keepId = graft.streaming.BatchStore.ids(spark, cur.listsDir, "batch_id")
-      .filter(_ >= 0).maxOption
-    val compacted = keepId match {
-      case Some(b) => rows.withColumn("batch_id",
-        when(col("batch_id") === b, col("batch_id")).otherwise(lit(-1L)))
-      case None => rows.withColumn("batch_id", lit(-1L))
+    publish(dir, cur.coarse, cur.pq, cur.attrCols) { idx =>
+      // partition-column inference reads small batch_id values back as
+      // INT — normalize to the long the fold wrote
+      val rows = lists(cur).withColumn("batch_id", col("batch_id").cast("long"))
+      // newest STREAM batch (ids >= 0) stays replayable under its own id
+      val keepId = graft.streaming.BatchStore.ids(spark, cur.listsDir, "batch_id")
+        .filter(_ >= 0).maxOption
+      val compacted = keepId match {
+        case Some(b) => rows.withColumn("batch_id",
+          when(col("batch_id") === b, col("batch_id")).otherwise(lit(-1L)))
+        case None => rows.withColumn("batch_id", lit(-1L))
+      }
+      // one writer task per list -> one file per (batch_id, list_id) leaf
+      compacted.repartition(col("list_id"))
+        .write.mode("append").partitionBy("batch_id", "list_id")
+        .parquet(idx.listsDir)
+      val (before, _) = graft.sources.Compact.dirStats(spark, cur.listsDir)
+      val (after, _) = graft.sources.Compact.dirStats(spark, idx.listsDir)
+      require(after <= before,
+        s"compact: produced MORE files ($after) than it found ($before) — " +
+          "refusing to publish (index already compact?)")
+      (before, after)
     }
-    // one writer task per list -> one file per (batch_id, list_id) leaf
-    compacted.repartition(col("list_id"))
-      .write.mode("append").partitionBy("batch_id", "list_id")
-      .parquet(s"$root/lists")
-    val (before, _) = graft.sources.Compact.dirStats(spark, cur.listsDir)
-    val (after, _) = graft.sources.Compact.dirStats(spark, s"$root/lists")
-    require(after <= before,
-      s"compact: produced MORE files ($after) than it found ($before) — " +
-        "refusing to publish (index already compact?)")
-    val won = graft.streaming.CommitLog.tryCommit(spark, dir, epoch, revName)
-    require(won, s"compact: concurrent index publish at $dir (epoch $epoch)")
-    (open(dir), (before, after))
   }
 
   /** Retrain-and-swap for a drifted index — what [[retrainGate]] points
@@ -431,20 +434,16 @@ object AnnIndex {
       prev.attrCols)
   }
 
-  /** Delete every non-current `rev=<n>` subtree (and, once the index is
-    * versioned, the legacy unversioned `centroids`/`codebooks`/`lists`/
-    * `attrs` files a pre-r16 layout left at the top level). Run only
-    * after in-flight readers of old revisions have drained — an Index
-    * pins its revision's files. */
+  /** Delete every non-current `rev=<n>` subtree. Run only after
+    * in-flight readers of old revisions have drained — an Index pins its
+    * revision's files. */
   def vacuumRevisions(dir: String)(implicit spark: SparkSession): Unit = {
     graft.streaming.CommitLog.current(spark, dir).foreach { c =>
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       fs.listStatus(p).foreach { s =>
         val n = s.getPath.getName
-        val stale = (n.matches("rev=\\d+") && n != c.version) ||
-          n == "centroids" || n == "codebooks" || n == "lists" || n == "attrs"
-        if (stale) fs.delete(s.getPath, true)
+        if (n.matches("rev=\\d+") && n != c.version) fs.delete(s.getPath, true)
       }
     }
   }

@@ -1105,11 +1105,7 @@ object Queries {
     // key semi-join), and the exact struct compare touches only the
     // ~11% touched slice. AuditDeltaSpec pins the equivalence; the
     // oracle below still computes the full diff-of-upsert.
-    // materializeDelta = false: the delta above is already
-    // localCheckpointed (it feeds this audit alone here, but the
-    // checkpoint also stands in for the production materialized input)
-    graft.etl.SnapshotDiff.auditDelta(o, delta, Seq("o_orderkey"),
-        materializeDelta = false)
+    graft.etl.SnapshotDiff.auditDelta(o, delta, Seq("o_orderkey"))
       .orderBy(col("o_orderkey"))
   }
 

@@ -45,7 +45,8 @@ object Formats {
     * Materialization is required for corrupt-record queries — Spark
     * refuses a scan whose required schema is the corrupt column alone,
     * since corruptness is only defined relative to parsing the data
-    * columns. */
+    * columns. A `df` that is already a checkpoint comes back as is, with
+    * no job run. */
   def materialize(df: DataFrame): DataFrame =
     if (isMaterialized(df)) df else df.localCheckpoint(true)
 

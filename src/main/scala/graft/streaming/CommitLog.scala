@@ -6,13 +6,13 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Epoch-fenced commit log: the check-and-swap publish primitive behind
-  * the versioned snapshot store ([[StreamingUpsert]]). The round-13
-  * verdict's one undocumented scale assumption was single-writer on the
-  * `_CURRENT` pointer — two concurrent folds raced on publish and the
-  * loser's fold silently vanished (lost update). This log makes publish
-  * OPTIMISTICALLY CONCURRENT, the scheme table formats use (Delta's
-  * `_delta_log/<n>.json` exclusive-create): a writer that folded from
-  * epoch E may only publish as epoch E+1, and creating the epoch file is
+  * the versioned stores ([[StreamingUpsert]]'s snapshots and
+  * [[graft.ext.AnnIndex]]'s revisions). A single-writer pointer loses
+  * updates: two concurrent folds race on publish and the loser's fold
+  * silently vanishes. This log makes publish OPTIMISTICALLY CONCURRENT,
+  * the scheme table formats use (Delta's `_delta_log/<n>.json`
+  * exclusive-create): a writer that folded from epoch E may only
+  * publish as epoch E+1, and creating the epoch file is
   * ATOMIC-EXCLUSIVE — exactly one of two racing writers wins; the loser
   * DETECTS the conflict (a plain false, no torn state), re-reads the
   * winner's snapshot, re-folds, retries.
@@ -69,8 +69,7 @@ object CommitLog {
   }
 
   /** All commits at `dir`, epoch-ascending. Empty when the log does not
-    * exist yet (a fresh store, or a legacy `_CURRENT`-pointer store the
-    * caller migrates on first CAS publish). Reads every epoch file —
+    * exist yet (a fresh store). Reads every epoch file —
     * use [[current]] / [[descending]] on hot paths; [[truncate]] bounds
     * the log length for the full readers (vacuum, time travel). */
   def commits(spark: SparkSession, dir: String): Seq[Commit] = {
@@ -123,26 +122,6 @@ object CommitLog {
   def tryCommit(spark: SparkSession, dir: String, expectedEpoch: Long,
       version: String): Boolean = {
     require(expectedEpoch >= 0, s"expectedEpoch must be >= 0, got $expectedEpoch")
-    commitAt(spark, dir, expectedEpoch + 1, version)
-  }
-
-  /** Filesystems whose no-overwrite rename is a true namenode/metadata
-    * atomic (plus `file`, where the log uses link(2) instead). Object
-    * stores (s3a, gs, oss, …) implement Rename.NONE as check-then-act —
-    * two racing writers can BOTH "win", silently reintroducing the lost
-    * update this log exists to prevent — so the log REFUSES them rather
-    * than documenting the hazard away. Extend via the Hadoop conf key
-    * `graft.commitlog.atomic.rename.schemes` (comma-separated) when
-    * fronted by an external fencing service (what Delta on S3 does with
-    * DynamoDB). */
-  private val AtomicRenameSchemes =
-    Set("file", "hdfs", "viewfs", "abfs", "abfss")
-
-  /** Exclusive-create `version` as epoch `epoch` (internal: [[tryCommit]]
-    * maps expected→expected+1; legacy migration materializes epoch 0). */
-  private[streaming] def commitAt(spark: SparkSession, dir: String,
-      epoch: Long, version: String): Boolean = {
-    require(epoch >= 0, s"epoch must be >= 0, got $epoch")
     require(version.nonEmpty && !version.contains('\n'),
       s"version must be a non-empty single line, got '$version'")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -164,7 +143,7 @@ object CommitLog {
     val f = fs(spark, dir)
     val cp = commitsPath(dir)
     f.mkdirs(cp)
-    val dst = new Path(cp, s"%0${EpochWidth}d".format(epoch))
+    val dst = new Path(cp, s"%0${EpochWidth}d".format(expectedEpoch + 1))
     if (f.exists(dst)) return false // fast-path: already lost
     val tmp = new Path(cp, s".tmp-${java.util.UUID.randomUUID}")
     val out = f.create(tmp, true)
@@ -190,4 +169,16 @@ object CommitLog {
       try f.delete(tmp, false) catch { case _: java.io.IOException => () }
     }
   }
+
+  /** Filesystems whose no-overwrite rename is a true namenode/metadata
+    * atomic (plus `file`, where the log uses link(2) instead). Object
+    * stores (s3a, gs, oss, …) implement Rename.NONE as check-then-act —
+    * two racing writers can BOTH "win", silently reintroducing the lost
+    * update this log exists to prevent — so the log REFUSES them rather
+    * than documenting the hazard away. Extend via the Hadoop conf key
+    * `graft.commitlog.atomic.rename.schemes` (comma-separated) when
+    * fronted by an external fencing service (what Delta on S3 does with
+    * DynamoDB). */
+  private val AtomicRenameSchemes =
+    Set("file", "hdfs", "viewfs", "abfs", "abfss")
 }

@@ -19,7 +19,7 @@ import graft.etl.Upsert
   *  - each batch writes a COMPLETE new snapshot under `dir/v=<batchId>`
   *    (write-once; a replayed batch after restart overwrites the same
   *    version directory, so reprocessing is idempotent);
-  *  - publish goes through the epoch-fenced [[CommitLog]] (round 14):
+  *  - publish goes through the epoch-fenced [[CommitLog]]:
   *    the pointer is the HEAD of `dir/_commits/`, each commit an
   *    immutable fully-written-then-atomically-linked file, so readers
   *    resolve a complete pointer then read an immutable directory —
@@ -30,10 +30,7 @@ import graft.etl.Upsert
   *    its batch on top and retries (up to `maxRetries`, then aborts
   *    with the conflict surfaced). Writers running concurrently MUST
   *    use distinct `writerTag`s so their version directories cannot
-  *    collide — same contract as Delta's per-app txn identity. Legacy
-  *    stores published via the pre-round-14 `_CURRENT` pointer are read
-  *    transparently (the pointer becomes epoch 0) and migrate to the
-  *    log on their next publish;
+  *    collide — same contract as Delta's per-app txn identity;
   *  - old versions stay until [[vacuum]] — time travel for free, exactly
   *    the manifest-pointer scheme table formats use, scaled down.
   *
@@ -87,7 +84,6 @@ object StreamingUpsert {
     require(writerTag.isEmpty || writerTag.matches("[A-Za-z0-9_]+"),
       s"writerTag must match [A-Za-z0-9_]+ or be empty, got '$writerTag'")
     val ver = if (writerTag.isEmpty) s"v=$batchId" else s"v=$writerTag-$batchId"
-    migrateLegacy(spark, dir) // self-heal a crash between commit and sweep
     // the log IS the commit marker: if this writer already committed this
     // batch (or a later one), the batch landed before the restart — a
     // replay must be a no-op, not a self-referential rewrite of the
@@ -103,7 +99,7 @@ object StreamingUpsert {
     var attempt = 0
     var committed = false
     while (!committed) {
-      val head = headCommit(spark, dir)
+      val head = CommitLog.current(spark, dir)
       val next = head match {
         case Some(c) =>
           Upsert.upsertVersioned(
@@ -116,11 +112,10 @@ object StreamingUpsert {
         .parquet(s"$dir/$ver")
       committed = CommitLog.tryCommit(spark, dir,
         head.map(_.epoch).getOrElse(0L), ver)
-      if (committed) migrateLegacy(spark, dir)
       if (!committed) {
         attempt += 1
         if (attempt > maxRetries) {
-          val now = headCommit(spark, dir).map(_.version).getOrElse("none")
+          val now = currentVersion(spark, dir).getOrElse("none")
           throw new java.util.ConcurrentModificationException(
             s"lost the publish race at $dir $maxRetries times " +
               s"(another writer keeps advancing the log; head is now $now) " +
@@ -131,54 +126,17 @@ object StreamingUpsert {
     }
   }
 
-  /** This writer's newest committed batch id, scanning the log head-first
-    * (plus the legacy pointer for untagged writers). Lazy descending
-    * scan: a live writer finds its own tag within the newest few commits,
-    * so the per-batch cost stays O(1) files instead of O(total commits). */
+  /** This writer's newest committed batch id, scanning the log
+    * head-first. Lazy descending scan: a live writer finds its own tag
+    * within the newest few commits, so the per-batch cost stays O(1)
+    * files instead of O(total commits). */
   private def lastCommittedBatch(spark: SparkSession, dir: String,
       writerTag: String): Option[Long] = {
     val pat = if (writerTag.isEmpty) "v=(\\d+)".r
       else s"v=${writerTag}-(\\d+)".r
-    val fromLog = CommitLog.descending(spark, dir)
+    CommitLog.descending(spark, dir)
       .map(_.version).collectFirst { case pat(n) => n.toLong }
-    fromLog.orElse(
-      if (writerTag.isEmpty)
-        legacyPointer(spark, dir).map(_.stripPrefix("v=").toLong)
-      else None)
   }
-
-  /** Finish a legacy store's migration once a commit log exists:
-    * materialize the pre-log pointer as epoch 0 (so its version stays
-    * published for time travel and the untagged replay guard) and drop
-    * `_CURRENT` — the stale pointer otherwise shadows retention forever
-    * (vacuum's legacy branch never ran again once the log took over).
-    * Idempotent and crash-safe: epoch 0 is an exclusive create, and the
-    * pointer is deleted only after epoch 0 is durable. */
-  /** Highest PRE-LOG published version number, from the migrated epoch-0
-    * commit or a still-standing `_CURRENT` pointer. Epoch 0's content is
-    * parsed DEFENSIVELY against the `v=<digits>` shape ([[legacyPointer]]
-    * already require()s it): migrateLegacy writes the pointer content
-    * verbatim, so a tagged or malformed string there must DISABLE the
-    * legacy sweep, not abort vacuum/snapshotAt with a NumberFormat
-    * exception (r15 ADVICE). A non-matching epoch 0 only means some
-    * pre-log `v=<n>` directories are retained forever — safe. */
-  private val LegacyVersion = "v=(\\d+)".r
-  private def legacyMaxOf(spark: SparkSession, dir: String,
-      log: Seq[CommitLog.Commit]): Option[Long] =
-    log.find(_.epoch == 0L)
-      .flatMap(c => c.version match {
-        case LegacyVersion(n) => Some(n.toLong)
-        case _ => None
-      })
-      .orElse(legacyPointer(spark, dir).map(_.stripPrefix("v=").toLong))
-
-  private def migrateLegacy(spark: SparkSession, dir: String): Unit =
-    legacyPointer(spark, dir).foreach { v =>
-      if (CommitLog.current(spark, dir).nonEmpty) {
-        CommitLog.commitAt(spark, dir, 0L, v) // false = already there
-        fs(spark, dir).delete(new Path(s"$dir/_CURRENT"), false)
-      }
-    }
 
   /** The current snapshot, or None before the first publish. */
   def currentSnapshot(spark: SparkSession, dir: String): Option[DataFrame] =
@@ -187,16 +145,8 @@ object StreamingUpsert {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Head of the commit log; a legacy pre-round-14 `_CURRENT` pointer
-    * reads as epoch 0, so old stores resolve transparently and their
-    * next publish (expected epoch 0 → commit 1) migrates them. */
-  private def headCommit(spark: SparkSession, dir: String)
-      : Option[CommitLog.Commit] =
-    CommitLog.current(spark, dir)
-      .orElse(legacyPointer(spark, dir).map(CommitLog.Commit(0L, _)))
-
   private def currentVersion(spark: SparkSession, dir: String): Option[String] =
-    headCommit(spark, dir).map(_.version)
+    CommitLog.current(spark, dir).map(_.version)
 
   private val TaggedVersion = "v=([A-Za-z0-9_]+)-\\d+".r
 
@@ -206,21 +156,6 @@ object StreamingUpsert {
     case _ => ""
   }
 
-  /** The pre-round-14 single-writer pointer, read for migration only —
-    * never written anymore, and ignored once a commit log exists. */
-  private def legacyPointer(spark: SparkSession, dir: String): Option[String] = {
-    val f = fs(spark, dir)
-    val p = new Path(s"$dir/_CURRENT")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val v = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      require(v.matches("v=\\d+"),
-        s"corrupt snapshot pointer at $p: '$v' — restore it to the last good 'v=<n>'")
-      Some(v)
-    }
-  }
-
   /** Retention vacuum: delete versions STRICTLY OLDER than the published
     * one, RETAINING the newest `keep − 1` of them as a time-travel
     * window (`keep = 1` keeps only the current snapshot — the previous
@@ -228,54 +163,27 @@ object StreamingUpsert {
     * NEWER directory an in-flight batch may be writing; versions newer
     * than the pointer are in-flight state, not garbage. Safe to run
     * concurrently with readers of retained versions: deletion order is
-    * oldest-first, and a reader that resolved `_CURRENT` can only be in
-    * a retained directory. */
+    * oldest-first, and a reader that resolved the log head can only be
+    * in a retained directory. */
   def vacuum(spark: SparkSession, dir: String, keep: Int = 1): Unit = {
     require(keep >= 1, "keep must be >= 1 (the current version always stays)")
+    // commit-log order is publish order across ALL writers (tagged or
+    // not); uncommitted in-flight directories are not in the log and are
+    // never touched
     val log = CommitLog.commits(spark, dir)
-    if (log.nonEmpty) {
-      // commit-log order is publish order across ALL writers (tagged or
-      // not); uncommitted in-flight directories are not in the log and
-      // are never touched
-      val f = fs(spark, dir)
-      val versions = log.map(_.version).distinct
-      val dropped = versions.dropRight(1) // head always stays
-        .dropRight(keep - 1)
-      val retained = versions.toSet -- dropped
-      dropped.foreach(v => f.delete(new Path(s"$dir/$v"), true))
-      // legacy sweep: every `v=<n>` directory at or below the
-      // pre-migration pointer was PUBLISHED under the old single-writer
-      // scheme (so it is retention's to reclaim, not in-flight state) —
-      // without this, a migrated store kept its pre-log versions forever
-      val legacyMax = legacyMaxOf(spark, dir, log)
-      legacyMax.foreach { p =>
-        f.listStatus(new Path(dir)).toSeq
-          .filter { s =>
-            val n = s.getPath.getName
-            s.isDirectory && n.matches("v=\\d+") &&
-              n.stripPrefix("v=").toLong <= p && !retained.contains(n)
-          }
-          .foreach(s => f.delete(s.getPath, true))
-      }
-      // truncate the log to the same retention window, keeping each
-      // writer's newest epoch (the replay guard — dropping it would make
-      // a restarted writer re-apply an already-published batch)
-      val keepEpochs = log.filter(c => retained.contains(c.version))
-        .map(_.epoch).toSet ++
-        log.groupBy(c => writerTagOf(c.version)).values.map(_.map(_.epoch).max)
-      CommitLog.truncate(spark, dir, keepEpochs = 1, alsoKeep = keepEpochs)
-    } else legacyPointer(spark, dir).foreach { cur =>
-      val curN = cur.stripPrefix("v=").toLong
-      val f = fs(spark, dir)
-      val older = f.listStatus(new Path(dir))
-        .filter { s =>
-          s.isDirectory && s.getPath.getName.startsWith("v=") &&
-            scala.util.Try(s.getPath.getName.stripPrefix("v=").toLong)
-              .toOption.exists(_ < curN)
-        }
-        .sortBy(s => s.getPath.getName.stripPrefix("v=").toLong)
-      older.dropRight(keep - 1).foreach(s => f.delete(s.getPath, true))
-    }
+    val f = fs(spark, dir)
+    val versions = log.map(_.version).distinct
+    val dropped = versions.dropRight(1) // head always stays
+      .dropRight(keep - 1)
+    val retained = versions.toSet -- dropped
+    dropped.foreach(v => f.delete(new Path(s"$dir/$v"), true))
+    // truncate the log to the same retention window, keeping each
+    // writer's newest epoch (the replay guard — dropping it would make a
+    // restarted writer re-apply an already-published batch)
+    val keepEpochs = log.filter(c => retained.contains(c.version))
+      .map(_.epoch).toSet ++
+      log.groupBy(c => writerTagOf(c.version)).values.map(_.map(_.epoch).max)
+    CommitLog.truncate(spark, dir, keepEpochs = 1, alsoKeep = keepEpochs)
   }
 
   /** Change-data-feed read face (the `table_changes(from, to)` analog):
@@ -300,14 +208,8 @@ object StreamingUpsert {
     // only PUBLISHED versions are readable: a directory absent from the
     // commit log may be a half-written in-flight batch. Addresses the
     // untagged `v=<batchId>` namespace; tagged writers' versions are
-    // reachable through [[CommitLog.commits]] directly. Legacy stores:
-    // every batch at or below the old pointer was published.
-    val log = CommitLog.commits(spark, dir)
-    // epoch 0 is the migrated pre-log pointer: every untagged batch at or
-    // below it was published under the old single-writer scheme
-    val legacyMax = legacyMaxOf(spark, dir, log)
-    val published = log.exists(_.version == s"v=$batchId") ||
-      legacyMax.exists(_ >= batchId)
+    // reachable through [[CommitLog.commits]] directly.
+    val published = CommitLog.commits(spark, dir).exists(_.version == s"v=$batchId")
     require(published,
       s"version v=$batchId is not published yet (head: ${
         currentVersion(spark, dir).getOrElse("none")})")

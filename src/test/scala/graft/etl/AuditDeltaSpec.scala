@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -83,6 +84,38 @@ class AuditDeltaSpec extends SparkSpec {
     // exactly ONE join in the whole audit (the delta-driven left join);
     // the narrowing is a filter, never a semi join of the wide base
     assert("Join".r.findAllIn(plan).size <= 1)
+  }
+
+  test("a checkpointed delta is not checkpointed again; a lazy delta is, once") {
+    val base = Seq.tabulate(50)(i => (i.toLong, s"v$i")).toDF("k", "s")
+    val lazyDelta = base.filter($"k" % 5 === 0)
+      .withColumn("s", concat($"s", lit("!")))
+    val sc = spark.sparkContext
+    // the call site (`<action> at <file>:<line>`) of every job that runs
+    // while the audit is BUILT, not executed
+    def jobsBuilding(delta: DataFrame): Seq[String] = {
+      val sites = scala.collection.mutable.ListBuffer.empty[String]
+      val own = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+          sites += e.stageInfos.maxBy(_.stageId).name
+        }
+      }
+      GraftBridge.drainListeners(sc)
+      sc.addSparkListener(own)
+      try SnapshotDiff.auditDelta(base, delta, Seq("k"))
+      finally {
+        GraftBridge.drainListeners(sc)
+        sc.removeSparkListener(own)
+      }
+      own.synchronized(sites.toList)
+    }
+    def checkpoints(sites: Seq[String]) = sites.count(_.startsWith("localCheckpoint"))
+    val done = lazyDelta.localCheckpoint(true)
+    val onDone = jobsBuilding(done)
+    val onLazy = jobsBuilding(lazyDelta)
+    assert(checkpoints(onDone) === 0, onDone)
+    assert(checkpoints(onLazy) === 1, onLazy)
+    assert(onLazy.size === onDone.size + 1, s"lazy $onLazy vs checkpointed $onDone")
   }
 
   test("bloom false positives cannot leak rows: tiny filter, disjoint keys") {

@@ -355,11 +355,12 @@ class JobRunnerSpec extends SparkSpec {
 
   test("committer contract: dynamic overwrite locally, write-once on object stores") {
     // scheme detection drives the default
-    assert(JobRunner.isObjectStore("s3a://bucket/warehouse/out"))
-    assert(JobRunner.isObjectStore("gs://bucket/out"))
-    assert(!JobRunner.isObjectStore("hdfs://nn/warehouse/out"))
-    assert(!JobRunner.isObjectStore("/tmp/local/out"))
-    assert(!JobRunner.isObjectStore("file:/tmp/local/out"))
+    val hc = spark.sparkContext.hadoopConfiguration
+    assert(JobRunner.isObjectStore("s3a://bucket/warehouse/out", hc))
+    assert(JobRunner.isObjectStore("gs://bucket/out", hc))
+    assert(!JobRunner.isObjectStore("hdfs://nn/warehouse/out", hc))
+    assert(!JobRunner.isObjectStore("/tmp/local/out", hc))
+    assert(!JobRunner.isObjectStore("file:/tmp/local/out", hc))
 
     def freshSrc(): String = {
       val root = Files.createTempDirectory("graft_etl_commit").toString

@@ -288,13 +288,13 @@ class AnnIndexSpec extends SparkSpec {
     reader.start()
     try {
       val idx1 = AnnIndex.retrainAndSwap(emb, d, k = 8, iters = 2)
-      assert(idx1.resolvedRoot !== idx0.resolvedRoot)
+      assert(idx1.root !== idx0.root)
       assert(idx1.coarse.k === 8)
     } finally { stop.set(true); reader.join(30000) }
     assert(readerFailure.isEmpty, s"reader failed: $readerFailure")
     // reopen resolves the NEW revision; searches include the full corpus
     val reopened = AnnIndex.open(d)
-    assert(reopened.resolvedRoot !== idx0.resolvedRoot)
+    assert(reopened.root !== idx0.root)
     assert(reopened.coarse.k === 8)
     assert(AnnIndex.topK(reopened, qs, k = 3, nprobe = 8).count() > 0)
     // vacuum drops the old revision; the current one keeps answering
@@ -302,6 +302,17 @@ class AnnIndexSpec extends SparkSpec {
     val dirs = new java.io.File(d).listFiles().map(_.getName).toSet
     assert(!dirs.contains(s"rev=1"), s"old revision survived vacuum: $dirs")
     assert(AnnIndex.topK(AnnIndex.open(d), qs, k = 3, nprobe = 8).count() > 0)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+  }
+
+  test("open fails, naming the directory, when no revision was published") {
+    val d = tmp()
+    // a bare model at the top level is not an index: only a committed
+    // `rev=<n>` subtree is
+    Ivf.save(Ivf.train(corpus, k = 2, iters = 1), s"$d/centroids")
+    val e = intercept[IllegalArgumentException](AnnIndex.open(d))
+    assert(e.getMessage.contains(s"no published AnnIndex revision at $d"),
+      e.getMessage)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
   }
 

@@ -140,34 +140,6 @@ class CommitLogSpec extends SparkSpec {
       _ => ()) // winning despite contention is also a legal outcome
   }
 
-  test("legacy _CURRENT store resolves and migrates on next publish") {
-    val root = Files.createTempDirectory("graft_clog4").toString
-    val snap = s"$root/snap"
-    // build a legacy-layout store by hand: v=0 data + _CURRENT pointer
-    Seq((1L, "old", 1L)).toDF("k", "s", "v")
-      .write.parquet(s"$snap/v=0")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$snap/_CURRENT"), "v=0")
-    assert(StreamingUpsert.currentSnapshot(spark, snap).get.count() === 1)
-    // next publish CASes against epoch 0 and starts the log at 1; the
-    // old pointer is materialized as epoch 0 and _CURRENT retired, so
-    // retention no longer has a stale pointer shadowing it forever
-    StreamingUpsert.applyBatch(spark,
-      Seq((2L, "new", 1L)).toDF("k", "s", "v"), 1L, Seq("k"), "v", snap)
-    val log = CommitLog.commits(spark, snap)
-    assert(log.map(_.epoch) === Seq(0L, 1L))
-    assert(log.map(_.version) === Seq("v=0", "v=1"))
-    assert(!new java.io.File(s"$snap/_CURRENT").exists())
-    assert(StreamingUpsert.currentSnapshot(spark, snap).get.count() === 2)
-    // pre-migration batches stay time-travelable
-    assert(StreamingUpsert.snapshotAt(spark, snap, 0L).count() === 1)
-    // ...until retention reclaims them: the legacy sweep deletes
-    // pre-migration version dirs the window no longer covers
-    StreamingUpsert.vacuum(spark, snap)
-    assert(!new java.io.File(s"$snap/v=0").exists())
-    assert(StreamingUpsert.currentSnapshot(spark, snap).get.count() === 2)
-  }
-
   test("vacuum truncates the log but keeps every writer's replay guard") {
     val root = Files.createTempDirectory("graft_clog5").toString
     val snap = s"$root/snap"
