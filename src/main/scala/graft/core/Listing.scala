@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** Recursive file listing that never asks a file for its permissions.
+/** The engine's one recursive file listing; it never asks a file for its permissions.
   *
   * `FileSystem.listFiles(dir, true)` wraps every file in a
   * `LocatedFileStatus`, whose constructor reads the file's permission. On
@@ -16,16 +16,24 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   */
 object Listing {
 
-  /** Every file under `root` (or `root` itself, when it is a file) whose
-    * path passes `keep`, descending into every sub-directory — the set
-    * `fs.listFiles(root, true)` yields. */
+  /** Spark's data-file filter: `_SUCCESS`, `_temporary/`, `.crc` are not
+    * data; a `_`-prefixed `key=value` partition directory is. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** Every non-hidden file under `root` (or `root` itself, when it is a
+    * file) whose path passes `keep`, descending into every non-hidden
+    * sub-directory: one `listStatus` per directory visited. A `root` that
+    * does not exist lists as empty. */
   def files(fs: FileSystem, root: Path, keep: Path => Boolean): Seq[FileStatus] = {
     val out = ArrayBuffer.empty[FileStatus]
-    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { s =>
-      if (s.isDirectory) walk(s.getPath)
-      else if (keep(s.getPath)) out += s
+    def visit(entries: Array[FileStatus]): Unit = entries.foreach { s =>
+      if (!hidden(s.getPath.getName)) {
+        if (s.isDirectory) visit(fs.listStatus(s.getPath))
+        else if (keep(s.getPath)) out += s
+      }
     }
-    walk(root)
+    visit(try fs.listStatus(root) catch { case _: java.io.FileNotFoundException => Array.empty })
     out.toSeq
   }
 }

@@ -1,8 +1,12 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ledger.Ledger
 
@@ -11,7 +15,7 @@ import graft.ledger.Ledger
   * lifecycle SURVEY §3.1 stages 4-12).
   *
   * The reference's queue/worker/backpressure plumbing dissolves into Spark's
-  * scheduler (SURVEY §2.7): listing+pruning = Catalyst partition discovery,
+  * scheduler (SURVEY §2.7): listing+pruning = one walk per partition prefix,
   * fetch+decode = vectorized parquet scan, worker pool = executor cores,
   * upload threads = output committers. What this class preserves is the
   * *semantics*: partition-pruned input selection, hour aggregation with the
@@ -63,31 +67,19 @@ object JobRunner {
   def run(spark: SparkSession, spec: JobSpec, outputRoot: String, runId: String,
       objectStoreCommit: Option[Boolean] = None): Result = {
     // -- 1. Partition-pruned input selection (S1/P1): only the requested
-    //    upgrade=/state= dirs are ever listed, mirroring prefix construction
-    //    in fetch.py:60-83.
-    val partDirs = existingPartDirs(spark, spec)
-    // nothing listed for this job (reference: the ledger reports zeros and
-    // the run succeeds — README.md:345-361 counts start at listed=0)
-    if (partDirs.isEmpty) return emptyRun(spark, spec, outputRoot, runId)
-    // -- 2. Listing: every .parquet file under those dirs is what the
-    //    ledger accounts for (runIncremental drops what earlier runs
-    //    processed); steps 3-9 are `process`.
-    process(spark, spec, outputRoot, runId, objectStoreCommit,
-      scan = partDirs, files = listParquet(spark, spec, partDirs))
+    //    upgrade=/state= prefixes are listed (fetch.py:60-83).
+    // -- 2. Listing: one walk per prefix; its .parquet files are what the
+    //    ledger accounts for AND what the scan opens (runIncremental drops
+    //    what earlier runs processed). Steps 3-9 are `process`.
+    process(spark, spec, outputRoot, runId, objectStoreCommit, listParquet(spark, spec))
   }
 
-  /** One source file as listed: the partition dir it was listed under, its
-    * FULL URI (scheme intact — anything that re-opens it, like the footer
-    * pass, must resolve it on the SOURCE filesystem) and its length. */
-  private final case class Listed(dir: String, uri: String, bytes: Long) {
+  /** One listed source file and the (fs-qualified) partition dir it was
+    * listed under; its status keeps the FULL URI, scheme intact. */
+  private[etl] final case class Listed(dir: Path, status: FileStatus) {
+    def uri: String = status.getPath.toString
     /** The ledger's form: decoded, scheme-stripped (see [[processedPath]]). */
-    def path: String = new Path(uri).toUri.getPath
-  }
-
-  private def existingPartDirs(spark: SparkSession, spec: JobSpec): Seq[String] = {
-    val fs = new Path(spec.srcRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spec.upgrades.map(u => s"${spec.srcRoot}/upgrade=$u/state=${spec.state}")
-      .filter(p => fs.exists(new Path(p)))
+    def path: String = status.getPath.toUri.getPath
   }
 
   private def dataOut(outputRoot: String, runId: String, spec: JobSpec): String =
@@ -111,19 +103,10 @@ object JobRunner {
       metadataOut(outputRoot, runId, spec))
   }
 
-  /** A run with no source file to read: the ledger reports zeros, the
-    * metadata bypass still copies, no manifest is written. */
-  private def emptyRun(spark: SparkSession, spec: JobSpec, outputRoot: String,
-      runId: String): Result =
-    Result(dataOut(outputRoot, runId, spec), metadataOut(outputRoot, runId, spec),
-      Ledger.Report(0, 0, copyMetadata(spark, spec, outputRoot, runId), 0, 0, Nil))
-
-  /** The pipeline [[run]] and [[runIncremental]] share: footer pass, scan,
-    * hourly aggregate, partitioned write, bypass, ledger and manifest.
-    * `scan` is what the reader opens (partition dirs, or single files);
-    * `files` is what the ledger accounts for. */
+  /** What [[run]] and [[runIncremental]] share, over one listing: footer
+    * pass, scan, aggregate, partitioned write, bypass, ledger, manifest. */
   private def process(spark: SparkSession, spec: JobSpec, outputRoot: String, runId: String,
-      objectStoreCommit: Option[Boolean], scan: Seq[String], files: Seq[Listed]): Result = {
+      objectStoreCommit: Option[Boolean], files: Seq[Listed]): Result = {
     val conf = spark.sparkContext.hadoopConfiguration
     val ledgerFiles = files.map(_.path)
     val out = dataOut(outputRoot, runId, spec)
@@ -132,11 +115,11 @@ object JobRunner {
     //    distributed. It yields the schema enforcement report (S2: a
     //    footer-only diff vs the declared columns, empty when none is
     //    declared), the read schema when none is declared, and the facts
-    //    that decide the plan in step 5.
+    //    that decide the plan in step 5 and the ledger in step 8.
     val footers = SchemaEnforce.footers(spark, files.map(_.uri), spec.declaredSchema,
       idCol = "bldg_id")
 
-    // -- 4. Scan (S2/S3). ignoreCorruptFiles reproduces the reference's
+    // -- 4. Scan (S2/S3) of the listing. ignoreCorruptFiles reproduces the
     //    per-file failure tolerance (a bad file is skipped, surfaces in the
     //    ledger, and never kills the job — README.md:337-361).
     //    With a declared schema (S2 enforcement) the scan reads THAT schema:
@@ -152,16 +135,12 @@ object JobRunner {
     //    the full listing, so the metric adds no new driver-memory class.
     //    Observation names are unique per run: concurrent jobs in
     //    runAllParallel each get their own listener match.
-    val (inputRows, outputRows, processed) =
-      spec.declaredSchema.orElse(footers.firstSchema) match {
+    val (inputRows, outputRows, scanned) =
+      spec.declaredSchema.filter(_ => files.nonEmpty).orElse(footers.firstSchema) match {
         case None => (0L, 0L, Set.empty[String])
         case Some(schema) =>
           val obs = new Observation(s"etl_input_${java.util.UUID.randomUUID()}")
-          val read = spark.read
-            .option("basePath", spec.srcRoot)
-            .option("ignoreCorruptFiles", "true")
-            .schema(schema)
-            .parquet(scan: _*)
+          val read = scan(spark, spec.srcRoot, files, schema)
           val input = read
             .withColumn("__src_file", col("_metadata.file_path"))
             .observe(obs,
@@ -209,11 +188,13 @@ object JobRunner {
     val bypassed = copyMetadata(spark, spec, outputRoot, runId)
 
     // -- 8. Ledger (M3): listed vs processed set-diff + counters. Processed
-    //    paths come from the main pass's observation (no second scan).
-    //    _metadata.file_path is the full, encoded URI (file:/…,
-    //    s3a://bucket/…) while the listing uses toUri.getPath (decoded,
-    //    scheme+authority stripped) — processedPath maps one onto the other.
-    val missing = ledgerFiles.filterNot(processed.contains).sorted
+    //    paths come from the main pass's observation (no second scan) and
+    //    the footers of files with no row. _metadata.file_path is the full,
+    //    encoded URI (file:/…, s3a://bucket/…) while the listing uses
+    //    toUri.getPath (decoded, scheme+authority stripped) — processedPath
+    //    maps one onto the other.
+    val empty = footers.files.collect { case (i, f) if f.rows == 0 => ledgerFiles(i) }.toSet
+    val missing = ledgerFiles.filterNot(p => scanned.contains(p) || empty.contains(p)).sorted
     val report = Ledger.Report(
       listed = ledgerFiles.size,
       processed = ledgerFiles.size - missing.size,
@@ -228,7 +209,7 @@ object JobRunner {
     //    reporting — see runIncremental). Driver-side write; file-count
     //    sized, same memory class as the listing itself.
     writeManifest(conf, manifestPath(outputRoot, runId, spec),
-      ledgerFiles.filterNot(missing.contains))
+      ledgerFiles.filterNot(missing.toSet))
 
     Result(out, metadataOut(outputRoot, runId, spec), report)
   }
@@ -236,7 +217,6 @@ object JobRunner {
   /** True when the footers prove that no (upgrade, state, bldg_id, hour)
     * group spans two scan splits, so each scan task may aggregate its own
     * files to final groups:
-    *  - every file the scan opens went through the footer pass;
     *  - every readable file with rows has `bldg_id` statistics with zero
     *    nulls, and either one row group (each row group is read by exactly
     *    one split) or a length no split size can cut — at most
@@ -250,14 +230,12 @@ object JobRunner {
       footers: SchemaEnforce.Footers): Boolean = {
     val sqlConf = spark.sessionState.conf
     val unsplittable = math.min(sqlConf.filesMaxPartitionBytes, sqlConf.filesOpenCostInBytes)
-    val checked = files.map(_.path).toSet
     val withRows = files.zipWithIndex.flatMap { case (f, i) =>
       footers.files.get(i).filter(_.rows > 0).map(f -> _)
     }
     FileLocalAggregate.supports(read, "timestamp", "bldg_id") &&
-      read.inputFiles.forall(u => checked.contains(processedPath(u))) &&
       withRows.forall { case (f, ff) =>
-        ff.idRange.isDefined && (ff.rowGroups == 1 || f.bytes <= unsplittable)
+        ff.idRange.isDefined && (ff.rowGroups == 1 || f.status.getLen <= unsplittable)
       } &&
       withRows.groupBy(_._1.dir).values.forall { inDir =>
         val ranges = inDir.map(_._2.idRange.get).sortBy(_._1)
@@ -280,14 +258,37 @@ object JobRunner {
     finally out.close()
   }
 
-  /** Recursive .parquet listing of the given dirs (full URIs), without a
-    * per-file permission lookup (see [[graft.core.Listing]]). */
-  private def listParquet(spark: SparkSession, spec: JobSpec, dirs: Seq[String]): Seq[Listed] = {
+  /** The job's one listing: each requested prefix's `.parquet` files. */
+  private[etl] def listParquet(spark: SparkSession, spec: JobSpec): Seq[Listed] = {
     val fs = new Path(spec.srcRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dirs.flatMap { dir =>
-      graft.core.Listing.files(fs, new Path(dir), _.getName.endsWith(".parquet"))
-        .map(f => Listed(dir, f.getPath.toString, f.getLen))
+    spec.upgrades.flatMap { u =>
+      val dir = fs.makeQualified(new Path(s"${spec.srcRoot}/upgrade=$u/state=${spec.state}"))
+      graft.core.Listing.files(fs, dir, _.getName.endsWith(".parquet")).map(Listed(dir, _))
     }
+  }
+
+  /** What `spark.read.schema(schema).option("basePath", srcRoot)
+    * .parquet(dirs)` builds, with `ignoreCorruptFiles`, over exactly the
+    * listed `files`: its file index asks a private cache, which answers
+    * each qualified dir from the listing and stores nothing, so the scan
+    * lists nothing and no other reader of these dirs sees this listing. */
+  private[etl] def scan(spark: SparkSession, srcRoot: String, files: Seq[Listed],
+      schema: StructType): DataFrame = {
+    val byDir = files.groupBy(_.dir)
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        byDir.get(path).map(_.map(_.status).toArray)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, files.map(_.dir).distinct,
+      Map("basePath" -> srcRoot), Some(schema), listed)
+    val partitionSchema = index.partitionSchema
+    val dataSchema = StructType(schema.filterNot(f =>
+      partitionSchema.exists(p => spark.sessionState.conf.resolver(p.name, f.name))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+      GraftBridge.asNullable(dataSchema), None, new ParquetFileFormat,
+      Map("ignoreCorruptFiles" -> "true"))(spark))
   }
 
   /** An observation whose plan ran no task (every input file unreadable)
@@ -353,11 +354,8 @@ object JobRunner {
   def runIncremental(spark: SparkSession, spec: JobSpec, outputRoot: String,
       runId: String, objectStoreCommit: Option[Boolean] = None): Result = {
     val prior = processedSoFar(spark, outputRoot, spec)
-    val fresh = listParquet(spark, spec, existingPartDirs(spark, spec))
-      .filterNot(f => prior.contains(f.path))
-    if (fresh.isEmpty) emptyRun(spark, spec, outputRoot, runId)
-    else process(spark, spec, outputRoot, runId, objectStoreCommit,
-      scan = fresh.map(_.uri), files = fresh)
+    process(spark, spec, outputRoot, runId, objectStoreCommit,
+      listParquet(spark, spec).filterNot(f => prior.contains(f.path)))
   }
 
   /** Run every job in a config (reference `main.py:64-108` fan-out; jobs are

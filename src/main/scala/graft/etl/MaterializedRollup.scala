@@ -153,8 +153,8 @@ object MaterializedRollup {
   }
 
   /** Fingerprint of the base's CURRENT on-disk file listing (qualified
-    * path, length, mtime per data file), mirroring the hidden-file filter
-    * of Spark's own file index — this is what
+    * path, length, mtime per data file), listed by [[graft.core.Listing]]
+    * with the hidden-file filter of Spark's own file index — this is what
     * [[graft.plans.RollupViewRewrite]] compares against the candidate
     * query's scan listing to refuse stale rollups (X67's manifest idea at
     * file-metadata granularity: cheap enough to record at registration
@@ -163,18 +163,9 @@ object MaterializedRollup {
     import org.apache.hadoop.fs.Path
     val p = new Path(basePath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    def hidden(n: String): Boolean =
-      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
-    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      if (!hidden(n)) {
-        if (st.isDirectory) walk(st.getPath)
-        else buf += ((st.getPath.toString, st.getLen, st.getModificationTime))
-      }
-    }
-    walk(fs.makeQualified(p))
-    RollupViewRewrite.listingFingerprint(buf.toSeq)
+    RollupViewRewrite.listingFingerprint(
+      graft.core.Listing.files(fs, fs.makeQualified(p), _ => true)
+        .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)))
   }
 
   /** Does the registered view's base fingerprint still match the disk?

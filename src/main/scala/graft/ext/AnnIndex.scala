@@ -17,7 +17,7 @@ import graft.functions.VectorFunctions.{cosineSim, topCentroids}
   * On-disk layout under `dir/`:
   *   `_commits/`   the [[graft.streaming.CommitLog]]; its head names the
   *                 published revision
-  *   `rev=<n>/`    one revision, immutable once committed:
+  *   `rev=<n>-<u>/` one publish (epoch n, uuid u), immutable once committed:
   *     `centroids/`  k coarse centroids ([[Ivf.save]], KB-sized)
   *     `codebooks/`  m×k PQ codebooks ([[Pq.save]]; absent = raw-vector IVF)
   *     `attrs`       attribute column names, one per line (absent = none)
@@ -61,14 +61,14 @@ object AnnIndex {
     * The index is PUBLISHED through an epoch-fenced pointer
     * ([[graft.streaming.CommitLog]] at `dir/_commits`): each publish —
     * [[create]] (initial build or retrain), [[compact]] — writes a
-    * fresh immutable `rev=<epoch>` subtree (models + attrs + lists) and
-    * commits it with a CAS, so readers NEVER observe a torn index: an
-    * opened Index pins `root` (one revision's paths) for its lifetime,
-    * and a crash mid-publish leaves an uncommitted subtree the pointer
-    * never meets.
+    * fresh immutable `rev=<epoch>-<uuid>` subtree (models + attrs +
+    * lists) and commits it with a CAS, so readers NEVER observe a torn
+    * index: an opened Index pins `root` (one revision's paths) for its
+    * lifetime, and a crash mid-publish or a lost CAS leaves an
+    * uncommitted subtree the pointer never meets.
     *
-    * @param root the revision subtree (`dir/rev=<n>`) this Index reads
-    *   and folds into. */
+    * @param root the revision subtree (`dir/rev=<n>-<uuid>`) this Index
+    *   reads and folds into. */
   final case class Index(dir: String, coarse: Ivf.Model, pq: Option[Pq.Model],
       attrCols: Seq[String], root: String) {
     def listsDir: String = s"$root/lists"
@@ -132,7 +132,7 @@ object AnnIndex {
   /** Build the index under caller-supplied FROZEN models (e.g.
     * [[Pq.exactModel]] for the provable subcase, or models trained on a
     * sample elsewhere) and PUBLISH it atomically: the whole subtree
-    * (models, attrs, corpus lists) is written into a fresh `rev=<epoch>`
+    * (models, attrs, corpus lists) is written into a fresh revision
     * directory first and the pointer CAS-commits LAST — a crash at any
     * earlier point leaves the previous revision live and intact (this
     * subsumes the r15 ADVICE manifest-ordering fix: a manifest can never
@@ -150,20 +150,17 @@ object AnnIndex {
     }._1
 
   /** Publish one revision: read the head epoch E, write the models, the
-    * attribute manifest and (through `writeLists`) the lists into a fresh
-    * `rev=<E+1>` subtree, then CAS-commit it as epoch E+1. Anything
+    * attribute manifest and (through `writeLists`) the lists into this
+    * publish's own `rev=<E+1>-<uuid>` subtree — a CAS loser cannot tear
+    * the winner's — then CAS-commit it as epoch E+1. Anything
     * `writeLists` throws aborts the publish before the commit. */
   private def publish[T](dir: String, coarse: Ivf.Model, pq: Option[Pq.Model],
       attrCols: Seq[String])(writeLists: Index => T)
       (implicit spark: SparkSession): (Index, T) = {
     val epoch = graft.streaming.CommitLog.current(spark, dir)
       .map(_.epoch).getOrElse(0L)
-    val revName = s"rev=${epoch + 1}"
+    val revName = s"rev=${epoch + 1}-${java.util.UUID.randomUUID()}"
     val idx = Index(dir, coarse, pq, attrCols, root = s"$dir/$revName")
-    // a leftover subtree from a crashed publish at this epoch is ours to
-    // clear — it was never committed
-    val rp = new org.apache.hadoop.fs.Path(idx.root)
-    rp.getFileSystem(spark.sessionState.newHadoopConf()).delete(rp, true)
     Ivf.save(coarse, s"${idx.root}/centroids")
     pq.foreach(m => Pq.save(m, s"${idx.root}/codebooks"))
     saveAttrs(idx.root, attrCols)
@@ -434,16 +431,16 @@ object AnnIndex {
       prev.attrCols)
   }
 
-  /** Delete every non-current `rev=<n>` subtree. Run only after
-    * in-flight readers of old revisions have drained — an Index pins its
-    * revision's files. */
+  /** Delete every `rev=` subtree but the head's, uncommitted ones too.
+    * Run only while no publish is in flight and after readers of old
+    * revisions have drained — an Index pins its revision's files. */
   def vacuumRevisions(dir: String)(implicit spark: SparkSession): Unit = {
     graft.streaming.CommitLog.current(spark, dir).foreach { c =>
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       fs.listStatus(p).foreach { s =>
         val n = s.getPath.getName
-        if (n.matches("rev=\\d+") && n != c.version) fs.delete(s.getPath, true)
+        if (n.startsWith("rev=") && n != c.version) fs.delete(s.getPath, true)
       }
     }
   }

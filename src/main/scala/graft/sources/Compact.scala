@@ -19,11 +19,11 @@ object Compact {
 
   final case class Stats(files: Long, bytes: Long, outFiles: Int)
 
-  /** Total size + file count of a path (driver-side listing, no data read). */
+  /** File count + total size of a path's data files ([[graft.core.Listing]]). */
   def dirStats(spark: SparkSession, path: String): (Long, Long) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = graft.core.Listing.files(fs, p, !_.getName.startsWith("_"))
+    val files = graft.core.Listing.files(fs, p, _ => true)
     (files.size.toLong, files.map(_.getLen).sum)
   }
 

@@ -15,6 +15,8 @@ object GraftBridge {
   /** A DataFrame over a logical plan the engine built itself. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** `schema` with every field nullable, nested ones too. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
   /** Waits until every posted listener event has been delivered: an action
     * has returned once its job ends, but listeners may not have seen its
     * last events yet. */

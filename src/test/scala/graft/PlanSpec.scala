@@ -296,9 +296,12 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  /** The `FileScan` line of the ANN index's lists in `plan`. */
+  /** The `FileScan` line of the ANN index's lists in `plan`: the scan that
+    * reads a `list_id` column (its abbreviated location may end before
+    * the `lists` dir name). */
   private def listsScan(plan: String): String =
-    plan.linesIterator.find(l => l.contains("lists") && l.contains("FileScan")).getOrElse("")
+    plan.linesIterator.find(l => l.contains("FileScan") && l.contains("list_id#"))
+      .getOrElse("")
 
   // X94 incremental-ANN index: the persisted-lists scan must read only
   // the probed lists — Spark's dynamic partition pruning on list_id (the

@@ -452,12 +452,15 @@ class JobRunnerSpec extends SparkSpec {
       .repartition(2, $"bldg_id")
       .write.partitionBy("upgrade", "state").parquet(src)
     val part = s"$src/upgrade=0/state=AK"
-    // a nested sub-directory of .parquet files (one level deeper still),
-    // a non-.parquet file and a _SUCCESS marker inside the partition
+    // a nested sub-directory of .parquet files (one level deeper still), a
+    // hidden `_`-prefixed one, a non-.parquet file and a _SUCCESS marker
+    // inside the partition
     Seq((ts("2024-03-01 00:00:00"), 3L, 5.0)).toDF("timestamp", "bldg_id", "m")
-      .write.parquet(s"$part/_nested")
+      .write.parquet(s"$part/nested")
     Seq((ts("2024-03-01 00:00:00"), 4L, 7.0)).toDF("timestamp", "bldg_id", "m")
-      .write.parquet(s"$part/_nested/deeper")
+      .write.parquet(s"$part/nested/deeper")
+    Seq((ts("2024-03-01 00:00:00"), 5L, 9.0)).toDF("timestamp", "bldg_id", "m")
+      .write.parquet(s"$part/_hidden")
     Files.write(java.nio.file.Paths.get(s"$part/notes.txt"), "not data".getBytes("UTF-8"))
     Files.write(java.nio.file.Paths.get(s"$part/_SUCCESS"), Array.emptyByteArray)
 
@@ -465,9 +468,9 @@ class JobRunnerSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       Files.walk(java.nio.file.Paths.get(part)).iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSet
+        .map(_.toString).filterNot(_.contains("/_hidden/")).toSet
     }
-    assert(expected.size === 4 && expected.count(_.contains("/_nested/")) === 2)
+    assert(expected.size === 4 && expected.count(_.contains("/nested/")) === 2)
 
     // declared schema: the scan never infers one from a footer, so the
     // unreadable notes.txt cannot be picked as the schema source
@@ -478,14 +481,44 @@ class JobRunnerSpec extends SparkSpec {
     val spec = JobSpec("rel", "2024", "AK", Seq(0), src, s"$root/nometa",
       declaredSchema = Some(declared))
     val res = JobRunner.run(spark, spec, s"$root/out", "run1")
+    // the hidden `_hidden/` dir is neither listed nor read, like Spark's
+    // own file index; every listed file, nested ones included, is read
     assert(res.ledger.listed === expected.size)
     assert(res.ledger.schemaDrift.isEmpty)
-    // Spark's scan skips `_`-prefixed directories, so the nested files are
-    // listed but never processed — they surface as discrepancies
-    assert(res.ledger.discrepancies.toSet === expected.filter(_.contains("/_nested/")))
-    assert(res.ledger.processed === 2)
-    assert(JobRunner.processedSoFar(spark, s"$root/out", spec) ===
-      expected.filterNot(_.contains("/_nested/")))
+    assert(res.ledger.discrepancies.isEmpty)
+    assert(res.ledger.processed === expected.size)
+    assert(spark.read.parquet(res.dataOut).select($"bldg_id_min").as[Long].collect().sorted
+      === Array(1L, 2L, 3L, 4L))
+    assert(JobRunner.processedSoFar(spark, s"$root/out", spec) === expected)
+  }
+
+  test("a readable zero-row file is processed; a footer-less one is a discrepancy") {
+    val root = Files.createTempDirectory("graft_etl_emptyfile").toString
+    val src = s"$root/src"
+    Seq((ts("2024-03-01 00:00:00"), 1L, 1.0, 0, "AK"))
+      .toDF("timestamp", "bldg_id", "m", "upgrade", "state")
+      .write.partitionBy("upgrade", "state").parquet(src)
+    val part = s"$src/upgrade=0/state=AK"
+    // a valid parquet file with a footer and no row
+    Seq.empty[(Timestamp, Long, Double)].toDF("timestamp", "bldg_id", "m")
+      .coalesce(1).write.parquet(s"$root/empty")
+    val empty = new java.io.File(s"$root/empty").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.copy(empty.toPath, java.nio.file.Paths.get(s"$part/zz-empty.parquet"))
+    val spec = JobSpec("rel", "2024", "AK", Seq(0), src, s"$root/nometa")
+
+    val res = JobRunner.run(spark, spec, s"$root/out", "run1")
+    assert(res.ledger.listed === 2)
+    assert(res.ledger.processed === res.ledger.listed)
+    assert(res.ledger.discrepancies.isEmpty)
+    assert(res.ledger.inputRows === 1)
+    assert(JobRunner.processedSoFar(spark, s"$root/out", spec).exists(_.endsWith("zz-empty.parquet")))
+
+    // magic bytes and no footer: still listed but not processed
+    Files.write(java.nio.file.Paths.get(s"$part/zz-corrupt.parquet"), Array[Byte](1, 2, 3, 4, 5))
+    val res2 = JobRunner.run(spark, spec, s"$root/out", "run2")
+    assert(res2.ledger.listed === 3 && res2.ledger.processed === 2)
+    assert(res2.ledger.discrepancies === Seq(s"$part/zz-corrupt.parquet"))
   }
 
   test("corrupt file surfaces in the discrepancy ledger, job still succeeds") {

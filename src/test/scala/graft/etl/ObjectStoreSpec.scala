@@ -9,17 +9,12 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
 import graft.SparkSpec
 
-/** In-process object-store stand-in: a Hadoop `FileSystem` registered under
-  * the `s3a://` scheme via `fs.s3a.impl`, backed by local disk — the same
-  * pattern Hadoop's and Spark's own committer suites use for S3 tests
-  * without a network. Renames happen to stay atomic on the local backing
-  * store; what the suite verifies is the ENGINE's half of the contract on a
-  * real `s3a://` URI (reference analog: the S3 integration test at
-  * `etl/tests/test_etl_integration.py:77-139`): scheme detection flips the
-  * committer to write-once-per-runId, dynamic partition overwrite is
-  * withheld, and outputs, manifests, and incremental scheduling all resolve
-  * on the object-store filesystem rather than the default one. */
-class FakeS3FileSystem extends RawLocalFileSystem {
+/** Local disk under another scheme: a Hadoop `FileSystem` registered
+  * through `fs.<scheme>.impl`, so paths keep their scheme end to end and
+  * every call a job makes on them goes through this class. */
+abstract class SchemeLocalFileSystem extends RawLocalFileSystem {
+  /** A constant: the base-class constructor reads it through [[getUri]]. */
+  protected def scheme: String
   private var fsUri: URI = _
   override def initialize(name: URI, conf: Configuration): Unit = {
     fsUri = URI.create(s"${name.getScheme}://${name.getAuthority}")
@@ -28,8 +23,8 @@ class FakeS3FileSystem extends RawLocalFileSystem {
   // the base-class constructor qualifies its working dir through getUri
   // before initialize() has run — fall back until the real URI is known
   override def getUri: URI =
-    if (fsUri == null) URI.create("s3a:///") else fsUri
-  override def getScheme: String = "s3a"
+    if (fsUri == null) URI.create(s"$scheme:///") else fsUri
+  override def getScheme: String = scheme
 
   // the base class's statuses load permissions LAZILY via `new File(uri)`,
   // which rejects non-file schemes — return eagerly-filled statuses instead
@@ -44,6 +39,20 @@ class FakeS3FileSystem extends RawLocalFileSystem {
     fill(super.getFileStatus(f))
   override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] =
     super.listStatus(f).map(fill)
+}
+
+/** In-process object-store stand-in: local disk registered under the
+  * `s3a://` scheme via `fs.s3a.impl` — the same pattern Hadoop's and
+  * Spark's own committer suites use for S3 tests without a network.
+  * Renames happen to stay atomic on the local backing store; what the
+  * suite verifies is the ENGINE's half of the contract on a real `s3a://`
+  * URI (reference analog: the S3 integration test at
+  * `etl/tests/test_etl_integration.py:77-139`): scheme detection flips the
+  * committer to write-once-per-runId, dynamic partition overwrite is
+  * withheld, and outputs, manifests, and incremental scheduling all resolve
+  * on the object-store filesystem rather than the default one. */
+class FakeS3FileSystem extends SchemeLocalFileSystem {
+  override protected def scheme: String = "s3a"
 }
 
 class ObjectStoreSpec extends SparkSpec {

@@ -300,15 +300,57 @@ class AnnIndexSpec extends SparkSpec {
     // vacuum drops the old revision; the current one keeps answering
     AnnIndex.vacuumRevisions(d)
     val dirs = new java.io.File(d).listFiles().map(_.getName).toSet
-    assert(!dirs.contains(s"rev=1"), s"old revision survived vacuum: $dirs")
+    assert(dirs.filter(_.startsWith("rev=")) === Set(reopened.root.stripPrefix(s"$d/")),
+      s"a revision other than the head survived vacuum: $dirs")
     assert(AnnIndex.topK(AnnIndex.open(d), qs, k = 3, nprobe = 8).count() > 0)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+  }
+
+  test("concurrent publishers: open returns the CAS winner's revision whole") {
+    val even = emb.filter($"vec_id" % 2 === 0).select($"vec_id", $"embedding")
+    val odd = emb.filter($"vec_id" % 2 === 1).select($"vec_id", $"embedding")
+    val writers = Seq((even, Ivf.train(even, k = 4, iters = 1), 0L),
+      (odd, Ivf.train(odd, k = 2, iters = 1), 1L))
+    // both publishers must read the same head epoch; one that finishes
+    // before the other starts is serial, not a race — try a fresh dir then
+    val (d, outcomes) = Iterator.continually {
+      val d = tmp()
+      val start = new java.util.concurrent.CyclicBarrier(writers.size)
+      val futures = writers.map { case (corpus, model, _) =>
+        val f = new java.util.concurrent.FutureTask[AnnIndex.Index](() => {
+          start.await()
+          AnnIndex.createWithModels(corpus, d, model, None)
+        })
+        new Thread(f).start()
+        f
+      }
+      (d, futures.map(f => scala.util.Try(
+        try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })))
+    }.take(5).find(_._2.count(_.isFailure) == 1)
+      .getOrElse(fail("the two publishers never raced in 5 attempts"))
+    val loser = outcomes.find(_.isFailure).get.failed.get
+    assert(loser.isInstanceOf[IllegalArgumentException] &&
+      loser.getMessage.contains(s"concurrent index publish at $d"), loser)
+    val winnerAt = outcomes.indexWhere(_.isSuccess)
+    val (winnerCorpus, winnerModel, parity) = writers(winnerAt)
+
+    val opened = AnnIndex.open(d)
+    assert(opened.root === outcomes(winnerAt).get.root)
+    assert(opened.coarse.k === winnerModel.k)
+    val ids = AnnIndex.lists(opened).select($"id").as[Long].collect()
+    assert(ids.forall(_ % 2 == parity), "the loser's rows leaked into the winner's lists")
+    assert(ids.sorted.toSeq === winnerCorpus.select($"vec_id").as[Long].collect().sorted.toSeq)
+    // the loser's never-committed subtree goes at vacuum
+    AnnIndex.vacuumRevisions(d)
+    assert(new java.io.File(d).listFiles().map(_.getName).filter(_.startsWith("rev=")).toSet
+      === Set(opened.root.stripPrefix(s"$d/")))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
   }
 
   test("open fails, naming the directory, when no revision was published") {
     val d = tmp()
     // a bare model at the top level is not an index: only a committed
-    // `rev=<n>` subtree is
+    // `rev=` subtree is
     Ivf.save(Ivf.train(corpus, k = 2, iters = 1), s"$d/centroids")
     val e = intercept[IllegalArgumentException](AnnIndex.open(d))
     assert(e.getMessage.contains(s"no published AnnIndex revision at $d"),

@@ -27,4 +27,23 @@ class CompactSpec extends SparkSpec {
     val after = spark.read.parquet(s"$root/out").orderBy("id").collect()
     assert(after === before)
   }
+
+  test("dirStats counts committed files only, not in-flight or hidden ones") {
+    val root = Files.createTempDirectory("graft_compact_stats").toString
+    (1 to 3).foreach { i =>
+      Seq((i.toLong, s"payload_$i")).toDF("id", "payload")
+        .coalesce(1).write.mode("append").parquet(s"$root/src")
+    }
+    val committed = new java.io.File(s"$root/src").listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    assert(committed.length === 3)
+    // a writer's in-flight task output and a hidden (e.g. half-uploaded) file
+    val inFlight = java.nio.file.Paths.get(s"$root/src/_temporary/0/part-x.parquet")
+    Files.createDirectories(inFlight.getParent)
+    Files.write(inFlight, Array.fill[Byte](1000)(1))
+    Files.write(java.nio.file.Paths.get(s"$root/src/.x.parquet"), Array.fill[Byte](500)(1))
+
+    assert(Compact.dirStats(spark, s"$root/src") ===
+      ((committed.length.toLong, committed.map(_.length).sum)))
+  }
 }
