@@ -383,21 +383,16 @@ object JobRunner {
     * pools, while jobs sharing one pool would queue FIFO inside it — a
     * large first job would still starve the rest. Executors are shared;
     * output isolation comes from the per-job subdirs (see [[jobDir]]), so
-    * concurrency needs no extra coordination. */
+    * concurrency needs no extra coordination. The threads are
+    * [[graft.core.Materialize.concurrently]]'s: every job also carries the
+    * caller's job group and description. */
   def runAllParallel(spark: SparkSession, cfg: EtlConfig,
-      runId: String): Seq[Result] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futures = cfg.jobs.zipWithIndex.map { case (spec, i) =>
-      Future {
+      runId: String): Seq[Result] =
+    graft.core.Materialize.concurrently(spark)(cfg.jobs.zipWithIndex.map {
+      case (spec, i) => () =>
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft-etl-$i")
-        try run(spark, spec, cfg.outputRoot, runId, cfg.objectStoreCommit)
-        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      }
-    }
-    Await.result(Future.sequence(futures), Duration.Inf)
-  }
+        run(spark, spec, cfg.outputRoot, runId, cfg.objectStoreCommit)
+    })
 }
 
 /** Raw passthrough copy of metadata files (S4). The reference S3-copies

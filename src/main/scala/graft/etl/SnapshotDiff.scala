@@ -85,8 +85,8 @@ object SnapshotDiff {
     * fall back to the generic [[diff]].
     *
     * The delta subtree is consumed twice (sketch build + content
-    * compare), so it is materialized once before first use
-    * ([[graft.sources.Formats.materialize]]) — an expensive lazy delta
+    * compare), so it is pinned once before first use
+    * ([[graft.core.Materialize]]) — an expensive lazy delta
     * can never be silently recomputed, and a delta that is already
     * checkpointed is used as is, with no second checkpoint job.
     *
@@ -101,7 +101,7 @@ object SnapshotDiff {
   def auditDelta(base: DataFrame, rawDelta: DataFrame,
       keys: Seq[String], numBits: Int = 1 << 24): DataFrame = {
     require(keys.nonEmpty, "at least one key column")
-    val delta = graft.sources.Formats.materialize(rawDelta)
+    val delta = graft.core.Materialize(rawDelta)
     val attrCols = base.columns.filterNot(keys.contains)
     require(delta.columns.filterNot(keys.contains).sorted.sameElements(attrCols.sorted),
       "delta must share the base's non-key columns")

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import graft.core.Materialize
+
 /** X95 — sorted-neighborhood blocking (merge/purge candidate generation).
   *
   * Record linkage cannot score all pairs: n² comparisons die at any
@@ -79,13 +81,12 @@ object Blocking {
     // boundaries are sampled, so re-executing the exchange for the
     // strips job could partition rows differently than the pairs job —
     // the strips would then describe boundaries that don't exist.
-    // localCheckpoint pins one layout (and pays one linear write, the
-    // price of exactness; the repo's standard fan-out discipline).
-    val sorted = numPartitions
+    // The pin fixes one layout (and pays one linear write, the price of
+    // exactness; the repo's standard fan-out discipline).
+    val sorted = Materialize(numPartitions
       .map(n => in.repartitionByRange(n, orderCols: _*))
       .getOrElse(in.repartitionByRange(orderCols: _*))
-      .sortWithinPartitions(orderCols: _*)
-      .localCheckpoint(true)
+      .sortWithinPartitions(orderCols: _*))
 
     val schema = in.schema
     val blockIdx = blockKeys.map(schema.fieldIndex).toArray

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** X1/X2 — deduplication operators for training-data pipelines (SURVEY §2.8).
   *
   * Scale design notes (100 TB):
@@ -198,11 +200,8 @@ object Dedup {
       textCol: String, p: MinHashParams)(
       f: DataFrame => DataFrame): (DataFrame, Long) = {
     val sk = sketch(df, idCol, textCol, p).cache()
-    try {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = f(sk).observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      (ck, obs.get("n").asInstanceOf[Long])
-    } finally sk.unpersist(false)
+    try Materialize.counted(f(sk), count(lit(1)))
+    finally sk.unpersist(false)
   }
 
   // ------------------------------------------------ shingle overlap
@@ -540,25 +539,26 @@ object Dedup {
     *    geometric. */
   private def distributedComponents(pairs: DataFrame, maxIter: Int): DataFrame = {
     val spark = pairs.sparkSession
-    // Co-partitioning contract (round 13): localCheckpoint preserves the
-    // physical outputPartitioning, so edges are pinned hash(dst, P) ONCE
-    // and every round's label table leaves its checkpoint hash(id, P).
+    // Co-partitioning contract (round 13): with AQE off, a pin keeps the
+    // physical outputPartitioning ([[Materialize]]), so edges are pinned
+    // hash(dst, P) ONCE and every round's label table leaves its
+    // checkpoint hash(id, P).
     // The two |V|⋈|E| joins of each round (neighbor-min and hop) are then
     // exchange-FREE — EnsureRequirements sees both sides hash-clustered
     // on the join key — cutting the round's sequential stage chain from
     // ~20 to ~8 (SURVEY §6.12; stage latency, not data volume, was the cost).
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .repartition(p, col("dst"))
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id")))
-      .distinct()
-      .withColumn("cluster", col("id"))
-      .repartition(p, col("id"))
-      .localCheckpoint(true)
+    val edges = Materialize(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct()
+        .repartition(p, col("dst")))
+    var labels = Materialize(
+      edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id")))
+        .distinct()
+        .withColumn("cluster", col("id"))
+        .repartition(p, col("id")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -592,12 +592,9 @@ object Dedup {
       // (the jumps leave the table keyed by `mid`); unpersist targets
       // the checkpointed frame itself — a projection on top would not
       // release the blocks.
-      val obs = org.apache.spark.sql.Observation()
-      val next = jump(jump(hop)).repartition(p, col("id"))
-        .observe(obs, sum(when(col("cluster") =!= col("old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
+      val (next, changed) = Materialize.counted(
+        jump(jump(hop)).repartition(p, col("id")),
+        sum(when(col("cluster") =!= col("old"), 1L).otherwise(0L)))
       labels.unpersist(false)
       labels = next
       converged = changed == 0

@@ -1,7 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+
+import graft.core.Materialize
 
 /** Size gate for the dedup probe sets (r17, guide §3.1 "broadcast only
   * what fits"): [[LineDedup]] and [[SpanDedup]] probe the corpus rows
@@ -12,42 +15,27 @@ import org.apache.spark.sql.functions._
   * assumption can fail and the unconditional hint builds a driver-killing
   * broadcast relation regardless of size.
   *
-  * The gate materializes the set once (`localCheckpoint(true)` — the set
-  * is needed by the join anyway, so this adds a block write of the tiny
-  * relation, not a recomputation) with an `observe()` count riding the
-  * SAME materialization job (the established convergence-count trick from
-  * [[Dedup]]'s CC loop — no second action), then:
-  *   - at or below `spark.graft.dedup.broadcastMaxKeys` keys: broadcast,
-  *     the fast path — the corpus side is never shuffled for the probe;
-  *   - above: the plain join, which the planner runs as a shuffled
-  *     hash/sort-merge join on the 8-byte hash — the corpus side shuffles
-  *     (hash, position, id) METADATA rows only, never text, so the
-  *     fallback stays inside the operators' no-text-on-the-wire contract.
-  *
-  * Default threshold: 4 M keys ≈ 32 MB of longs, ~64–128 MB as a built
-  * LongHashedRelation per executor — inside the "a few hundred MB is
-  * fine" broadcast band (guide §3.1) on any production executor, with
-  * margin for the driver that must also hold it. Clusters with small
-  * drivers lower it; fat-driver deployments can raise it. Local default
-  * keeps the driver's bench comparable (the sf sets' probe sets are
-  * orders of magnitude below it, so the gate picks the same broadcast
-  * plan the r16 hint forced).
+  * The gate pins the set once with its key count observed on the same
+  * job ([[Materialize.counted]] — the set is needed by the join anyway,
+  * so this adds a block write of the tiny relation, not a recomputation),
+  * then:
+  *   - when the keys (8-byte hashes) fit in Spark's
+  *     `spark.sql.autoBroadcastJoinThreshold`: broadcast, the fast path —
+  *     the corpus side is never shuffled for the probe. At the default
+  *     10 MB that is up to 1.31 M keys;
+  *   - otherwise, or when the threshold is negative (broadcast off): the
+  *     plain join, which the planner runs as a shuffled hash/sort-merge
+  *     join on the 8-byte hash — the corpus side shuffles (hash, position,
+  *     id) METADATA rows only, never text, so the fallback stays inside
+  *     the operators' no-text-on-the-wire contract.
   */
 object DedupGate {
 
-  /** Conf key for the broadcast-vs-shuffle threshold, in distinct keys. */
-  val maxKeysConf = "spark.graft.dedup.broadcastMaxKeys"
-  val defaultMaxKeys: Long = 4000000L
-
-  /** The probe set, materialized and counted in one job, broadcast-hinted
-    * only when it fits. */
+  /** The probe set, pinned and counted in one job, broadcast-hinted only
+    * when it fits. */
   def sizeGated(keys: DataFrame): DataFrame = {
-    val spark = keys.sparkSession
-    val maxKeys =
-      spark.conf.get(maxKeysConf, defaultMaxKeys.toString).toLong
-    val obs = Observation()
-    val ck = keys.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    val n = obs.get("n").asInstanceOf[Long]
-    if (n <= maxKeys) broadcast(ck) else ck
+    val (set, n) = Materialize.counted(keys, count(lit(1)))
+    val threshold = SQLConf.get.autoBroadcastJoinThreshold
+    if (threshold >= 0 && n * 8 <= threshold) broadcast(set) else set
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.core.Materialize
+
 /** X38 — INCREMENTAL deduplication (SURVEY §2.8): dedup each newly
   * arrived batch (a crawl drop, a day's ingest) against an accumulated
   * index of everything seen before — history is NEVER rescanned. The
@@ -35,8 +37,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale shape: per batch, one within-batch dedup (existing X1/X2
   * machinery), one anti-join / band-bucket-join against the index — the
   * index side is pre-hashed and pre-bucketed, the join is equi-keyed,
-  * nothing is quadratic. Fold lineage is cut per batch with
-  * `localCheckpoint` in the `foldBatches*` folds; callers doing their own
+  * nothing is quadratic. Fold lineage is cut per batch with a pin
+  * ([[graft.core.Materialize]]) in the `foldBatches*` folds; callers doing their own
   * folds own that (a 10 000-batch uncut lineage will not plan).
   */
 object IncrementalDedup {
@@ -78,7 +80,7 @@ object IncrementalDedup {
 
   /** The fold loop both `foldBatches*` share: from `empty`, run `step`
     * (index, batch) → (survivors, updated index) over the batches in
-    * order, cutting the index lineage with `localCheckpoint` each step;
+    * order, cutting the index lineage with a pin ([[Materialize]]) each step;
     * returns the union of every batch's survivors. */
   private def foldBatches(empty: DataFrame, batches: Seq[DataFrame])
       (step: (DataFrame, DataFrame) => (DataFrame, DataFrame)): DataFrame = {
@@ -86,7 +88,7 @@ object IncrementalDedup {
     var index = empty
     batches.map { b =>
       val (clean, updated) = step(index, b)
-      index = updated.localCheckpoint()
+      index = Materialize(updated)
       clean
     }.reduce(_ unionByName _)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.ColumnOps.doubleSortBits
 
 /** Exact grouped quantiles as a DATAFRAME PLAN instead of Spark's built-in
@@ -116,11 +117,10 @@ object Quantiles {
     // STRUCTURAL instead of canonicalization-fragile; the blocks are
     // ContextCleaner-reclaimed. Callers sharing the pattern (q51, Robust's
     // median/MAD, x58 winsorize) all inherit the removed scan.
-    val bucketCounts = melt(df)
+    val bucketCounts = Materialize(melt(df)
       .select(col("__g"), col("__t"), bucketId(col("__v")).as("__b"))
       .groupBy(col("__g"), col("__t"), col("__b"))
-      .agg(count(lit(1)).as("__bc"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__bc")))
     val wCum = Window.partitionBy(col("__g"), col("__t")).orderBy(col("__b"))
     val spans = bucketCounts
       .filter(col("__b").isNotNull)

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** X39 — damped PageRank over a weighted directed edge list (SURVEY
   * §2.8): the standard graph-centrality pass a crawl pipeline runs to
   * prioritize domains/hosts before fetching — and the suite's only
@@ -18,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: per iteration one equi-join ranks⋈edges on src and one
   * groupBy(dst) partial-aggregated sum — both shuffle (id, double) pairs,
   * never adjacency lists; the rank table is nodes-sized, edges stream.
-  * Lineage is cut per iteration (`localCheckpoint`) so deep iteration
+  * Lineage is cut per iteration ([[Materialize]]) so deep iteration
   * counts do not accrete an unplannable tree — same discipline as
   * [[Dedup.connectedComponents]]' loop. Total node count is computed once
   * and broadcast as a literal-free 1-row join (no driver collect of data,
@@ -45,16 +47,14 @@ object Rank {
     require(damping >= 0 && damping <= 1, s"damping out of range: $damping")
     val e = edges.select(col("src"), col("dst"), col("w").cast("double"))
     val outw = e.groupBy("src").agg(sum("w").as("ow"))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
+    val nodes = Materialize(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     // N as a 1-row frame joined in (cross join of a single row — stays a
     // broadcast, never a driver-side collect of table data)
     val n = nodes.agg(count(lit(1)).as("n_nodes"))
 
-    var ranks = nodes.crossJoin(n)
-      .select(col("id"), (lit(1.0) / col("n_nodes")).as("rank"))
-      .localCheckpoint()
+    var ranks = Materialize(nodes.crossJoin(n)
+      .select(col("id"), (lit(1.0) / col("n_nodes")).as("rank")))
     for (_ <- 0 until iterations) {
       val contrib = e
         .join(outw, "src")
@@ -62,12 +62,11 @@ object Rank {
         .select(col("dst").as("id"),
           (col("rank") * col("w") / col("ow")).as("c"))
         .groupBy("id").agg(sum("c").as("inflow"))
-      ranks = nodes.join(contrib, Seq("id"), "left")
+      ranks = Materialize(nodes.join(contrib, Seq("id"), "left")
         .crossJoin(n)
         .select(col("id"),
           ((lit(1.0) - damping) / col("n_nodes") +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-        .localCheckpoint()
+            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank")))
     }
     ranks
   }

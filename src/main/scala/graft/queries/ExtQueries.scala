@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.ext.{CrossDedup, Dedup, Multimodal, NgramJaccard, SemDedup, Similarity, SimHash, Skew, TextStats}
 import graft.streaming.StreamingContamination
 
@@ -1202,9 +1202,8 @@ object ExtQueries {
     // `near` measured as a 5.2 → 13.1 s flagship regression at sf0.1).
     // Materialize each cleaning stage once — the production persist-
     // between-phases pattern this pipeline already uses at `policed`.
-    val lineClean = graft.ext.LineDedup
-      .dedupLines(near.localCheckpoint(true), "doc_id", "text", 100L)
-      .localCheckpoint(true)
+    val lineClean = Materialize(graft.ext.LineDedup
+      .dedupLines(Materialize(near), "doc_id", "text", 100L))
     val spanClean = graft.ext.SpanDedup.dedupSpans(lineClean, "doc_id", "text", k = 8)
     // r16: filter directly instead of withColumn+filter — the pushed-down
     // filter predicate and the projected column each evaluated the full
@@ -1224,9 +1223,8 @@ object ExtQueries {
     // materialization each reference re-executes the whole dedup chain
     // (the production pattern: persist the corpus between pipeline
     // phases). Measured at the 100x set: 47.7 s -> 12.6 s.
-    val policed = graft.ext.Blocklist.filterBlocked(screened, "text",
-        Seq("forbidden content", "do not train", "opt out"))
-      .localCheckpoint(true)
+    val policed = Materialize(graft.ext.Blocklist.filterBlocked(screened, "text",
+        Seq("forbidden content", "do not train", "opt out")))
     // round 7: the model-based curation stages join the flagship —
     // bigram-LM tail drop (worst-perplexity decile out, X43+X29),
     // linear quality-model cut (X49), per-domain contribution cap (X51)
@@ -1240,8 +1238,8 @@ object ExtQueries {
     // tiling passes read that), then join the surviving doc_ids back to
     // the checkpointed corpus. Same rows, same (nll, doc_id) tie order,
     // same tiles — the x0_pipeline oracle face pins it.
-    val nllRel = graft.ext.NgramLm.selfScore(policed)
-      .select(col("doc_id"), col("nll")).localCheckpoint(true)
+    val nllRel = Materialize(graft.ext.NgramLm.selfScore(policed)
+      .select(col("doc_id"), col("nll")))
     val lmTiles = graft.ext.Tiling
       .ntileByValue(nllRel, 10, "nll", "doc_id", "ppl_tile")
       .filter(col("ppl_tile") <= 9)
@@ -1332,7 +1330,7 @@ object ExtQueries {
             .otherwise(""),
           lit("</p></body></html>")).as("html"))
     // visible text ONCE (vr shares it \u2014 the strip never runs twice).
-    // localCheckpoint is a PUSHDOWN BARRIER, not a convenience: without
+    // the pin is a PUSHDOWN BARRIER, not a convenience: without
     // it Catalyst pushes the vr/quality screen (whose predicate inlines
     // the whole strip_html chain ~12\u00d7) through the join into the
     // pre-dedup documents scan \u2014 re-stripping every page the dedup was
@@ -1340,15 +1338,14 @@ object ExtQueries {
     // materialized relation is the post-dedup corpus with its text \u2014
     // bounded by the survivor count, the same barrier x0_pipeline pays
     // at `policed`.
-    val extracted = pages
+    val extracted = Materialize(pages
       .withColumn("clean0", graft.ext.Html.stripTags(col("html")))
       .select(id, col("rdom"),
         graft.functions.ColumnOps.fixMojibake(col("clean0")).as("text"),
         when(length(col("html")) > 0,
           length(col("clean0")).cast("double") /
             length(col("html")).cast("double"))
-          .otherwise(0.0).as("vr"))
-      .localCheckpoint(true)
+          .otherwise(0.0).as("vr")))
     val screened = extracted
       .withColumn("quality", TextStats.qualityScore(col("text")))
       .withColumn("n_tokens", TextStats.tokenCount(col("text")).cast("long"))
@@ -1430,7 +1427,7 @@ object ExtQueries {
     * same SQL with its native IEJoin — the oracle pins semantics;
     * RangeRewriteSpec pins plan + edge cases.
     *
-    * The result is materialized (localCheckpoint) INSIDE the conf scope:
+    * The result is pinned ([[Materialize]]) INSIDE the conf scope:
     * Spark plans lazily, and the driver's write happens after this
     * function returns — without the eager step the rule would see an
     * unset conf and silently fall back to the nested-loop plan. */
@@ -1449,7 +1446,7 @@ object ExtQueries {
       val plan = out.queryExecution.executedPlan.toString
       require(!plan.contains("BroadcastNestedLoopJoin"),
         "x34: RangeJoinRewrite did not fire — nested-loop join in plan")
-      out.localCheckpoint()
+      Materialize(out)
     } finally s.conf.unset(graft.plans.RangeJoinRewrite.BinWidthKey)
   }
 
@@ -1479,7 +1476,7 @@ object ExtQueries {
       val plan = out.queryExecution.executedPlan.toString
       require(!plan.contains("BroadcastNestedLoopJoin"),
         "x35: OverlapJoinRewrite did not fire — nested-loop join in plan")
-      out.localCheckpoint()
+      Materialize(out)
     } finally s.conf.unset(graft.plans.OverlapJoinRewrite.BinWidthKey)
   }
 
@@ -1940,8 +1937,8 @@ object ExtQueries {
     // tiling needs two passes over its input (bucket counts, then
     // ranks); pin the EXPENSIVE upstream (the LM scoring joins) once so
     // both passes read the small (doc_id, nll) relation — q80's lesson
-    val scored = graft.ext.NgramLm.selfScore(t(s, d, "documents"))
-      .select(col("doc_id"), col("nll")).localCheckpoint(true)
+    val scored = Materialize(graft.ext.NgramLm.selfScore(t(s, d, "documents"))
+      .select(col("doc_id"), col("nll")))
     graft.ext.Tiling.ntileByValue(scored, 3, "nll", "doc_id", "bucket")
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"), round(avg(col("nll")), 4).as("avg_nll"))
@@ -2050,11 +2047,10 @@ object ExtQueries {
     // ranks), which re-ran the corpus tokenize+explode+count twice —
     // checkpoint the REDUCED vocab-sized (word, f) relation so both
     // tiling passes read that (the x50/x0_pipeline pattern)
-    val tf = t(s, d, "documents")
+    val tf = Materialize(t(s, d, "documents")
       .select(explode(TextStats.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
-      .withColumn("negf", -col("f").cast("double"))
-      .localCheckpoint(true)
+      .withColumn("negf", -col("f").cast("double")))
     val ranked = graft.ext.Tiling.ntileByValue(tf, 1, "negf", "word")
     ranked.agg(
         round(regr_slope(log(col("f")), log(col("__rank"))), 4).as("slope"),
@@ -2824,10 +2820,9 @@ object ExtQueries {
     // 450 longs). The checkpoint also lets the three concurrent
     // fingerprint builds below start from memory instead of racing on
     // the same parquet listing.
-    val ids = t(s, d, "documents")
+    val ids = Materialize(t(s, d, "documents")
       .filter(col("doc_id") < 450).select(col("doc_id")).as[Long]
-      .repartition(math.min(450, s.sparkContext.defaultParallelism))
-      .localCheckpoint(true)
+      .repartition(math.min(450, s.sparkContext.defaultParallelism)))
     // seed arithmetic per modality: regular groups below 360, the
     // over-cap mega-group above (seed 100000 collides with no i % G)
     def seedOf(i: Long, g: Long): Long = if (i >= 360) 100000L else i % g
@@ -2876,17 +2871,10 @@ object ExtQueries {
     // Flagships) while
     // each leaves most cores idle in its tail. Same blocks, same rows —
     // only the job submission overlaps. FAIR scheduling is already on.
-    val Seq(imgFp, audFp, vidFp) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      Await.result(Future.sequence(Seq(
-        Future(graft.ext.ImageDedup.fingerprints(images).localCheckpoint(true)),
-        Future(graft.ext.AudioDedup.fingerprints(audio).localCheckpoint(true)),
-        Future(graft.ext.VideoDedup.fingerprints(videos).localCheckpoint(true)))),
-        Duration.Inf)
-    }
+    val Seq(imgFp, audFp, vidFp) = Materialize.all(
+      graft.ext.ImageDedup.fingerprints(images),
+      graft.ext.AudioDedup.fingerprints(audio),
+      graft.ext.VideoDedup.fingerprints(videos))
     // r17 (guide §2.6 again, downstream this time): the post-checkpoint
     // report subtrees are ~10 tiny exchanges per modality over 450-row
     // long relations — pure AQE job-floor cost (OPTIMIZATION_r17.md
@@ -2896,23 +2884,13 @@ object ExtQueries {
     // independent single-row relations; materializing them concurrently
     // overlaps those floors exactly as the fingerprint build already
     // does. Same rows, same union order.
-    val Seq(imgRep, audRep, vidRep) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      Await.result(Future.sequence(Seq(
-        Future(report("image", imgFp, "dhash",
-          graft.ext.ImageDedup.exactDupPairs(imgFp, maxChunkFreq = Some(64)))
-          .localCheckpoint(true)),
-        Future(report("audio", audFp, "sig",
-          graft.ext.AudioDedup.exactDupPairs(audFp, maxChunkFreq = Some(64)))
-          .localCheckpoint(true)),
-        Future(report("video", vidFp, "sig",
-          graft.ext.VideoDedup.exactDupPairs(vidFp, maxChunkFreq = Some(64)))
-          .localCheckpoint(true)))),
-        Duration.Inf)
-    }
+    val Seq(imgRep, audRep, vidRep) = Materialize.all(
+      report("image", imgFp, "dhash",
+        graft.ext.ImageDedup.exactDupPairs(imgFp, maxChunkFreq = Some(64))),
+      report("audio", audFp, "sig",
+        graft.ext.AudioDedup.exactDupPairs(audFp, maxChunkFreq = Some(64))),
+      report("video", vidFp, "sig",
+        graft.ext.VideoDedup.exactDupPairs(vidFp, maxChunkFreq = Some(64))))
     imgRep.unionByName(audRep).unionByName(vidRep).orderBy(col("modality"))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 
 /** The declared oracle query set (SURVEY §2.9, Q01–Q20): every reference
   * operator shape re-expressed as an idiomatic Spark DataFrame plan, plus the
@@ -1087,18 +1087,17 @@ object Queries {
     // the delta builds in ONE scan with CASE projections instead of a
     // two-scan union
     val isUpd = col("o_orderkey") % 10 === 3
-    val delta = o.filter(isUpd || col("o_orderkey") % 100 === 7)
+    // in production the applied delta is a MATERIALIZED input; the pin
+    // stands in for that so the audit's two uses of it (key broadcast +
+    // content compare) don't re-derive the subtree
+    val delta = Materialize(o.filter(isUpd || col("o_orderkey") % 100 === 7)
       .select(
         when(isUpd, col("o_orderkey")).otherwise(col("o_orderkey") + 100000000L)
           .as("o_orderkey"),
         col("o_custkey"),
         when(isUpd, lit("U")).otherwise(lit("N")).as("o_orderstatus"),
         when(isUpd, col("o_totalprice") * 2).otherwise(col("o_totalprice"))
-          .as("o_totalprice"))
-      // in production the applied delta is a MATERIALIZED input; the
-      // checkpoint stands in for that so the audit's two uses of it
-      // (key broadcast + content compare) don't re-derive the subtree
-      .localCheckpoint(true)
+          .as("o_totalprice")))
     // the delta is IN HAND here (the run built it), so the audit is
     // delta-sized: auditDelta ≡ diff(o, upsert(o, delta)) — the after
     // image is never derived, the wide base never shuffles (broadcast
@@ -1306,7 +1305,7 @@ object Queries {
     // materialize the edge relation ONCE: a CTE referenced inside the
     // recursive member is re-derived by every UnionLoop iteration
     // (scan + DISTINCT shuffle × depth) — the mistake a production
-    // iterative job must not make; localCheckpoint pins it so each step
+    // iterative job must not make; Materialize pins it so each step
     // joins the frontier against an in-memory relation.
     // Round-9 profile (SURVEY §6.8, at sf10): the cost was never the 254
     // recursion rows — it was (a) the DISTINCT shuffle building the FULL
@@ -1328,16 +1327,15 @@ object Queries {
     // Measured 1.66 → 1.05 s at sf10; the rest is the orders scan + ~3
     // job floors. The oracle runs the same recursion shape with the
     // UNRESTRICTED inline CTE — DuckDB evaluates CTEs once.
-    t(s, d, "orders")
+    Materialize(t(s, d, "orders")
       .filter(col("o_orderkey") % 7 === 0 && col("o_custkey") < 1500)
       .select(col("o_custkey").as("src"), (col("o_orderkey") % 1500).as("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
       .createOrReplaceTempView("q80_edges")
     // the recursion result feeds BOTH union branches below; Spark inlines
     // CTEs, which would run the whole UnionLoop twice — checkpoint the
     // (254-row) even-depth relation once instead
-    s.sql(
+    Materialize(s.sql(
       """WITH RECURSIVE reach2(seed, node, depth) AS (
         |  SELECT src, src, 0
         |  FROM (SELECT DISTINCT src FROM q80_edges WHERE src < 40) s
@@ -1347,8 +1345,7 @@ object Queries {
         |  JOIN q80_edges e1 ON e1.src = r.node
         |  JOIN q80_edges e2 ON e2.src = e1.dst
         |  WHERE r.depth + 2 <= 3)
-        | SELECT seed, node, depth FROM reach2""".stripMargin)
-      .localCheckpoint(true)
+        | SELECT seed, node, depth FROM reach2""".stripMargin))
       .createOrReplaceTempView("q80_reach2")
     s.sql(
       """WITH reach AS (

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Materialize
+
 /** Text source/sink parity (SURVEY §2.1 widened): CSV and JSON-lines
   * ingestion/egress with the same partitioned-layout contract as the
   * parquet path.
@@ -39,27 +41,15 @@ object Formats {
       .option("columnNameOfCorruptRecord", CorruptCol)
       .json(path)
 
-  /** ONE full materialized parse serving every ledger-style consumer:
-    * pass the result to [[corruptRows]] AND [[parseLedger]] to avoid
-    * re-parsing (each materializes on its own when handed a raw read).
-    * Materialization is required for corrupt-record queries — Spark
-    * refuses a scan whose required schema is the corrupt column alone,
-    * since corruptness is only defined relative to parsing the data
-    * columns. A `df` that is already a checkpoint comes back as is, with
-    * no job run. */
-  def materialize(df: DataFrame): DataFrame =
-    if (isMaterialized(df)) df else df.localCheckpoint(true)
-
-  private def isMaterialized(df: DataFrame): Boolean =
-    df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-
   /** Rows whose source line failed to parse (for a discrepancy ledger).
     * Spark disallows querying ONLY the corrupt-record column straight off a
     * text scan (column pruning would leave nothing to parse), so the rows
-    * are [[materialize]]d once — which is what a ledger pass wants anyway:
-    * one read serving both the parsed and corrupt streams. */
+    * are pinned once ([[graft.core.Materialize]]) — which is what a ledger
+    * pass wants anyway: one read serving both the parsed and corrupt
+    * streams. Hand it a pinned frame to share the parse with
+    * [[parseLedger]]; a pinned frame is not pinned again. */
   def corruptRows(df: DataFrame): DataFrame = {
-    val fixed = materialize(df)
+    val fixed = Materialize(df)
     fixed.filter(fixed(CorruptCol).isNotNull)
   }
 
@@ -74,10 +64,10 @@ object Formats {
 
   /** Parsed/corrupt counts off a full materialized parse (the per-file
     * discrepancy accounting of the reference's ledger, at row granularity).
-    * Hand it a [[materialize]]d frame to share the parse with
-    * [[corruptRows]]. */
+    * Hand it a pinned frame ([[graft.core.Materialize]]) to share the
+    * parse with [[corruptRows]]. */
   def parseLedger(df: DataFrame): ParseLedger = {
-    val fixed = materialize(df)
+    val fixed = Materialize(df)
     val corrupt = fixed.filter(fixed(CorruptCol).isNotNull).count()
     ParseLedger(fixed.count() - corrupt, corrupt)
   }

@@ -27,10 +27,13 @@ import graft.{SparkEntry, core}
   * exception: Spark counts them per JVM, so a phase's `compiles` also
   * holds what other threads compiled meanwhile. After each phase the
   * listener bus is drained, so every event the phase caused is counted
-  * toward it and none leaks into the next. Phases share one group id
-  * rather than one each because pool threads inherit the group of the
-  * thread that created them: a Future pool made during one run (the media
-  * flagship's) would otherwise launch later runs' jobs under a stale group.
+  * toward it and none leaks into the next. Engine code that runs jobs on
+  * other threads (`core.Materialize.concurrently`, the media flagship's
+  * concurrent pins) hands them the calling thread's group, so those jobs
+  * count toward the phase that started them. Phases still share one group
+  * id: a pool outside the engine keeps the group its threads were created
+  * under, and with one id such jobs still count when those threads were
+  * made during an earlier phase.
   *
   * Usage: `Profile [--sf DIR] [--runs N] [--explain] name...`. `--sf`
   * defaults to /root/testdata/sf0.1; cores come from `core.Sessions.local`.

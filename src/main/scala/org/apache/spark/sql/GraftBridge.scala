@@ -21,6 +21,17 @@ object GraftBridge {
     * has returned once its job ends, but listeners may not have seen its
     * last events yet. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  /** A copy of this thread's Spark local properties: job group,
+    * description, scheduler pool, call site. */
+  def localProperties(sc: SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+  /** Runs `body` with a copy of `props` as this thread's Spark local
+    * properties, then gives the thread its own back. */
+  def withLocalProperties[T](sc: SparkContext, props: java.util.Properties)(body: => T): T = {
+    val own = sc.getLocalProperties
+    sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
+    try body finally sc.setLocalProperties(own)
+  }
   /** Classes Janino has compiled in this JVM so far: one per codegen cache
     * miss, counted by Spark's `private[spark]` codegen metrics source. */
   def compilations: Long =

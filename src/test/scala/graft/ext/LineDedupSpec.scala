@@ -85,12 +85,10 @@ class LineDedupSpec extends SparkSpec {
       (1L, "spam\nkeep1\neggs"), (2L, "spam\neggs"), (3L, "spam\nkeep3"),
       (4L, "eggs\nspam"))
     val expected = clean(docs, 2L) // broadcast path (default gate)
-    // force the fallback: gate at 0 removes the hint; auto-broadcast must
-    // also be off because the checkpointed heavy set carries its REAL
-    // (tiny) size, which the planner would otherwise broadcast on its
-    // own — at scale that estimate exceeding the threshold IS the
-    // fallback trigger, here we simulate it
-    spark.conf.set(DedupGate.maxKeysConf, "0")
+    // force the fallback: a negative broadcast threshold removes the
+    // gate's hint, and the planner's own broadcast of the checkpointed
+    // heavy set, which carries its REAL (tiny) size — at scale that size
+    // exceeding the threshold IS the fallback trigger, here we simulate it
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       assert(clean(docs, 2L) === expected, "fallback path must agree")
@@ -98,9 +96,8 @@ class LineDedupSpec extends SparkSpec {
         .dedupLines(docs.toDF("doc_id", "text"), "doc_id", "text", 2L)
         .queryExecution.sparkPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
-        s"gate at 0 must not hint a broadcast:\n$plan")
+        s"a negative threshold must not hint a broadcast:\n$plan")
     } finally {
-      spark.conf.unset(DedupGate.maxKeysConf)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }

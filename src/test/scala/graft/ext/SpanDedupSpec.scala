@@ -91,10 +91,9 @@ class SpanDedupSpec extends SparkSpec {
       (2L, "the same old passage again and unique two"),
       (3L, "entirely fresh prose lives here"))
     val expected = clean(docs, 3) // broadcast path (default gate)
-    // gate at 0 removes the hint; auto-broadcast off too, because the
-    // checkpointed dup set carries its real (tiny) size and the planner
-    // would broadcast it unaided — see LineDedupSpec's twin test
-    spark.conf.set(DedupGate.maxKeysConf, "0")
+    // a negative broadcast threshold removes the gate's hint AND the
+    // planner's own broadcast of the checkpointed dup set, which carries
+    // its real (tiny) size — see LineDedupSpec's twin test
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       assert(clean(docs, 3) === expected, "fallback path must agree")
@@ -102,9 +101,8 @@ class SpanDedupSpec extends SparkSpec {
         .dedupSpans(docs.toDF("doc_id", "text"), "doc_id", "text", k = 3)
         .queryExecution.sparkPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
-        s"gate at 0 must not hint a broadcast:\n$plan")
+        s"a negative threshold must not hint a broadcast:\n$plan")
     } finally {
-      spark.conf.unset(DedupGate.maxKeysConf)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }

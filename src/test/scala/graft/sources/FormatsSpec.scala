@@ -46,7 +46,7 @@ class FormatsSpec extends SparkSpec {
     Files.write(Paths.get(root, "data.csv"),
       "id,name,score\n1,a,1.5\nnot-a-long,b,oops\n3,c,3.5\n".getBytes)
     // one materialized parse shared by the ledger and the corrupt stream
-    val back = Formats.materialize(Formats.readCsv(spark, s"$root/data.csv", schema))
+    val back = graft.core.Materialize(Formats.readCsv(spark, s"$root/data.csv", schema))
     val ledger = Formats.parseLedger(back)
     assert(ledger === Formats.ParseLedger(parsed = 2, corrupt = 1))
     // the lazy parsed path works for any query touching a data column
