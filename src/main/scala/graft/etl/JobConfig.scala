@@ -4,9 +4,10 @@ package graft.etl
   * (`/root/reference/README.md:50-107`, consumed at
   * `/root/reference/etl/oedi_etl/main.py:69-93`).
   *
-  * AWS-only knobs (bucket names, crawler names, listing page size,
-  * backpressure caps, idle timeout) either dissolve into Spark's scheduler
-  * (SURVEY §2.7) or become the streaming options on [[JobRunner]].
+  * AWS-only knobs (bucket names, crawler names, backpressure caps) dissolve
+  * into Spark's scheduler (SURVEY §2.7). The listing page size is
+  * `maxFilesPerTrigger` of [[JobRunner.runStream]], and the idle timeout its
+  * `AvailableNow` trigger.
   */
 final case class JobSpec(
     releaseName: String,

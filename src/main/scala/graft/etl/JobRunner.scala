@@ -1,11 +1,13 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.ledger.Ledger
@@ -103,8 +105,9 @@ object JobRunner {
       metadataOut(outputRoot, runId, spec))
   }
 
-  /** What [[run]] and [[runIncremental]] share, over one listing: footer
-    * pass, scan, aggregate, partitioned write, bypass, ledger, manifest. */
+  /** What [[run]], [[runIncremental]] and each [[runStream]] batch share,
+    * over one listing: footer pass, scan, aggregate, partitioned write,
+    * bypass, ledger, manifest. */
   private def process(spark: SparkSession, spec: JobSpec, outputRoot: String, runId: String,
       objectStoreCommit: Option[Boolean], files: Seq[Listed]): Result = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -258,13 +261,18 @@ object JobRunner {
     finally out.close()
   }
 
+  /** The requested `upgrade=`/`state=` prefixes, fs-qualified. */
+  private def prefixes(spark: SparkSession, spec: JobSpec): (FileSystem, Seq[Path]) = {
+    val fs = new Path(spec.srcRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, spec.upgrades.map(u =>
+      fs.makeQualified(new Path(s"${spec.srcRoot}/upgrade=$u/state=${spec.state}"))))
+  }
+
   /** The job's one listing: each requested prefix's `.parquet` files. */
   private[etl] def listParquet(spark: SparkSession, spec: JobSpec): Seq[Listed] = {
-    val fs = new Path(spec.srcRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spec.upgrades.flatMap { u =>
-      val dir = fs.makeQualified(new Path(s"${spec.srcRoot}/upgrade=$u/state=${spec.state}"))
-      graft.core.Listing.files(fs, dir, _.getName.endsWith(".parquet")).map(Listed(dir, _))
-    }
+    val (fs, dirs) = prefixes(spark, spec)
+    dirs.flatMap(dir =>
+      graft.core.Listing.files(fs, dir, _.getName.endsWith(".parquet")).map(Listed(dir, _)))
   }
 
   /** What `spark.read.schema(schema).option("basePath", srcRoot)
@@ -356,6 +364,52 @@ object JobRunner {
     val prior = processedSoFar(spark, outputRoot, spec)
     process(spark, spec, outputRoot, runId, objectStoreCommit,
       listParquet(spark, spec).filterNot(f => prior.contains(f.path)))
+  }
+
+  /** Stream run: every source file no earlier batch under `checkpointDir`
+    * has taken, `maxFilesPerTrigger` whole files per micro-batch (the
+    * reference's listing page size), each micro-batch through the same
+    * step as [[run]] — footer pass, corrupt-file tolerance, the
+    * file-local plan, metadata bypass, ledger and manifest — as run
+    * `batch-<id>` under `outputRoot`. The stream only lists: a
+    * `binaryFile` source over the requested prefixes that never reads a
+    * file's content, so the batch's files reach the step as its listing.
+    * A batch that failed is replayed with the same files and run id on
+    * restart and replaces its first attempt. The `AvailableNow` trigger
+    * drains what is there and returns (the reference's idle watchdog);
+    * re-invoke on a schedule. The manifests are [[runIncremental]]'s, so
+    * a later `runIncremental` into `outputRoot` skips every file a batch
+    * processed. Batches union cleanly under [[runIncremental]]'s
+    * precondition, with batches in place of runs: no group spans two.
+    * Returns the results of the batches this call ran. */
+  def runStream(spark: SparkSession, spec: JobSpec, outputRoot: String,
+      checkpointDir: String, maxFilesPerTrigger: Int = 500): Seq[Result] = {
+    val (_, dirs) = prefixes(spark, spec)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Result]()
+    // `path` is the Hadoop path's decoded string form: parse it as a path,
+    // not as a URI, so no escape is decoded twice
+    def runBatch(batch: DataFrame, id: Long): Unit = {
+      val files = batch.collect().toSeq.map { r =>
+        val status = new FileStatus(r.getLong(1), false, 0, 0,
+          r.getTimestamp(2).getTime, new Path(r.getString(0)))
+        val file = status.getPath.toString
+        Listed(dirs.find(d => file.startsWith(s"$d/")).get, status)
+      }
+      results.add(process(spark, spec, outputRoot, s"batch-$id", None, files))
+    }
+    spark.readStream.format("binaryFile").schema(BinaryFileFormat.schema)
+      .option("pathGlobFilter", "*.parquet")
+      .option("recursiveFileLookup", "true")
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .load(s"${spec.srcRoot}/upgrade={${spec.upgrades.mkString(",")}}/state=${spec.state}")
+      .select("path", "length", "modificationTime")
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(runBatch _)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    results.toArray(Array.empty[Result]).toSeq
   }
 
   /** Run every job in a config (reference `main.py:64-108` fan-out; jobs are

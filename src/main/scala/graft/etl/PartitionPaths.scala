@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
   * `/root/reference/etl/oedi_etl/fetch.py:19-37,60-83`).
   *
   * The reference "pushes down" partition predicates by constructing listing
-  * prefixes so non-matching data is never touched. In the Spark engine the
-  * same pruning happens declaratively (Catalyst's PruneFileSourcePartitions
-  * on `upgrade=`/`state=` hive dirs); these helpers keep the upgrade label
-  * and the metadata-filename convention.
+  * prefixes so non-matching data is never touched. The engine does the
+  * same: [[JobRunner]] lists only the requested `upgrade=`/`state=`
+  * prefixes and scans exactly what it listed; these helpers keep the
+  * upgrade label and the metadata-filename convention.
   */
 object PartitionPaths {
 

@@ -1,15 +1,20 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
-import graft.etl.{JobRunner, JobSpec}
+import graft.etl.{JobRunner, JobSpec, SchemeLocalFileSystem}
 
 /** An OEDI-shaped source: one file per building, each holding the
   * building's whole multi-day 15-min series under `upgrade=0/state=AK`. */
@@ -17,7 +22,7 @@ private object HourlyFixture {
   val Buildings = 7
   val Days = 2
 
-  def write(spark: SparkSession, src: String): StructType = {
+  def write(spark: SparkSession, src: String): Unit = {
     import spark.implicits._
     val t0 = Timestamp.valueOf("2024-05-01 00:00:00").getTime
     (1L to Buildings.toLong).foreach { b =>
@@ -26,7 +31,6 @@ private object HourlyFixture {
         .toDF("timestamp", "bldg_id", "m", "out.m2", "upgrade", "state")
         .coalesce(1).write.mode("append").partitionBy("upgrade", "state").parquet(src)
     }
-    spark.read.parquet(src).schema
   }
 
   /** Stored hourly rows in the job's column order, sorted. */
@@ -36,26 +40,114 @@ private object HourlyFixture {
       .orderBy("bldg_id_min", "timestamp").collect().toSeq
 }
 
+/** The ETL's file stream: `JobRunner.runStream` over the same source as
+  * `JobRunner.run`, through the same per-batch step. */
+private object EtlStream {
+  def spec(src: String, root: String): JobSpec =
+    JobSpec("rel", "2024", "AK", Seq(0), src, s"$root/nometa")
+
+  /** The hourly rows stored under every one of `dataOuts`, in one frame. */
+  def storedAt(spark: SparkSession, dataOuts: Seq[String]): DataFrame =
+    dataOuts.map(spark.read.parquet(_)).reduce(_ unionByName _)
+
+  /** The hourly rows every batch with output stored. */
+  def stored(spark: SparkSession, results: Seq[JobRunner.Result]): DataFrame =
+    storedAt(spark, results.filter(_.ledger.outputRows > 0).map(_.dataOut))
+
+  /** The `.parquet` files under `dir`, as the ledger writes them. */
+  def parquetFiles(dir: String): Set[String] =
+    Files.list(Paths.get(dir)).iterator.asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSet
+}
+
 class StreamingSpec extends SparkSpec {
+  import EtlStream._
 
   test("file stream in micro-batches equals JobRunner.run row for row") {
     val root = Files.createTempDirectory("graft_stream").toString
-    val schema = HourlyFixture.write(spark, s"$root/src")
-    StreamingHourly.run(spark, s"$root/src", schema, s"$root/out", s"$root/ckpt",
-      maxFilesPerTrigger = 2)
+    HourlyFixture.write(spark, s"$root/src")
+    val results = JobRunner.runStream(spark, spec(s"$root/src", root), s"$root/out",
+      s"$root/ckpt", maxFilesPerTrigger = 2)
     // 7 files, 2 per trigger: four micro-batches
-    assert(BatchStore.ids(spark, s"$root/out", "batch_id").sorted === Seq(0L, 1L, 2L, 3L))
+    assert(results.map(_.ledger.listed) === Seq(2, 2, 2, 1))
 
     val res = JobRunner.run(spark,
       JobSpec("rel", "2024", "AK", Seq(0), s"$root/src", s"$root/nometa"),
       s"$root/job", "run1")
     val batch = HourlyFixture.rows(spark.read.parquet(res.dataOut))
-    val streamed = HourlyFixture.rows(spark.read.parquet(s"$root/out"))
+    val streamed = HourlyFixture.rows(stored(spark, results))
     assert(batch.length === HourlyFixture.Buildings * HourlyFixture.Days * 24)
     assert(streamed === batch)
     // each building's last hour is there: no group waits on a watermark
     val last = Timestamp.valueOf("2024-05-02 23:00:00")
     assert(streamed.count(_.getTimestamp(0) == last) === HourlyFixture.Buildings)
+  }
+
+  test("a corrupt file is one batch's discrepancy, not the stream's failure") {
+    val root = Files.createTempDirectory("graft_stream_corrupt").toString
+    val src = s"$root/src"
+    HourlyFixture.write(spark, src)
+    val corrupt = s"$src/upgrade=0/state=AK/zz-corrupt.parquet"
+    Files.write(Paths.get(corrupt), Array[Byte](1, 2, 3, 4, 5)) // no footer
+    val results = JobRunner.runStream(spark, spec(src, root), s"$root/out",
+      s"$root/ckpt", maxFilesPerTrigger = 2)
+    assert(results.size === 4)
+    assert(results.map(_.ledger.listed).sum === HourlyFixture.Buildings + 1)
+    assert(results.map(_.ledger.discrepancies).filter(_.nonEmpty) === Seq(Seq(corrupt)))
+
+    val res = JobRunner.run(spark, spec(src, root), s"$root/job", "run1")
+    assert(res.ledger.discrepancies === Seq(corrupt))
+    assert(HourlyFixture.rows(stored(spark, results)) ===
+      HourlyFixture.rows(spark.read.parquet(res.dataOut)))
+    // the checkpoint holds every file, the corrupt one too: nothing to redo
+    assert(JobRunner.runStream(spark, spec(src, root), s"$root/out", s"$root/ckpt",
+      maxFilesPerTrigger = 2).isEmpty)
+  }
+
+  test("a drained stream leaves runIncremental nothing to list") {
+    val root = Files.createTempDirectory("graft_stream_handoff").toString
+    val src = s"$root/src"
+    HourlyFixture.write(spark, src)
+    JobRunner.runStream(spark, spec(src, root), s"$root/out", s"$root/ckpt",
+      maxFilesPerTrigger = 2)
+    val all = parquetFiles(s"$src/upgrade=0/state=AK")
+    assert(JobRunner.processedSoFar(spark, s"$root/out", spec(src, root)) === all)
+    val inc = JobRunner.runIncremental(spark, spec(src, root), s"$root/out", "inc1")
+    assert(inc.ledger.listed === 0)
+  }
+
+  test("source root with a space and a '%': ledger and manifest hold decoded paths") {
+    // the stream's `path` column is decoded (a b%x) while
+    // _metadata.file_path is encoded (a%20b%25x); neither may be decoded twice
+    val root = Files.createTempDirectory("graft_stream_space").toString
+    val src = s"$root/a b%x/src"
+    HourlyFixture.write(spark, src)
+    val good = parquetFiles(s"$src/upgrade=0/state=AK")
+    val corrupt = s"$src/upgrade=0/state=AK/zz-corrupt.parquet"
+    Files.write(Paths.get(corrupt), Array[Byte](1, 2, 3, 4, 5))
+    val results = JobRunner.runStream(spark, spec(src, root), s"$root/out",
+      s"$root/ckpt", maxFilesPerTrigger = 3)
+    assert(results.flatMap(_.ledger.discrepancies) === Seq(corrupt))
+    assert(results.map(_.ledger.processed).sum === HourlyFixture.Buildings)
+    assert(JobRunner.processedSoFar(spark, s"$root/out", spec(src, root)) === good)
+
+    val res = JobRunner.run(spark, spec(src, root), s"$root/job", "run1")
+    assert(HourlyFixture.rows(stored(spark, results)) ===
+      HourlyFixture.rows(spark.read.parquet(res.dataOut)))
+  }
+
+  test("no file under streaming/ runs the ETL transform itself") {
+    val root = new File("src/main/scala/graft/streaming")
+    assert(root.isDirectory, root.getAbsolutePath)
+    val offending = for {
+      f <- root.listFiles.toSeq if f.getName.endsWith(".scala")
+      (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      c = code.split("//", 2).head
+      if c.contains("HourlyAggregate(") || c.contains("FileLocalAggregate(")
+    } yield s"${f.getPath}:${i + 1}: $code"
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 }
 
@@ -105,43 +197,58 @@ class HoppingWindowSpec extends SparkSpec {
   }
 }
 
+/** Local disk under `failfs://` whose first create of batch 2's manifest
+  * throws, once armed: the batch has stored its rows, its manifest is not
+  * written and the stream has not committed it. */
+class FailOnceFileSystem extends SchemeLocalFileSystem {
+  override protected def scheme: String = "failfs"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    if (f.toUri.getPath.contains("/batch-2/manifest/") && FailOnceFileSystem.armed.getAndSet(false))
+      throw new java.io.IOException(s"injected failure creating $f")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FailOnceFileSystem {
+  val armed = new AtomicBoolean(false)
+}
+
 class StreamingParquetSinkSpec extends SparkSpec {
+  import EtlStream._
 
   test("restart after a failure in batch 2 equals a clean run") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.failfs.impl", classOf[FailOnceFileSystem].getName)
+    hc.set("fs.failfs.impl.disable.cache", "true")
     val root = Files.createTempDirectory("graft_psink").toString
     val src = s"$root/src"
-    val schema = HourlyFixture.write(spark, src)
-    StreamingHourly.run(spark, src, schema, s"$root/clean", s"$root/clean_ckpt",
-      maxFilesPerTrigger = 2)
+    HourlyFixture.write(spark, src)
+    val clean = JobRunner.runStream(spark, spec(src, root), s"$root/clean",
+      s"$root/clean_ckpt", maxFilesPerTrigger = 2)
 
-    // the first attempt of batch 2 stores its rows, then throws before
-    // Spark commits the batch; the restart replays batch 2 from the
-    // checkpoint and goes on to batch 3
-    var failed = false
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(src)
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        StreamingHourly.processBatch(b, id, s"$root/out")
-        if (id == 2 && !failed) {
-          failed = true
-          throw new IllegalStateException("injected failure in batch 2")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    intercept[StreamingQueryException](q.awaitTermination())
-    assert(failed)
-    assert(BatchStore.ids(spark, s"$root/out", "batch_id").sorted === Seq(0L, 1L, 2L))
-    StreamingHourly.run(spark, src, schema, s"$root/out", s"$root/ckpt",
+    // the first attempt of batch 2 stores its rows, then fails on its
+    // manifest before Spark commits the batch; the restart replays batch 2
+    // from the checkpoint and goes on to batch 3
+    val out = s"failfs://local$root/out"
+    FailOnceFileSystem.armed.set(true)
+    intercept[StreamingQueryException](JobRunner.runStream(spark, spec(src, root), out,
+      s"$root/ckpt", maxFilesPerTrigger = 2))
+    assert(!FailOnceFileSystem.armed.get)
+    assert(Files.isDirectory(Paths.get(s"$root/out/batch-2/data")))
+    val restart = JobRunner.runStream(spark, spec(src, root), out, s"$root/ckpt",
       maxFilesPerTrigger = 2)
+    assert(restart.map(_.dataOut) === Seq(2, 3).map(i => s"$out/batch-$i/data/rel/2024/AK"))
 
-    val restarted = HourlyFixture.rows(spark.read.parquet(s"$root/out"))
-    assert(restarted === HourlyFixture.rows(spark.read.parquet(s"$root/clean")))
+    val restarted = HourlyFixture.rows(
+      storedAt(spark, (0 to 3).map(i => s"$out/batch-$i/data/rel/2024/AK")))
+    assert(restarted === HourlyFixture.rows(stored(spark, clean)))
+    val res = JobRunner.run(spark, spec(src, root), s"$root/job", "run1")
+    assert(restarted === HourlyFixture.rows(spark.read.parquet(res.dataOut)))
     assert(restarted.map(r => (r.getLong(1), r.getTimestamp(0))).distinct.length ===
       restarted.length)
+    assert(JobRunner.processedSoFar(spark, out, spec(src, root)) ===
+      parquetFiles(s"$src/upgrade=0/state=AK"))
   }
 }
 
