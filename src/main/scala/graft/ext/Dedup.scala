@@ -119,10 +119,12 @@ object Dedup {
     * the materialization you want anyway: sketches are ~1% of the text size
     * and are consumed multiple times.
     *
-    * Lazy and UNPERSISTED: callers composing [[nearDupPairsFromSketch]]
-    * own the cache lifecycle. The convenience entry point
-    * ([[nearDupPairs]]) caches it, forces the (small) pair result, and
-    * unpersists — nothing outlives the call. */
+    * Lazy and unpinned: callers composing [[nearDupPairsFromSketch]]
+    * decide whether to pin it. The convenience entry points
+    * ([[nearDupPairs]], [[dedupNear]]) pin it with [[Materialize]] and
+    * pin the (small) pair result read from it; neither pin enters the
+    * session's cache, and the ContextCleaner reclaims both once they
+    * are unreachable. */
   def sketch(df: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame =
     df.select(col(idCol).as("id"),
@@ -131,15 +133,15 @@ object Dedup {
         graft.functions.HashFunctions.minhashSignature(col("shh"), p.numPerm), p))
 
   /** Near-dup pairs with exact Jaccard verification over shingle-hash sets:
-    * candidates from LSH banding, then joins back to the cached sketch
+    * candidates from LSH banding, then joins back to the pinned sketch
     * table and a single merge pass per pair
     * ([[graft.functions.JaccardSorted]]). Identical results to string-set
     * Jaccard up to 64-bit hash collisions (~2^-64 per shingle pair).
-    * EAGER: the (small) pair set returns checkpoint-backed and the sketch
-    * cache is released; lazy variant: [[nearDupPairsFromSketch]]. */
+    * EAGER: the (small) pair set returns checkpoint-backed; lazy variant:
+    * [[nearDupPairsFromSketch]]. */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame =
-    withCachedSketch(df, idCol, textCol, p)(nearDupPairsFromSketch(_, p))
+    withPinnedSketchCounted(df, idCol, textCol, p)(nearDupPairsFromSketch(_, p))._1
 
   /** Self face of the band join: (id_a, id_b, jaccard), id_a < id_b. */
   def nearDupPairsFromSketch(sketch: DataFrame,
@@ -183,26 +185,18 @@ object Dedup {
       p.threshold)
   }
 
-  /** Cache the sketch for the duration of `f`'s plan, force the (small) pair
-    * result into a lineage-truncated local checkpoint, then unpersist the
-    * sketch. The checkpointed pair blocks are reference-tracked by the
-    * ContextCleaner and reclaimed on GC — unlike `.cache()`, which pins
-    * blocks in the CacheManager for the session lifetime. */
-  private def withCachedSketch(df: DataFrame, idCol: String, textCol: String,
-      p: MinHashParams)(f: DataFrame => DataFrame): DataFrame =
-    withCachedSketchCounted(df, idCol, textCol, p)(f)._1
-
-  /** [[withCachedSketch]] plus the checkpointed relation's row count,
-    * observed ON the checkpoint materialization job itself (the CC-loop
-    * convergence trick) — r17, so [[dedupNear]] hands connectedComponents
-    * its knownEdges without a second action over the blocks. */
-  private def withCachedSketchCounted(df: DataFrame, idCol: String,
+  /** Pins the sketch, then pins `f`'s (small) result read from it, with
+    * that result's row count observed on its own checkpoint job, so
+    * [[dedupNear]] hands connectedComponents its knownEdges without a
+    * second action. The sketch pin runs under the session's AQE, so it
+    * keeps the coalesced width of its last stage; a `cache()` would keep
+    * the uncoalesced `spark.sql.shuffle.partitions` width instead
+    * (Spark does not let a cached plan change its output partitioning),
+    * and every read of it would be a stage of that many tasks. */
+  private def withPinnedSketchCounted(df: DataFrame, idCol: String,
       textCol: String, p: MinHashParams)(
-      f: DataFrame => DataFrame): (DataFrame, Long) = {
-    val sk = sketch(df, idCol, textCol, p).cache()
-    try Materialize.counted(f(sk), count(lit(1)))
-    finally sk.unpersist(false)
-  }
+      f: DataFrame => DataFrame): (DataFrame, Long) =
+    Materialize.counted(f(Materialize(sketch(df, idCol, textCol, p))), count(lit(1)))
 
   // ------------------------------------------------ shingle overlap
 
@@ -314,34 +308,30 @@ object Dedup {
     * rounds, shuffling only (id, label)).
     *
     * @param knownEdges the edge count when the CALLER already knows the
-    *   scale (e.g. it just materialized the pair table): skips the probe
-    *   `cache()+count()`, which at 100 TB can evict hotter blocks than
-    *   it saves. The driver path then collects in a single uncached
-    *   pass; the distributed path still caches for its own loop. */
+    *   scale (e.g. it just materialized the pair table): skips the probe,
+    *   a counted [[Materialize]] pin of the edges whose count rides its
+    *   own checkpoint job. The driver path then collects in a single
+    *   pass over `pairs`; the distributed path caches the edges for its
+    *   own loop. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
       driverEdgeLimit: Long = defaultDriverEdgeLimit,
       knownEdges: Option[Long] = None): DataFrame = {
     val spark = pairs.sparkSession
     val edges = pairs.select(col("id_a"), col("id_b"))
-    // regime probe: cache+count only when the caller didn't supply the
-    // scale — the count itself is cheap at any size, but an unconditional
-    // cache() materializes the full edge relation and can evict hotter
-    // blocks on a busy cluster (r15 verdict)
-    val (probed, nEdges, probeCached) = knownEdges match {
-      case Some(n) => (edges, n, false)
-      case None =>
-        val c = edges.cache()
-        (c, c.count(), true)
+    // regime probe: pin and count only when the caller didn't supply the
+    // scale — the pin materializes the full edge relation (r15 verdict)
+    val (probed, nEdges) = knownEdges match {
+      case Some(n) => (edges, n)
+      case None => Materialize.counted(edges, count(lit(1)))
     }
     if (nEdges <= driverEdgeLimit) {
       // packed collect: one long[] per partition, ids interleaved —
-      // a single pass, so no cache is needed on the knownEdges path
+      // a single pass, so no pin is needed on the knownEdges path
       val packed = probed.rdd.mapPartitions { it =>
         val b = new scala.collection.mutable.ArrayBuilder.ofLong
         it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
         Iterator.single(b.result())
       }.collect()
-      if (probeCached) probed.unpersist()
       val labels = unionFindPacked(packed)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id",
@@ -362,9 +352,10 @@ object Dedup {
         })
       return spark.createDataFrame(rows, schema)
     }
-    // the propagation loop re-reads the edge relation every round, so it
-    // is cached here even when the regime probe was skipped
-    val cachedPairs = if (probeCached) probed else edges.cache()
+    // the loop's edge pin reads the edge relation once per direction, so
+    // it is cached here when the probe did not pin it; the cache is lazy
+    // and fills under the loop's AQE-off conf below
+    val loopEdges = if (knownEdges.isEmpty) probed else edges.cache()
     // Loop tuning (round 13, SURVEY §6.12: CC was 30 of x0_linkage's
     // 35 s at the 100× set, and nearly all of it was per-round Spark
     // constants, not data):
@@ -390,11 +381,11 @@ object Dedup {
     val loopP = math.max(8L, math.min(shufOld.toLong, nEdges / 500000L))
     spark.conf.set(aqeKey, "false")
     spark.conf.set(shufKey, loopP.toString)
-    try distributedComponents(cachedPairs, maxIter)
+    try distributedComponents(loopEdges, maxIter)
     finally {
       spark.conf.set(aqeKey, aqeOld)
       spark.conf.set(shufKey, shufOld)
-      cachedPairs.unpersist(false)
+      loopEdges.unpersist(false)
     }
   }
 
@@ -613,21 +604,22 @@ object Dedup {
   /** Full near-dup dedup: keep the min-id representative of every near-dup
     * cluster, pass through everything unclustered.
     *
-    * Building the returned DataFrame launches Spark jobs: the cached
-    * sketch is read by the pair checkpoint, whose row count is observed on
-    * that same job, and [[connectedComponents]] then collects the pairs
-    * (or runs its distributed loop past `driverEdgeLimit`) — all inside
-    * this call, before any action on the result. */
+    * Building the returned DataFrame launches Spark jobs: the sketch is
+    * pinned, the pinned sketch is read by the pair checkpoint, whose row
+    * count is observed on that same job, and [[connectedComponents]] then
+    * collects the pairs (or runs its distributed loop past
+    * `driverEdgeLimit`) — all inside this call, before any action on the
+    * result. */
   def dedupNear(df: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame = {
     // r16: the pair relation is localCheckpoint-backed (eager,
     // lineage-truncated) and the scale is handed to connectedComponents
-    // as knownEdges — skipping its probe cache(). r17: the edge count now
+    // as knownEdges — skipping its probe pin. r17: the edge count now
     // rides the checkpoint materialization itself via observe() (one
     // action fewer — the separate pairs.count() job over the blocks is
     // gone; VERDICT r16 item 6).
     val (pairs, nEdges) =
-      withCachedSketchCounted(df, idCol, textCol, p)(nearDupPairsFromSketch(_, p))
+      withPinnedSketchCounted(df, idCol, textCol, p)(nearDupPairsFromSketch(_, p))
     val clusters = connectedComponents(pairs, knownEdges = Some(nEdges))
     val losers = clusters.filter(col("id") =!= col("cluster")).select(col("id"))
     df.join(losers.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")

@@ -109,7 +109,7 @@ object IncrementalDedup {
     * `p.threshold` Jaccard. ALL batch sketches join the index.
     *
     * Building the returned pair launches Spark jobs: the within-batch
-    * [[Dedup.dedupNear]] runs its sketch-cached pair checkpoint and its
+    * [[Dedup.dedupNear]] runs its sketch and pair pins and its
     * connected-components collect inside this call, before any action on
     * the result. */
   def addBatchNear(index: DataFrame, batch: DataFrame, idCol: String,

@@ -45,34 +45,47 @@ object Profile {
   /** What one phase did. `tasks` is the sum of `numTasks` over the
     * phase's completed stages; `spillBytes` is spill to disk; `compiles`
     * is how many generated classes Janino compiled (codegen cache misses,
-    * on the driver and in local executor threads alike). */
+    * on the driver and in local executor threads alike). `widestTasks`
+    * and `widestSite` are the task count and call site (the stage name)
+    * of the phase's widest completed stage, the first one to complete
+    * among equals: a stage far wider than its data shows here without a
+    * probe. */
   final case class Phase(wallS: Double, jobs: Int, stages: Int, tasks: Long,
       shuffleReadBytes: Long, shuffleReadRecords: Long,
       shuffleWriteBytes: Long, shuffleWriteRecords: Long,
-      spillBytes: Long, gcMs: Long, compiles: Long) {
-    def +(o: Phase): Phase = Phase(wallS + o.wallS, jobs + o.jobs,
-      stages + o.stages, tasks + o.tasks,
-      shuffleReadBytes + o.shuffleReadBytes, shuffleReadRecords + o.shuffleReadRecords,
-      shuffleWriteBytes + o.shuffleWriteBytes, shuffleWriteRecords + o.shuffleWriteRecords,
-      spillBytes + o.spillBytes, gcMs + o.gcMs, compiles + o.compiles)
+      spillBytes: Long, gcMs: Long, compiles: Long,
+      widestTasks: Int, widestSite: String) {
+    /** Field-wise sums; the widest stage is the wider one's, this one's on a tie. */
+    def +(o: Phase): Phase = {
+      val w = if (o.widestTasks > widestTasks) o else this
+      Phase(wallS + o.wallS, jobs + o.jobs,
+        stages + o.stages, tasks + o.tasks,
+        shuffleReadBytes + o.shuffleReadBytes, shuffleReadRecords + o.shuffleReadRecords,
+        shuffleWriteBytes + o.shuffleWriteBytes, shuffleWriteRecords + o.shuffleWriteRecords,
+        spillBytes + o.spillBytes, gcMs + o.gcMs, compiles + o.compiles,
+        w.widestTasks, w.widestSite)
+    }
 
     override def toString: String =
       f"$wallS%8.3f s  jobs $jobs%3d  stages $stages%3d  tasks $tasks%5d  " +
         f"shufR $shuffleReadBytes%11d B $shuffleReadRecords%9d rec  " +
         f"shufW $shuffleWriteBytes%11d B $shuffleWriteRecords%9d rec  " +
-        f"spill $spillBytes%d B  gc $gcMs%d ms  compiles $compiles%d"
+        f"spill $spillBytes%d B  gc $gcMs%d ms  compiles $compiles%d  " +
+        f"widest $widestTasks%d tasks @ $widestSite"
   }
 
   object Phase {
-    val zero: Phase = Phase(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+    val zero: Phase = Phase(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, "-")
 
-    /** Field-wise (upper) median. */
+    /** Field-wise (upper) median; the widest stage is the (upper) median
+      * phase's by `widestTasks`, count and call site together. */
     def median(ps: Seq[Phase]): Phase = {
       def m[T: Ordering](f: Phase => T): T = ps.map(f).sorted.apply(ps.size / 2)
+      val w = ps.sortBy(_.widestTasks).apply(ps.size / 2)
       Phase(m(_.wallS), m(_.jobs), m(_.stages), m(_.tasks),
         m(_.shuffleReadBytes), m(_.shuffleReadRecords),
         m(_.shuffleWriteBytes), m(_.shuffleWriteRecords), m(_.spillBytes), m(_.gcMs),
-        m(_.compiles))
+        m(_.compiles), w.widestTasks, w.widestSite)
     }
   }
 
@@ -105,7 +118,8 @@ object Profile {
         val r = m.shuffleReadMetrics
         val w = m.shuffleWriteMetrics
         acc += Phase(0, 0, 1, i.numTasks, r.totalBytesRead, r.recordsRead,
-          w.bytesWritten, w.recordsWritten, m.diskBytesSpilled, m.jvmGCTime, 0)
+          w.bytesWritten, w.recordsWritten, m.diskBytesSpilled, m.jvmGCTime, 0,
+          i.numTasks, i.name)
       }
     }
 

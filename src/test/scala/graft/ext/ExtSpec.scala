@@ -1,5 +1,7 @@
 package graft.ext
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{GraftBridge, GraftTestBridge}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -118,6 +120,42 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(survivors.contains(1L) && !survivors.contains(2L))
     assert(survivors.contains(4L) && survivors.contains(5L))
+  }
+
+  test("the sketch and pair pins leave nothing in the session cache") {
+    val p = Dedup.MinHashParams(numPerm = 64, bands = 32, shingleSize = 2, threshold = 0.5)
+    spark.catalog.clearCache()
+    assert(Dedup.dedupNear(docs, "doc_id", "text", p).count() === 3L)
+    assert(GraftTestBridge.cacheIsEmpty(spark))
+    assert(Dedup.nearDupPairs(docs, "doc_id", "text", p).count() >= 1L)
+    assert(GraftTestBridge.cacheIsEmpty(spark))
+  }
+
+  test("dedupNear reads its sketch at the coalesced width: no stage of shuffle.partitions tasks") {
+    // the sketch comes out of a shuffle, as in x0_pipeline; a cached
+    // sketch would keep that shuffle's uncoalesced width on every read
+    val key = "spark.sql.shuffle.partitions"
+    val width = 13
+    val p = Dedup.MinHashParams(numPerm = 64, bands = 32, shingleSize = 2, threshold = 0.5)
+    val sc = spark.sparkContext
+    val stages = scala.collection.mutable.ListBuffer.empty[(Int, String)]
+    val own = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        synchronized(stages += ((e.stageInfo.numTasks, e.stageInfo.name)))
+    }
+    val old = spark.conf.get(key)
+    spark.conf.set(key, width.toString)
+    GraftBridge.drainListeners(sc)
+    sc.addSparkListener(own)
+    try Dedup.dedupNear(docs.repartition($"doc_id"), "doc_id", "text", p)
+    finally {
+      GraftBridge.drainListeners(sc)
+      sc.removeSparkListener(own)
+      spark.conf.set(key, old)
+    }
+    val seen = own.synchronized(stages.toList)
+    assert(seen.nonEmpty)
+    assert(!seen.exists(_._1 == width), seen.mkString("\n"))
   }
 
   test("distributed components converge on long chains in O(log d) rounds") {

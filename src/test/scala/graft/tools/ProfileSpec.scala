@@ -54,6 +54,32 @@ class ProfileSpec extends SparkSpec {
       s"profile $total vs listener stages=$stages tasks=$tasks")
   }
 
+  test("each phase reports its widest stage's task count and call site") {
+    val stages = scala.collection.mutable.ListBuffer.empty[(Int, String)]
+    val own = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+        stages += ((e.stageInfo.numTasks, e.stageInfo.name))
+      }
+    }
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    GraftBridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(own)
+    val runs = try profile(Seq(B), runs = 2, out = lines += _)
+      finally {
+        GraftBridge.drainListeners(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(own)
+      }
+    val seen = own.synchronized(stages.toList)
+    val total = runs.map(r => r.build + r.exec).reduce(_ + _)
+    assert(total.widestTasks == seen.map(_._1).max, seen)
+    assert(seen.contains((total.widestTasks, total.widestSite)), s"$total vs $seen")
+    runs.foreach { r =>
+      assert(r.exec.widestTasks > 0 && r.exec.widestSite.contains(" at "), r)
+      assert(r.exec.widestTasks <= r.exec.tasks, r)
+    }
+    assert(lines.nonEmpty && lines.forall(_.contains("widest")), lines.mkString("\n"))
+  }
+
   test("building x36_line_dedup launches a job; building q01_scan_filter does not") {
     val runs = profile(Seq("x36_line_dedup", A), runs = 1)
     runs.filter(_.name == "x36_line_dedup").foreach(r => assert(r.build.jobs >= 1, r))
